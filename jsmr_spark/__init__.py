@@ -14,6 +14,7 @@ Layout:
     registry.py  query registry backing __spark_entry__.py
     queries/     the declared operator inventory (SURVEY.md §2.B)
     mr.py        JsMr-style MapReduce-compat API (SURVEY.md §2.A)
+    pyworker.py  Python worker daemon of get_spark sessions
     streaming/   Structured Streaming twins of the batch q_stream_* keys
 """
 

@@ -65,9 +65,15 @@ def job(
         num_mappers: input split count (JsMr's chunk-size knob, A2).
             Python map_fn runs one worker PER INPUT PARTITION, so a
             single-file input serializes the whole map phase through
-            one Python process no matter how many cores exist —
-            measured 3.7s -> 0.7s at sf0.1 by splitting to 8. Defaults
-            to the input's existing partitioning.
+            one Python process no matter how many cores exist. The
+            old "3.7s -> 0.7s at sf0.1 by splitting to 8" was measured
+            while every Python task also re-read ~0.25 s of zip
+            directories (see pyworker.py). On the pyworker daemon an
+            empty Python task costs ~56 ms of executor run time (256 ms
+            on the stock daemon; 4-vCPU host), and sf0.1 wordcount runs
+            0.46 s unsplit vs 0.60 s at 8 mappers: a split pays only
+            once a partition's map work outweighs that fixed cost.
+            Defaults to the input's existing partitioning.
     """
     if reduce_fn is None:
         reduce_fn = lambda key, values: [(key, list(values))]  # noqa: E731
@@ -79,7 +85,8 @@ def job(
     # Reducer count follows the INPUT's partitioning (classic MR sizing:
     # reducers ~ mappers), not the SQL shuffle conf — a tiny input on a
     # big session must not fan out to hundreds of near-empty Python
-    # reducer tasks (each one is a JVM<->Python worker round-trip).
+    # reducer tasks (each one is a JVM<->Python worker round-trip,
+    # ~56 ms of executor run time even when empty; see num_mappers).
     parts = num_reducers or max(2, pairs.getNumPartitions())
     if combine_fn is not None:
         grouped = pairs.reduceByKey(combine_fn, numPartitions=parts).mapValues(lambda v: [v])

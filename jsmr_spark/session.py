@@ -17,6 +17,17 @@ Required confs and why (SURVEY.md §7.1):
     rendering, matching DuckDB's naive-µs reading of the fixtures.
   * AQE on (default in 4.x, set explicitly) — runtime coalescing and
     skew-join handling; this is the 100 TB skew story (SURVEY.md §7.4).
+  * ``spark.python.daemon.module=jsmr_spark.pyworker`` — Python workers
+    fork from a daemon that stops CPython < 3.13 re-reading the whole
+    zip directory of pyspark.zip and the spark-core jar at every task
+    start (0.13-0.33 s per task; see pyworker.py).
+  * ``spark.executorEnv.PYTHONPATH=<dir holding jsmr_spark/>`` — so the
+    daemon imports whatever the driver's cwd.
+
+The last two are SparkContext-static: a driver-owned session
+(``ensure_engine_confs``) cannot set them and keeps the stock
+``pyspark.daemon``. Results are identical; only the per-task cost of
+Python stages (mr.py, Python UDFs) differs.
 """
 
 from __future__ import annotations
@@ -85,6 +96,10 @@ _LOCAL_SCAN_CONFS = {
 }
 
 
+# The directory holding jsmr_spark/ (see spark.executorEnv.PYTHONPATH).
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -111,6 +126,8 @@ def get_spark(app_name: str = "jsmr_spark", shuffle_partitions: int | None = Non
         # they only add empty tasks. See _LOCAL_SCAN_CONFS.
         .config("spark.sql.files.maxPartitionBytes", os.environ.get("SPARK_GRAFT_SPLIT", "128m"))
         .config("spark.sql.files.openCostInBytes", "1m")
+        .config("spark.python.daemon.module", "jsmr_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in RUNTIME_CONFS().items():
         builder = builder.config(k, v)

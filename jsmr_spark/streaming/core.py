@@ -30,10 +30,17 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from jsmr_spark.io import load_table
+from jsmr_spark.io import load_table, table_path
+
+# Scratch space one replay's checkpoints may take: offsets, commits and
+# state-store delta files, a few KB each but one per partition per store
+# per micro-batch, and tmpfs allocates whole pages. A whole replay,
+# staged chunks included, peaked at 2.5 MB of allocated blocks on sf0.01
+# and 7.1 MB on sf0.1 (the outer interval join, the largest).
+_CKPT_BYTES = 32 << 20
 
 
-def _replay_tmp_root() -> str:
+def _replay_tmp_root(need_bytes: int = _CKPT_BYTES) -> str:
     """Root for replay staging files and ephemeral checkpoints.
 
     Everything the replay harness writes is throwaway by construction
@@ -46,12 +53,18 @@ def _replay_tmp_root() -> str:
     micro-batch on ext4 for the outer interval join. A real deployment
     checkpoints to durable storage ON PURPOSE; this is placement of a
     simulation's scratch space, not an engine setting, and
-    $SPARK_GRAFT_STREAM_TMP overrides it."""
+    $SPARK_GRAFT_STREAM_TMP overrides it. A RAM-backed root with less
+    than ``need_bytes`` free is passed over for the standard tempdir, so
+    a full /dev/shm costs speed instead of an ENOSPC mid-replay."""
     env = os.environ.get("SPARK_GRAFT_STREAM_TMP")
     if env:
         return env
     shm = "/dev/shm"
-    if os.path.isdir(shm) and os.access(shm, os.W_OK):
+    if (
+        os.path.isdir(shm)
+        and os.access(shm, os.W_OK)
+        and shutil.disk_usage(shm).free >= need_bytes
+    ):
         return shm
     return tempfile.gettempdir()
 
@@ -69,7 +82,10 @@ def _stage_chunks(spark: SparkSession, sf_dir: str, n_chunks: int, late_tail: bo
     import pyarrow.compute as _pc
     import pyarrow.parquet as _pq
 
-    base = os.path.join(_replay_tmp_root(), f"jsmr_stream_{uuid.uuid4().hex[:8]}")
+    # Staged copy plus per-chunk split: about twice the events file at
+    # once; 4x leaves room for the wider staged schema.
+    need = 4 * os.path.getsize(table_path(sf_dir, "events")) + _CKPT_BYTES
+    base = os.path.join(_replay_tmp_root(need), f"jsmr_stream_{uuid.uuid4().hex[:8]}")
     src_dir = os.path.join(base, "src")
     os.makedirs(src_dir)
     n_main = n_chunks - 1 if late_tail else n_chunks

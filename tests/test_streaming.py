@@ -390,3 +390,40 @@ def test_replay_tmp_root_override(monkeypatch):
         else tempfile.gettempdir()
     )
     assert _replay_tmp_root() == expected
+
+
+def test_replay_tmp_root_falls_back_when_shm_is_full(monkeypatch):
+    """A RAM-backed root without room for a replay's staged chunks and
+    checkpoints is passed over for the standard tempdir; the
+    SPARK_GRAFT_STREAM_TMP override still wins regardless."""
+    import os
+    import tempfile
+    import types
+
+    import pytest
+
+    from jsmr_spark.streaming import core
+
+    if not (os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)):
+        pytest.skip("no writable /dev/shm")
+    free = {"bytes": 0}
+    asked = []
+
+    def disk_usage(path):
+        asked.append(path)
+        return types.SimpleNamespace(total=free["bytes"], used=0, free=free["bytes"])
+
+    monkeypatch.setattr(core.shutil, "disk_usage", disk_usage)
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_TMP", raising=False)
+    free["bytes"] = core._CKPT_BYTES - 1
+    assert core._replay_tmp_root() == tempfile.gettempdir()
+    assert asked == ["/dev/shm"]
+    free["bytes"] = core._CKPT_BYTES
+    assert core._replay_tmp_root() == "/dev/shm"
+    assert core._replay_tmp_root(core._CKPT_BYTES + 1) == tempfile.gettempdir()
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_TMP", "/tmp/jsmr_custom_root")
+    free["bytes"] = 0
+    asked.clear()
+    assert core._replay_tmp_root() == "/tmp/jsmr_custom_root"
+    assert asked == []
