@@ -579,54 +579,8 @@ def stream_python_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the manifests only, and the per-type aggregate is
     hash-checked against the batch truth — a lost part file, a
     double-committed batch, or rows leaking outside the manifest all
-    fail the hash. See jsmr_spark/pyds.py:TsvStreamSinkDataSource."""
-    import json
-    import os
-    import shutil
-    import uuid
+    fail the hash. See jsmr_spark/pyds.py:TsvStreamSinkDataSource and
+    jsmr_spark/streaming/core.py:run_python_sink_stream."""
+    from jsmr_spark.streaming.core import run_python_sink_stream
 
-    from jsmr_spark.pyds import register_stream_sink
-    from jsmr_spark.streaming.core import _replay_shuffle_clamp, _stage_chunks
-
-    register_stream_sink(spark)
-    base, src, n_rows = _stage_chunks(spark, sf_dir, n_chunks=4, late_tail=False)
-    out = os.path.join(base, "pysink")
-    ckpt = os.path.join(base, "ckpt")
-    try:
-        schema = spark.read.parquet(os.path.join(src, "chunk_000")).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "chunk_*"))
-            .select("event_id", "event_type", cents(F.col("value")).alias("vc"))
-        )
-        with _replay_shuffle_clamp(spark, n_rows):
-            q = (
-                stream.writeStream.format("jsmr_tsv_stream_sink")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.processAllAvailable()
-            q.stop()
-        files = []
-        for mf in sorted(os.listdir(out)):
-            if mf.startswith("_BATCH_"):
-                files += [
-                    os.path.join(out, m["file"])
-                    for m in json.load(open(os.path.join(out, mf)))
-                ]
-        back = (
-            spark.read.schema("event_id long, event_type string, vc long")
-            .option("sep", "\t")
-            .csv(files)
-        )
-        rows = (
-            back.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("vc").alias("sum_cents"))
-            .collect()
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, "event_type string, n bigint, sum_cents bigint")
+    return run_python_sink_stream(spark, sf_dir)

@@ -68,10 +68,11 @@ def RUNTIME_CONFS() -> dict[str, str]:
         "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
 
-# Applied alongside RUNTIME_CONFS when the session is driver-owned: a
-# vanilla session defaults to 200 shuffle partitions, which at bench
-# scale is pure task-scheduling overhead (on a real cluster this is
-# instead sized to ~2-3x total executor cores). Capped at 16 locally:
+# Applied alongside RUNTIME_CONFS by ensure_engine_confs, to get_spark
+# and driver-owned sessions alike: a vanilla session defaults to 200
+# shuffle partitions, which at bench scale is pure task-scheduling
+# overhead (on a real cluster this is instead sized to ~2-3x total
+# executor cores). Capped at 16 locally:
 # at fixture sizes the per-task scheduling cost dominates past ~16
 # tasks per exchange (measured: the 4 shuffle-heavy headline keys run
 # 12% faster at 16 than at 32; 8 is flat vs 16), while AQE coalescing
@@ -104,28 +105,20 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def get_spark(app_name: str = "jsmr_spark", shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "jsmr_spark") -> SparkSession:
     """Build (or fetch) a local SparkSession sized to this machine.
 
-    ``shuffle_partitions`` defaults to the core count: at local/bench
-    scale more partitions only add scheduling overhead; on a real
-    cluster this is tuned to ~2-3× total cores (SURVEY.md §7.4).
+    Shuffle partitions and scan split sizing come from
+    ``ensure_engine_confs`` (``_ADAPTIVE_CONFS``, ``_LOCAL_SCAN_CONFS``),
+    the same path a driver-owned session takes.
     """
     cpus = default_parallelism()
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # r13: fixture files are single-row-group parquet, so sub-file
-        # splits cannot parallelize the scan (row-group granularity) —
-        # they only add empty tasks. See _LOCAL_SCAN_CONFS.
-        .config("spark.sql.files.maxPartitionBytes", os.environ.get("SPARK_GRAFT_SPLIT", "128m"))
-        .config("spark.sql.files.openCostInBytes", "1m")
         .config("spark.python.daemon.module", "jsmr_spark.pyworker")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )

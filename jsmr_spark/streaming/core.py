@@ -2,17 +2,32 @@
 
 The batch keys in queries/streaming_batch.py define the semantics and
 are oracle-checked; this module runs the SAME transformations under
-MicroBatchExecution with a file source, so that watermarks, state
-stores, and late-data policy are exercised for real:
+MicroBatchExecution, so that watermarks, state stores, and late-data
+policy are exercised for real.
 
-  * events are staged to a temp directory as K ordered parquet chunk
-    files (a deterministic replay of the stream, one file per trigger
-    via maxFilesPerTrigger=1);
-  * stateful aggregations run with withWatermark(); in append mode a
-    window only emits once the watermark passes its end;
-  * run_watermark_late_replay() appends a final chunk of deliberately
-    old rows — the state store drops them, which is the watermark
-    late-data contract (not expressible in batch; rows-only key).
+Every runner goes through one replay lifecycle, ``_replay``:
+
+  * one scratch root (``_replay_tmp_root``) holds everything the
+    replay writes: staged input, checkpoints, sink output;
+  * events are staged there as K ordered parquet chunk files, a
+    deterministic replay of the stream (optionally with a late tail of
+    the oldest rows, or with every chunk delivered twice);
+  * ``spark.sql.shuffle.partitions`` is clamped to the staged input and
+    ``spark.sql.streaming.checkpointLocation`` points into the root;
+  * ``source()`` streams the chunks one file per trigger, and ``run()``
+    starts a query into a memory, foreachBatch or custom-format sink,
+    drains it and stops it;
+  * on exit, on success and on error alike, the memory sinks' temp
+    views are dropped, both confs restored and the root deleted.
+
+A runner is only its transform, its sink and its result shape.
+Stateful aggregations run with withWatermark(); in append mode a window
+only emits once the watermark passes its end. run_watermark_late_replay()
+appends a final chunk of deliberately old rows — the state store drops
+them, which is the watermark late-data contract (not expressible in
+batch; rows-only key). Per-batch progress (durations, state rows) is
+not collected here: any StreamingQueryListener on the session sees
+every replay's queries (perfbench/tracing.py registers one).
 
 At production scale the file source becomes Kafka and the memory sink
 becomes a parquet/Delta sink — the query graph is unchanged. State
@@ -22,14 +37,19 @@ length.
 
 from __future__ import annotations
 
+import contextlib
+import glob
 import os
 import shutil
 import tempfile
+import time
 import uuid
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from jsmr_spark.compat import cents
 from jsmr_spark.io import load_table, table_path
 
 # Scratch space one replay's checkpoints may take: offsets, commits and
@@ -39,12 +59,15 @@ from jsmr_spark.io import load_table, table_path
 # and 7.1 MB on sf0.1 (the outer interval join, the largest).
 _CKPT_BYTES = 32 << 20
 
+_PARTITIONS = "spark.sql.shuffle.partitions"
+_CHECKPOINTS = "spark.sql.streaming.checkpointLocation"
+
 
 def _replay_tmp_root(need_bytes: int = _CKPT_BYTES) -> str:
     """Root for replay staging files and ephemeral checkpoints.
 
     Everything the replay harness writes is throwaway by construction
-    (each runner rmtree's it in a finally), so it defaults to the
+    (``_replay`` deletes its root on exit), so it defaults to the
     RAM-backed tmpdir when one exists: the HDFS-backed state store
     commits one fsync'd delta file PER PARTITION PER STORE PER
     MICRO-BATCH (a stream-stream join carries 4 stores/partition), and
@@ -69,183 +92,228 @@ def _replay_tmp_root(need_bytes: int = _CKPT_BYTES) -> str:
     return tempfile.gettempdir()
 
 
-def _stage_chunks(spark: SparkSession, sf_dir: str, n_chunks: int, late_tail: bool) -> tuple[str, str, int]:
-    """Write events as ordered parquet chunks simulating arrival order.
+class _Replay:
+    """What a runner holds inside ``with _replay(...) as rp``: the
+    scratch ``root``, the staged chunks (``src``, their ``schema`` and
+    ``n_rows``), a file source over them and a query runner."""
 
-    Chunks 0..n-2 cover the stream in ascending ts order. If late_tail,
-    the final chunk replays the OLDEST rows again (severely late data);
-    otherwise it is just the last time-slice.
-    """
-    import glob as _glob
-    import time as _time
+    def __init__(self, spark: SparkSession, root: str):
+        self.spark = spark
+        self.root = root
+        self.src = os.path.join(root, "src")
+        self.schema = None
+        self.n_rows: int | None = None
+        self.views: list[str] = []
 
-    import pyarrow.compute as _pc
-    import pyarrow.parquet as _pq
-
-    # Staged copy plus per-chunk split: about twice the events file at
-    # once; 4x leaves room for the wider staged schema.
-    need = 4 * os.path.getsize(table_path(sf_dir, "events")) + _CKPT_BYTES
-    base = os.path.join(_replay_tmp_root(need), f"jsmr_stream_{uuid.uuid4().hex[:8]}")
-    src_dir = os.path.join(base, "src")
-    os.makedirs(src_dir)
-    n_main = n_chunks - 1 if late_tail else n_chunks
-    # ONE Spark job (r12, guide §1.2 step 1): the old form ran
-    # window+cache+count plus one filtered write job PER CHUNK (~9 jobs
-    # per streaming key, the dominant fixed cost of the replay tier).
-    # Chunk assignment is the same single-partition ntile window (the
-    # replay is a bounded local harness by construction); the sorted
-    # 1-partition write preserves rn order, and the per-chunk split is
-    # driver-local pyarrow over that one small file — byte-identical
-    # rows and ntile boundaries, zero extra Spark jobs. Arrival order is
-    # pinned with EXPLICIT strictly-increasing mtimes (the file source
-    # orders by modification time), which the sequential writes only
-    # guaranteed implicitly.
-    w = Window.orderBy("ts", "event_id")
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .withColumn("rn", F.row_number().over(w))
-        .withColumn("chunk", F.ntile(n_main).over(w) - 1)
-    )
-    stage = os.path.join(base, "stage")
-    # TIMESTAMP_MICROS so the pyarrow round trip is exact: the INT96
-    # default reads back as ns and would re-write as TIMESTAMP(NANOS),
-    # which the nanosAsLong session conf then scans as bigint.
-    old_tt = spark.conf.get("spark.sql.parquet.outputTimestampType")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try:
-        ev.coalesce(1).write.parquet(stage)
-    finally:
-        spark.conf.set("spark.sql.parquet.outputTimestampType", old_tt)
-    part = _glob.glob(os.path.join(stage, "part-*.parquet"))
-    if len(part) != 1:
-        # coalesce(1) guarantees a single part file; anything else would
-        # silently stage a subset of rows below. Not an assert: those are
-        # stripped under `python -O` (ADVICE r12).
-        raise RuntimeError(f"expected exactly one staged part file, got {part}")
-    tbl = _pq.read_table(part[0])
-    n_rows = tbl.num_rows
-    cols = ["event_id", "ts", "user_id", "event_type", "value"]
-    t0 = _time.time() - 2 * (n_chunks + 2)
-    for i in range(n_main):
-        p = os.path.join(src_dir, f"chunk_{i:03d}")
-        _pq.write_table(tbl.filter(_pc.equal(tbl["chunk"], i)).select(cols), p)
-        os.utime(p, (t0 + 2 * i, t0 + 2 * i))
-    if late_tail:
-        # Replay the oldest 50 rows after the watermark has advanced far
-        # beyond them -> guaranteed drop.
-        p = os.path.join(src_dir, f"chunk_{n_main:03d}")
-        _pq.write_table(
-            tbl.filter(_pc.less_equal(tbl["rn"], 50)).select(cols), p
+    def source(self) -> DataFrame:
+        """The staged chunks as a file stream, one chunk per micro-batch
+        in arrival (mtime) order."""
+        return (
+            self.spark.readStream.schema(self.schema)
+            .option("maxFilesPerTrigger", 1)
+            .option("latestFirst", "false")
+            .parquet(os.path.join(self.src, "chunk_*"))
         )
-        os.utime(p, (t0 + 2 * n_main, t0 + 2 * n_main))
-    shutil.rmtree(stage, ignore_errors=True)
-    return base, src_dir, n_rows
+
+    def run(
+        self,
+        df: DataFrame,
+        mode: str = "append",
+        sink=None,
+        until_rows: int | None = None,
+        **options,
+    ) -> DataFrame | None:
+        """Start ``df`` into a sink, drain it and stop it.
+
+        ``sink`` is None for a memory sink, whose rows come back as a
+        DataFrame that stays valid after the replay drops the sink's
+        temp view; a function for foreachBatch; or a format name, with
+        ``options``. A foreachBatch or format sink checkpoints at the
+        replay's one ``ckpt`` directory, so starting it again resumes
+        where the previous incarnation stopped (the restart and
+        exactly-once runners rely on this). A memory sink cannot resume;
+        it checkpoints under the replay's conf root.
+
+        A bounded source runs with availableNow and is awaited to its
+        own termination, which re-raises a sink failure. An unbounded
+        source passes ``until_rows`` and runs on the default trigger
+        until its driver-local recentProgress counts that many input
+        rows; only then does a Spark job confirm that the memory sink's
+        ``n`` column sums to it. recentProgress entries are appended
+        after a batch's sink write commits, and both unbounded sources
+        emit a sequential counter, so the gate costs no Spark job per
+        poll (r13: a confirming collect every 0.2 s competed with the
+        micro-batches it waited on)."""
+        w = df.writeStream.outputMode(mode)
+        if sink is None:
+            name = f"replay_{uuid.uuid4().hex[:8]}"
+            self.views.append(name)
+            w = w.format("memory").queryName(name)
+        else:
+            w = w.foreachBatch(sink) if callable(sink) else w.format(sink).options(**options)
+            w = w.option("checkpointLocation", os.path.join(self.root, "ckpt"))
+        if until_rows is None:
+            w = w.trigger(availableNow=True)
+        q = w.start()
+        try:
+            if until_rows is None:
+                q.awaitTermination()
+            deadline = time.time() + 120
+            while until_rows is not None and (
+                sum(p.numInputRows for p in q.recentProgress) < until_rows
+                or self.spark.table(name).agg(F.sum("n")).collect()[0][0] != until_rows
+            ):
+                if time.time() > deadline:
+                    raise TimeoutError(f"stream did not reach {until_rows} rows in 120 s")
+                time.sleep(0.05)
+        finally:
+            q.stop()
+        return None if sink else self.spark.table(name)
 
 
-class _replay_shuffle_clamp:
-    """Clamp spark.sql.shuffle.partitions for the duration of a replay.
+@contextlib.contextmanager
+def _replay(
+    spark: SparkSession,
+    sf_dir: str | None = None,
+    n_chunks: int = 0,
+    late_tail: bool = False,
+    redeliver: bool = False,
+):
+    """The replay lifecycle every runner shares (see the module docstring).
 
-    AQE never applies to streaming queries, so every stateful operator
+    With ``sf_dir``, events are staged as ``n_chunks`` parquet chunks
+    simulating arrival order: chunks 0..n-2 cover the stream in
+    ascending ts order; with ``late_tail`` the final chunk replays the
+    OLDEST rows again (severely late data), otherwise it is just the
+    last time-slice; with ``redeliver`` every chunk is delivered twice
+    (at-least-once), the copy adjacent to its original. Without
+    ``sf_dir`` (the unbounded sources) nothing is staged.
+
+    ``spark.sql.shuffle.partitions`` is clamped for the replay: AQE
+    never applies to streaming queries, so every stateful operator
     materializes exactly `shuffle.partitions` state-store instances PER
     MICRO-BATCH. At replay scale (a handful of chunks, thousands of
     rows) the session's batch-sized setting is pure overhead; a real
     deployment sizes this once per stream at first start (the state
-    partition count is then pinned by the checkpoint).
-
-    INPUT-AWARE since round 6 (VERDICT r5 #7): a fixed clamp of 8 also
-    capped the number of parallel Python workers for the stateful
-    pandas lane, so the 10x probe saw wall ~ rows/8 instead of
-    rows/cores. When the caller knows the staged row count, partitions
-    scale ~rows/20k (bounded 4..32; r12 lowered the floor 8 -> 4: every
+    partition count is then pinned by the checkpoint). INPUT-AWARE since
+    round 6 (VERDICT r5 #7): a fixed clamp of 8 also capped the number
+    of parallel Python workers for the stateful pandas lane, so the 10x
+    probe saw wall ~ rows/8 instead of rows/cores. Partitions scale
+    ~rows/20k (bounded 4..32; r12 lowered the floor 8 -> 4: every
     stateful operator commits one state-store delta file PER PARTITION
     PER MICRO-BATCH, so the floor is pure per-batch commit overhead at
-    fixture scale, while the probe scales — 1M rows still sizes to 32,
-    the r6 input-aware fix unchanged) — exactly the once-per-stream
-    sizing a real deployment does."""
+    fixture scale, while the probe scales — 1M rows still sizes to 32).
 
-    def __init__(self, spark: SparkSession, n_rows: int | None = None):
-        self.spark = spark
-        self.n = "4" if n_rows is None else str(min(32, max(4, n_rows // 20_000)))
+    ``spark.sql.streaming.checkpointLocation`` points into the root
+    (r13): a memory-sink query otherwise checkpoints to a temp dir under
+    java.io.tmpdir, which on a disk-backed /tmp pays the state store's
+    per-partition-per-store fsync chain every micro-batch (see
+    _replay_tmp_root)."""
+    need = _CKPT_BYTES
+    if sf_dir is not None:
+        # Staged copy plus per-chunk split: about twice the events file
+        # at once; 4x leaves room for the wider staged schema.
+        need += 4 * os.path.getsize(table_path(sf_dir, "events"))
+    root = os.path.join(_replay_tmp_root(need), f"jsmr_stream_{uuid.uuid4().hex[:8]}")
+    rp = _Replay(spark, root)
+    old = {k: spark.conf.get(k, None) for k in (_PARTITIONS, _CHECKPOINTS)}
+    try:
+        if sf_dir is not None:
+            import pyarrow.compute as pc
+            import pyarrow.parquet as pq
 
-    def __enter__(self):
-        self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.n)
-        # Ephemeral checkpoint root for the replay's queries (r13): a
-        # memory-sink query otherwise checkpoints to a temp dir under
-        # java.io.tmpdir, which on a disk-backed /tmp pays the state
-        # store's per-partition-per-store fsync chain every micro-batch
-        # (see _replay_tmp_root). Runners that pass an explicit
-        # checkpointLocation option (restart/CDC — their checkpoints
-        # must live with the staged chunks) override this conf, which
-        # is exactly Spark's precedence. Deleted on exit; queries
-        # started inside the clamp are stopped inside it.
-        self.ckpt = os.path.join(
-            _replay_tmp_root(), f"jsmr_ckpt_{uuid.uuid4().hex[:8]}"
-        )
-        self.old_ckpt = self.spark.conf.get(
-            "spark.sql.streaming.checkpointLocation", None
-        )
-        self.spark.conf.set("spark.sql.streaming.checkpointLocation", self.ckpt)
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
-        if self.old_ckpt is None:
-            self.spark.conf.unset("spark.sql.streaming.checkpointLocation")
-        else:
-            self.spark.conf.set(
-                "spark.sql.streaming.checkpointLocation", self.old_ckpt
+            os.makedirs(rp.src)
+            n_main = n_chunks - 1 if late_tail else n_chunks
+            # ONE Spark job (r12, guide §1.2 step 1): the old form ran
+            # window+cache+count plus one filtered write job PER CHUNK
+            # (~9 jobs per streaming key, the dominant fixed cost of the
+            # replay tier). Chunk assignment is the same single-partition
+            # ntile window (the replay is a bounded local harness by
+            # construction); the sorted 1-partition write preserves rn
+            # order, and the per-chunk split is driver-local pyarrow over
+            # that one small file — byte-identical rows and ntile
+            # boundaries, zero extra Spark jobs. Arrival order is pinned
+            # with EXPLICIT strictly-increasing mtimes (the file source
+            # orders by modification time), which the sequential writes
+            # only guaranteed implicitly.
+            cols = ["event_id", "ts", "user_id", "event_type", "value"]
+            w = Window.orderBy("ts", "event_id")
+            ev = (
+                load_table(spark, sf_dir, "events")
+                .select(*cols)
+                .withColumn("rn", F.row_number().over(w))
+                .withColumn("chunk", F.ntile(n_main).over(w) - 1)
             )
-        shutil.rmtree(self.ckpt, ignore_errors=True)
-
-
-def _run_stream(spark: SparkSession, src_dir: str, transform, query_name: str, n_rows: int | None = None) -> DataFrame:
-    """Run a file-source stream through `transform` into a memory sink,
-    one staged chunk per micro-batch, and return the final table."""
-    schema = spark.read.parquet(os.path.join(src_dir, "chunk_000")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(os.path.join(src_dir, "chunk_*"))
-    )
-    out = transform(stream)
-    with _replay_shuffle_clamp(spark, n_rows):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    return spark.table(query_name)
+            stage = os.path.join(rp.root, "stage")
+            # TIMESTAMP_MICROS so the pyarrow round trip is exact: the
+            # INT96 default reads back as ns and would re-write as
+            # TIMESTAMP(NANOS), which the nanosAsLong session conf then
+            # scans as bigint.
+            old_tt = spark.conf.get("spark.sql.parquet.outputTimestampType")
+            spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+            try:
+                ev.coalesce(1).write.parquet(stage)
+            finally:
+                spark.conf.set("spark.sql.parquet.outputTimestampType", old_tt)
+            part = glob.glob(os.path.join(stage, "part-*.parquet"))
+            if len(part) != 1:
+                # coalesce(1) guarantees a single part file; anything
+                # else would silently stage a subset of rows below. Not
+                # an assert: those are stripped under `python -O`
+                # (ADVICE r12).
+                raise RuntimeError(f"expected exactly one staged part file, got {part}")
+            tbl = pq.read_table(part[0])
+            rp.n_rows = tbl.num_rows
+            chunks = [tbl.filter(pc.equal(tbl["chunk"], i)) for i in range(n_main)]
+            if late_tail:
+                # Replay the oldest 50 rows after the watermark has
+                # advanced far beyond them -> guaranteed drop.
+                chunks.append(tbl.filter(pc.less_equal(tbl["rn"], 50)))
+            t0 = time.time() - 2 * (n_chunks + 2)
+            for i, chunk in enumerate(chunks):
+                p = os.path.join(rp.src, f"chunk_{i:03d}")
+                pq.write_table(chunk.select(cols), p)
+                os.utime(p, (t0 + 2 * i, t0 + 2 * i))
+                if redeliver:
+                    # The copy's mtime (+1 s, between chunk i at +0 and
+                    # chunk i+1 at +2 s) pins it ADJACENT to its original
+                    # in the file source's arrival order.
+                    shutil.copy2(p, p + "_redeliver")
+                    os.utime(p + "_redeliver", (t0 + 2 * i + 1, t0 + 2 * i + 1))
+            shutil.rmtree(stage, ignore_errors=True)
+            rp.schema = spark.read.parquet(os.path.join(rp.src, "chunk_000")).schema
+        n_parts = 4 if rp.n_rows is None else min(32, max(4, rp.n_rows // 20_000))
+        spark.conf.set(_PARTITIONS, str(n_parts))
+        spark.conf.set(_CHECKPOINTS, os.path.join(rp.root, "queries"))
+        yield rp
+    finally:
+        for name in rp.views:
+            spark.catalog.dropTempView(name)
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+        shutil.rmtree(rp.root, ignore_errors=True)
 
 
 def run_tumbling_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_stream_tumbling (append mode, watermark-gated
     emission). With a closed input, emitted windows = batch windows for
     every window whose end precedes the final watermark."""
-    base, src, n_rows = _stage_chunks(spark, sf_dir, n_chunks=8, late_tail=False)
-    try:
-        def transform(stream: DataFrame) -> DataFrame:
-            return (
-                stream.withWatermark("ts", "10 minutes")
-                .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .select(
-                    F.col("w.start").alias("window_start"),
-                    F.col("w.end").alias("window_end"),
-                    "event_type",
-                    "n",
-                )
+    with _replay(spark, sf_dir, n_chunks=8) as rp:
+        return rp.run(
+            rp.source()
+            .withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select(
+                F.col("w.start").alias("window_start"),
+                F.col("w.end").alias("window_end"),
+                "event_type",
+                "n",
             )
-
-        name = f"tumbling_{uuid.uuid4().hex[:8]}"
-        return _run_stream(spark, src, transform, name, n_rows)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        )
 
 
 def run_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -253,51 +321,31 @@ def run_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     30 minutes under a watermark — each event enters TWO window states,
     so this exercises multi-window state fan-out (state rows = 2x keys,
     still watermark-bounded) that the tumbling replay does not."""
-    base, src, n_rows = _stage_chunks(spark, sf_dir, n_chunks=8, late_tail=False)
-    try:
-        def transform(stream: DataFrame) -> DataFrame:
-            return (
-                stream.withWatermark("ts", "10 minutes")
-                .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .select(
-                    F.col("w.start").alias("window_start"),
-                    F.col("w.end").alias("window_end"),
-                    "event_type",
-                    "n",
-                )
+    with _replay(spark, sf_dir, n_chunks=8) as rp:
+        return rp.run(
+            rp.source()
+            .withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select(
+                F.col("w.start").alias("window_start"),
+                F.col("w.end").alias("window_end"),
+                "event_type",
+                "n",
             )
-
-        name = f"sliding_{uuid.uuid4().hex[:8]}"
-        return _run_stream(spark, src, transform, name, n_rows)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        )
 
 
 def run_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_stream_dedup: withWatermark + dropDuplicates
     over a replay where every chunk is delivered twice (at-least-once)."""
-    base, src, n_rows = _stage_chunks(spark, sf_dir, n_chunks=4, late_tail=False)
-    try:
-        # duplicate each chunk to simulate redelivery; the explicit
-        # mtime (+1s, between chunk i at +0 and chunk i+1 at +2s) pins
-        # the redelivered copy ADJACENT to its original in the file
-        # source's arrival order.
-        for d in sorted(os.listdir(src)):
-            sp, dp = os.path.join(src, d), os.path.join(src, d + "_redeliver")
-            shutil.copy2(sp, dp)
-            mt = os.stat(sp).st_mtime + 1
-            os.utime(dp, (mt, mt))
-
-        def transform(stream: DataFrame) -> DataFrame:
-            return stream.withWatermark("ts", "1 hour").dropDuplicates(["event_id"]).select(
-                "event_id", "user_id", "event_type", "ts"
-            )
-
-        name = f"dedup_{uuid.uuid4().hex[:8]}"
-        return _run_stream(spark, src, transform, name, n_rows)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    with _replay(spark, sf_dir, n_chunks=4, redeliver=True) as rp:
+        return rp.run(
+            rp.source()
+            .withWatermark("ts", "1 hour")
+            .dropDuplicates(["event_id"])
+            .select("event_id", "user_id", "event_type", "ts")
+        )
 
 
 def run_dedup_within_wm_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -315,26 +363,13 @@ def run_dedup_within_wm_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     older than the watermark (dropped as late) — so the closed-input
     output is EXACTLY the distinct original rows, fully hash-checkable,
     while state stays bounded by the delay instead of the key space."""
-    base, src, n_rows = _stage_chunks(spark, sf_dir, n_chunks=4, late_tail=False)
-    try:
-        # redelivered copy adjacent in arrival order (see run_dedup_stream)
-        for d in sorted(os.listdir(src)):
-            sp, dp = os.path.join(src, d), os.path.join(src, d + "_redeliver")
-            shutil.copy2(sp, dp)
-            mt = os.stat(sp).st_mtime + 1
-            os.utime(dp, (mt, mt))
-
-        def transform(stream: DataFrame) -> DataFrame:
-            return (
-                stream.withWatermark("ts", "1 hour")
-                .dropDuplicatesWithinWatermark(["event_id"])
-                .select("event_id", "user_id", "event_type", "ts")
-            )
-
-        name = f"dedupwm_{uuid.uuid4().hex[:8]}"
-        return _run_stream(spark, src, transform, name, n_rows)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    with _replay(spark, sf_dir, n_chunks=4, redeliver=True) as rp:
+        return rp.run(
+            rp.source()
+            .withWatermark("ts", "1 hour")
+            .dropDuplicatesWithinWatermark(["event_id"])
+            .select("event_id", "user_id", "event_type", "ts")
+        )
 
 
 def run_watermark_late_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -349,48 +384,36 @@ def run_watermark_late_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk arrives regardless of how finely the prefix is sliced — while
     keeping the per-micro-batch planning/state cost off the driver's
     correctness-sweep budget."""
-    base, src, n_rows = _stage_chunks(spark, sf_dir, n_chunks=5, late_tail=True)
-    try:
-        def transform(stream: DataFrame) -> DataFrame:
-            return (
-                stream.withWatermark("ts", "10 minutes")
-                .groupBy(F.window("ts", "1 hour").alias("w"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .select(
-                    F.col("w.start").alias("window_start"),
-                    F.col("w.end").alias("window_end"),
-                    "n",
-                )
+    with _replay(spark, sf_dir, n_chunks=5, late_tail=True) as rp:
+        return rp.run(
+            rp.source()
+            .withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour").alias("w"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select(
+                F.col("w.start").alias("window_start"),
+                F.col("w.end").alias("window_end"),
+                "n",
             )
-
-        name = f"late_{uuid.uuid4().hex[:8]}"
-        return _run_stream(spark, src, transform, name, n_rows)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        )
 
 
 def run_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_stream_session: session_window + watermark in
     append mode — sessions emit once the watermark passes their close."""
-    base, src, n_rows = _stage_chunks(spark, sf_dir, n_chunks=8, late_tail=False)
-    try:
-        def transform(stream: DataFrame) -> DataFrame:
-            return (
-                stream.withWatermark("ts", "30 minutes")
-                .groupBy(F.session_window("ts", "10 minutes").alias("w"), "user_id")
-                .agg(F.count(F.lit(1)).alias("n_events"))
-                .select(
-                    "user_id",
-                    F.col("w.start").alias("session_start"),
-                    F.col("w.end").alias("session_end"),
-                    "n_events",
-                )
+    with _replay(spark, sf_dir, n_chunks=8) as rp:
+        return rp.run(
+            rp.source()
+            .withWatermark("ts", "30 minutes")
+            .groupBy(F.session_window("ts", "10 minutes").alias("w"), "user_id")
+            .agg(F.count(F.lit(1)).alias("n_events"))
+            .select(
+                "user_id",
+                F.col("w.start").alias("session_start"),
+                F.col("w.end").alias("session_end"),
+                "n_events",
             )
-
-        name = f"session_{uuid.uuid4().hex[:8]}"
-        return _run_stream(spark, src, transform, name, n_rows)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        )
 
 
 def _stateful_counter_transform(stream: DataFrame) -> DataFrame:
@@ -432,31 +455,8 @@ def run_stateful_counter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows cannot express (JsMr parity: arbitrary user reduce state,
     SURVEY.md §2.A A11) — user state lives in the state store, bounded
     by active keys, emitted in update mode each batch."""
-    base, src, n_rows = _stage_chunks(spark, sf_dir, n_chunks=6, late_tail=False)
-    try:
-        transform = _stateful_counter_transform
-
-        schema = spark.read.parquet(os.path.join(src, "chunk_000")).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "chunk_*"))
-        )
-        name = f"stateful_{uuid.uuid4().hex[:8]}"
-        with _replay_shuffle_clamp(spark, n_rows):
-            q = (
-                transform(stream)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.processAllAvailable()
-            q.stop()
-        return spark.table(name)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    with _replay(spark, sf_dir, n_chunks=6) as rp:
+        return rp.run(_stateful_counter_transform(rp.source()), mode="update")
 
 
 def run_stateful_counter_restart(
@@ -484,62 +484,41 @@ def run_stateful_counter_restart(
     account for exactly the prefix rows, and max-merged totals across
     both phases must account for exactly the whole table.
     """
-    base, src, n_rows = _stage_chunks(spark, sf_dir, n_chunks=6, late_tail=False)
-    try:
+    with _replay(spark, sf_dir, n_chunks=6) as rp:
         # Hold back the last 3 chunks: phase 1 genuinely stops while the
         # logical stream still has data in flight.
-        hold = os.path.join(base, "hold")
+        hold = os.path.join(rp.root, "hold")
         os.makedirs(hold)
-        chunks = sorted(d for d in os.listdir(src) if d.startswith("chunk_"))
+        chunks = sorted(d for d in os.listdir(rp.src) if d.startswith("chunk_"))
         for d in chunks[3:]:
-            shutil.move(os.path.join(src, d), os.path.join(hold, d))
-        n_prefix = spark.read.parquet(os.path.join(src, "chunk_*")).count()
-
-        ckpt = os.path.join(base, "ckpt")
-        schema = spark.read.parquet(os.path.join(src, "chunk_000")).schema
-        out_schema = "user_id long, n_events long, spend double"
+            shutil.move(os.path.join(rp.src, d), os.path.join(hold, d))
+        n_prefix = spark.read.parquet(os.path.join(rp.src, "chunk_*")).count()
 
         def run_incarnation() -> list:
             """Start a NEW query from the shared checkpoint; collect every
             emitted row via foreachBatch (the checkpoint-compatible sink —
             a memory sink cannot recover from a checkpoint location)."""
             emitted: list = []
-
-            def sink(batch_df: DataFrame, _batch_id: int) -> None:
-                emitted.extend(batch_df.collect())
-
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(os.path.join(src, "chunk_*"))
+            rp.run(
+                _stateful_counter_transform(rp.source()),
+                mode="update",
+                sink=lambda batch_df, _batch_id: emitted.extend(batch_df.collect()),
             )
-            q = (
-                _stateful_counter_transform(stream)
-                .writeStream.foreachBatch(sink)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.processAllAvailable()
-            q.stop()
             return emitted
 
-        with _replay_shuffle_clamp(spark, n_rows):
-            phase1 = run_incarnation()
-            # the rest of the stream arrives while the query is down
-            for d in chunks[3:]:
-                shutil.move(os.path.join(hold, d), os.path.join(src, d))
-            phase2 = run_incarnation()
-        n_total = spark.read.parquet(os.path.join(src, "chunk_*")).count()
-        return (
-            spark.createDataFrame(phase1, out_schema),
-            spark.createDataFrame(phase2, out_schema),
-            n_prefix,
-            n_total,
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        phase1 = run_incarnation()
+        # the rest of the stream arrives while the query is down
+        for d in chunks[3:]:
+            shutil.move(os.path.join(hold, d), os.path.join(rp.src, d))
+        phase2 = run_incarnation()
+        n_total = spark.read.parquet(os.path.join(rp.src, "chunk_*")).count()
+    out_schema = "user_id long, n_events long, spend double"
+    return (
+        spark.createDataFrame(phase1, out_schema),
+        spark.createDataFrame(phase2, out_schema),
+        n_prefix,
+        n_total,
+    )
 
 
 def run_rate_source_stream(spark: SparkSession) -> DataFrame:
@@ -557,8 +536,6 @@ def run_rate_source_stream(spark: SparkSession) -> DataFrame:
     state shape are identical. The memory sink's complete mode is the
     bounded-cardinality dashboard pattern (K user keys), not an
     unbounded append."""
-    import time as _time
-
     n_rows, n_keys = 5000, 50
     stream = (
         spark.readStream.format("rate-micro-batch")
@@ -567,44 +544,14 @@ def run_rate_source_stream(spark: SparkSession) -> DataFrame:
         .option("startTimestamp", 0)
         .load()
     )
-    agg = (
-        stream.filter(F.col("value") < n_rows)
-        .groupBy((F.col("value") % n_keys).alias("user_key"))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
-    )
-    name = f"rate_{uuid.uuid4().hex[:8]}"
-    with _replay_shuffle_clamp(spark, n_rows):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .start()
+    with _replay(spark) as rp:
+        return rp.run(
+            stream.filter(F.col("value") < n_rows)
+            .groupBy((F.col("value") % n_keys).alias("user_key"))
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value")),
+            mode="complete",
+            until_rows=n_rows,
         )
-        try:
-            done = None  # defined even if the poll loop never runs
-            deadline = _time.time() + 120
-            while _time.time() < deadline:
-                # r13: cheap driver-local gate first — recentProgress
-                # entries are appended after a batch (and its complete-
-                # mode sink rewrite) commits, and the rate source emits
-                # values sequentially, so >= n_rows cumulative input
-                # implies every counted value has landed in the sink.
-                # The old loop ran the confirming collect as a Spark
-                # job every 0.2 s, competing with the micro-batches it
-                # was waiting on; now the job runs only to confirm.
-                ingested = sum(p.numInputRows for p in q.recentProgress)
-                if ingested >= n_rows:
-                    done = spark.table(name).agg(F.sum("n")).collect()[0][0]
-                    if done == n_rows:
-                        break
-                _time.sleep(0.05)
-            else:
-                raise TimeoutError(
-                    f"rate stream ingested {done} of {n_rows} rows in 120s"
-                )
-        finally:
-            q.stop()
-    return spark.table(name)
 
 
 def run_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -620,25 +567,19 @@ def run_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "customer")
         .select((F.col("c_custkey") - 1).alias("user_id"), "c_mktsegment")
     )
-    base, src, n_rows = _stage_chunks(spark, sf_dir, n_chunks=6, late_tail=False)
-    try:
-        def transform(stream: DataFrame) -> DataFrame:
-            return (
-                stream.withWatermark("ts", "10 minutes")
-                .join(F.broadcast(dim), "user_id")
-                .groupBy(F.window("ts", "6 hours").alias("w"), "c_mktsegment")
-                .agg(F.count(F.lit(1)).alias("n_events"))
-                .select(
-                    F.col("w.start").alias("window_start"),
-                    "c_mktsegment",
-                    "n_events",
-                )
+    with _replay(spark, sf_dir, n_chunks=6) as rp:
+        return rp.run(
+            rp.source()
+            .withWatermark("ts", "10 minutes")
+            .join(F.broadcast(dim), "user_id")
+            .groupBy(F.window("ts", "6 hours").alias("w"), "c_mktsegment")
+            .agg(F.count(F.lit(1)).alias("n_events"))
+            .select(
+                F.col("w.start").alias("window_start"),
+                "c_mktsegment",
+                "n_events",
             )
-
-        name = f"stream_static_{uuid.uuid4().hex[:8]}"
-        return _run_stream(spark, src, transform, name, n_rows)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        )
 
 
 def run_exactly_once_sink_stream(
@@ -676,15 +617,10 @@ def run_exactly_once_sink_stream(
     injected failure and the redelivery skip so tests can assert the
     failure path actually executed.
     """
-    base, src, n_rows = _stage_chunks(spark, sf_dir, n_chunks=6, late_tail=False)
-    try:
-        out_dir = os.path.join(base, "sink")
-        ckpt = os.path.join(base, "ckpt")
+    evidence = {"failed_injected": False, "skipped_batches": [], "written_batches": []}
+    with _replay(spark, sf_dir, n_chunks=6) as rp:
+        out_dir = os.path.join(rp.root, "sink")
         os.makedirs(out_dir)
-        schema = spark.read.parquet(os.path.join(src, "chunk_000")).schema
-
-        evidence = {"failed_injected": False, "skipped_batches": [], "written_batches": []}
-        armed = {"on": True}
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
             final = os.path.join(out_dir, f"batch-{batch_id:05d}")
@@ -697,62 +633,33 @@ def run_exactly_once_sink_stream(
                 batch_df.write.mode("overwrite").parquet(tmp)
                 os.rename(tmp, final)  # atomic publish on this fs
                 evidence["written_batches"].append(batch_id)
-            if armed["on"] and batch_id == 2:
+            if not evidence["failed_injected"] and batch_id == 2:
                 # Injected crash in the worst-case window: the side
                 # effect is published, the streaming commit is not.
-                armed["on"] = False
                 evidence["failed_injected"] = True
                 raise RuntimeError("injected sink failure (post-write, pre-commit)")
 
-        def incarnation() -> None:
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .option("latestFirst", "false")
-                .parquet(os.path.join(src, "chunk_*"))
-            )
-            from jsmr_spark.compat import cents
+        out = rp.source().select("event_id", "user_id", cents(F.col("value")).alias("vc"))
+        try:
+            rp.run(out, sink=sink)
+            raise AssertionError("injected failure did not surface")
+        except StreamingQueryException as e:
+            if "injected sink failure" not in str(e):
+                raise
+        rp.run(out, sink=sink)  # restart from the same checkpoint
 
-            out = stream.select(
-                "event_id",
-                "user_id",
-                cents(F.col("value")).alias("vc"),
-            )
-            q = (
-                out.writeStream.foreachBatch(sink)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination()
-            finally:
-                q.stop()
-
-        with _replay_shuffle_clamp(spark, n_rows):
-            try:
-                incarnation()
-                raise AssertionError("injected failure did not surface")
-            except Exception as e:  # noqa: BLE001 — the injected failure
-                if "injected sink failure" not in str(e):
-                    raise
-            incarnation()  # restart from the same checkpoint
-
-        final_rows = (
+        # Materialize before the scratch root is deleted.
+        rows = (
             spark.read.parquet(os.path.join(out_dir, "batch-*"))
             .groupBy("user_id")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
                 (F.sum("vc") / 100.0).alias("spend"),
             )
+            .collect()
         )
-        # Materialize before the temp dir is deleted.
-        rows = final_rows.collect()
-        df = spark.createDataFrame(rows, "user_id long, n_events long, spend double")
-        return df, evidence
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    df = spark.createDataFrame(rows, "user_id long, n_events long, spend double")
+    return df, evidence
 
 
 def run_cdc_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -776,22 +683,17 @@ def run_cdc_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     transactional format and the merge becomes its MERGE INTO; the
     query graph is identical. Returns the final table — value-checked
     by the registered key against the batch aggregate over all events."""
-    base, src, n_rows = _stage_chunks(spark, sf_dir, n_chunks=6, late_tail=False)
-    try:
-        tbl_root = os.path.join(base, "table")
+    ord_col = F.concat(
+        F.lpad(F.unix_micros(F.col("ts")).cast("string"), 20, "0"),
+        F.lit("#"),
+        F.lpad(F.col("event_id").cast("string"), 12, "0"),
+    )
+    state = {"version": 0}  # version 0 = empty table
+    with _replay(spark, sf_dir, n_chunks=6) as rp:
+        tbl_root = os.path.join(rp.root, "table")
         os.makedirs(tbl_root)
-        state = {"version": 0}  # version 0 = empty table
-
-        schema = spark.read.parquet(os.path.join(src, "chunk_000")).schema
-        ord_col = F.concat(
-            F.lpad(F.unix_micros(F.col("ts")).cast("string"), 20, "0"),
-            F.lit("#"),
-            F.lpad(F.col("event_id").cast("string"), 12, "0"),
-        )
 
         def apply_batch(batch_df: DataFrame, _batch_id: int) -> None:
-            from jsmr_spark.compat import cents
-
             incoming = (
                 batch_df.select(
                     "user_id",
@@ -850,37 +752,20 @@ def run_cdc_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.rename(tmp, nxt)  # atomic version publish
             state["version"] += 1
 
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(os.path.join(src, "chunk_*"))
-        )
-        with _replay_shuffle_clamp(spark, n_rows):
-            q = (
-                stream.writeStream.foreachBatch(apply_batch)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(base, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
+        rp.run(rp.source(), sink=apply_batch)
+        rows = (
+            spark.read.parquet(os.path.join(tbl_root, f"v{state['version']:04d}"))
+            .select(
+                "user_id",
+                "event_type",
+                (F.col("vc") / 100.0).alias("last_value"),
+                "n_updates",
             )
-            q.processAllAvailable()
-            q.stop()
-
-        final = spark.read.parquet(
-            os.path.join(tbl_root, f"v{state['version']:04d}")
-        ).select(
-            "user_id",
-            "event_type",
-            (F.col("vc") / 100.0).alias("last_value"),
-            "n_updates",
+            .collect()
         )
-        rows = final.collect()
-        return spark.createDataFrame(
-            rows, "user_id long, event_type string, last_value double, n_updates long"
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return spark.createDataFrame(
+        rows, "user_id long, event_type string, last_value double, n_updates long"
+    )
 
 
 def run_transform_with_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -913,8 +798,6 @@ def run_transform_with_state_stream(spark: SparkSession, sf_dir: str) -> DataFra
 
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
-    from jsmr_spark.compat import cents
-
     class _TotalsProcessor(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._state = handle.getValueState("totals", "n LONG, vc LONG")
@@ -935,39 +818,19 @@ def run_transform_with_state_stream(spark: SparkSession, sf_dir: str) -> DataFra
         def close(self) -> None:
             pass
 
-    base, src, n_rows = _stage_chunks(spark, sf_dir, n_chunks=6, late_tail=False)
-    try:
-        schema = spark.read.parquet(os.path.join(src, "chunk_000")).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(os.path.join(src, "chunk_*"))
-        )
-        out = (
-            stream.select("user_id", cents(F.col("value")).alias("vc"))
+    with _replay(spark, sf_dir, n_chunks=6) as rp:
+        return rp.run(
+            rp.source()
+            .select("user_id", cents(F.col("value")).alias("vc"))
             .groupBy("user_id")
             .transformWithStateInPandas(
                 _TotalsProcessor(),
                 outputStructType="user_id long, n_events long, vc long",
                 outputMode="Update",
                 timeMode="None",
-            )
+            ),
+            mode="update",
         )
-        name = f"tws_{uuid.uuid4().hex[:8]}"
-        with _replay_shuffle_clamp(spark, n_rows):
-            q = (
-                out.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.processAllAvailable()
-            q.stop()
-        return spark.table(name)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 PY_STREAM_TOTAL = 5_000
@@ -1034,44 +897,50 @@ def run_python_stream_source(spark: SparkSession) -> DataFrame:
         def commit(self, end) -> None:
             pass
 
-    import time as _time
-
     spark.dataSource.register(_CounterSource)
-    agg = (
-        spark.readStream.format("jsmr_pycounter")
-        .load()
-        .groupBy((F.col("v") % PY_STREAM_KEYS).alias("user_key"))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("sum_v"))
-    )
-    name = f"pysrc_{uuid.uuid4().hex[:8]}"
-    with _replay_shuffle_clamp(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .start()
+    with _replay(spark) as rp:
+        return rp.run(
+            spark.readStream.format("jsmr_pycounter")
+            .load()
+            .groupBy((F.col("v") % PY_STREAM_KEYS).alias("user_key"))
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("sum_v")),
+            mode="complete",
+            until_rows=PY_STREAM_TOTAL,
         )
-        try:
-            done = None
-            deadline = _time.time() + 120
-            while _time.time() < deadline:
-                # r13: same driver-local recentProgress gate as the
-                # rate-source replay — the counter source emits a fixed
-                # sequential total, so the confirming Spark query runs
-                # only once enough source rows are in.
-                ingested = sum(p.numInputRows for p in q.recentProgress)
-                if ingested >= PY_STREAM_TOTAL:
-                    done = spark.table(name).agg(F.sum("n")).collect()[0][0]
-                    if done == PY_STREAM_TOTAL:
-                        break
-                _time.sleep(0.05)
-            else:
-                raise TimeoutError(
-                    f"python stream source ingested {done} of {PY_STREAM_TOTAL} rows in 120s"
-                )
-        finally:
-            q.stop()
-    return spark.table(name)
+
+
+def run_python_sink_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Events replayed through chunked micro-batches into the custom
+    Python streaming sink (jsmr_spark/pyds.py:TsvStreamSinkDataSource),
+    whose per-batch manifest commit is idempotent on batchId. Reads the
+    sink back through its manifests only and returns the per-type count
+    and exact cents sum of what it committed."""
+    import json
+
+    from jsmr_spark.pyds import register_stream_sink
+
+    register_stream_sink(spark)
+    with _replay(spark, sf_dir, n_chunks=4) as rp:
+        out = os.path.join(rp.root, "pysink")
+        rp.run(
+            rp.source().select("event_id", "event_type", cents(F.col("value")).alias("vc")),
+            sink="jsmr_tsv_stream_sink",
+            path=out,
+        )
+        files = []
+        for mf in sorted(os.listdir(out)):
+            if mf.startswith("_BATCH_"):
+                with open(os.path.join(out, mf)) as fh:
+                    files += [os.path.join(out, m["file"]) for m in json.load(fh)]
+        rows = (
+            spark.read.schema("event_id long, event_type string, vc long")
+            .option("sep", "\t")
+            .csv(files)
+            .groupBy("event_type")
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("vc").alias("sum_cents"))
+            .collect()
+        )
+    return spark.createDataFrame(rows, "event_type string, n bigint, sum_cents bigint")
 
 
 def run_ewma_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1129,16 +998,10 @@ def run_ewma_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    base, src, n_rows = _stage_chunks(spark, sf_dir, n_chunks=6, late_tail=False)
-    try:
-        schema = spark.read.parquet(os.path.join(src, "chunk_000")).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(src, "chunk_*"))
-        )
-        transformed = (
-            stream.select("user_id", "ts", "event_id", "value")
+    with _replay(spark, sf_dir, n_chunks=6) as rp:
+        return rp.run(
+            rp.source()
+            .select("user_id", "ts", "event_id", "value")
             .groupBy("user_id")
             .applyInPandasWithState(
                 update_ewma,
@@ -1146,22 +1009,9 @@ def run_ewma_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 stateStructType="vals array<long>, n_total long",
                 outputMode="update",
                 timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+            ),
+            mode="update",
         )
-        name = f"ewma_{uuid.uuid4().hex[:8]}"
-        with _replay_shuffle_clamp(spark, n_rows):
-            q = (
-                transformed.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.processAllAvailable()
-            q.stop()
-        return spark.table(name)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def run_window_topk_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1174,44 +1024,36 @@ def run_window_topk_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate-then-rank split is the production pattern (rank in
     foreachBatch or over the sink table) and keeps rank input at
     users-per-window rows, not the event stream."""
-    from jsmr_spark.compat import cents
-
-    base, src, n_rows = _stage_chunks(spark, sf_dir, n_chunks=8, late_tail=False)
-    try:
-        def transform(stream: DataFrame) -> DataFrame:
-            return (
-                stream.withWatermark("ts", "10 minutes")
-                .groupBy(F.window("ts", "1 hour").alias("w"), "user_id")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(cents(F.col("value"))).alias("spend_cents"),
-                )
-                .select(
-                    F.col("w.start").alias("window_start"),
-                    "user_id",
-                    "n",
-                    "spend_cents",
-                )
+    with _replay(spark, sf_dir, n_chunks=8) as rp:
+        emitted = rp.run(
+            rp.source()
+            .withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour").alias("w"), "user_id")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(cents(F.col("value"))).alias("spend_cents"),
             )
-
-        name = f"wintopk_{uuid.uuid4().hex[:8]}"
-        emitted = _run_stream(spark, src, transform, name, n_rows)
-        rw = Window.partitionBy("window_start").orderBy(
-            F.desc("spend_cents"), F.asc("user_id")
-        )
-        return (
-            emitted.withColumn("rnk", F.row_number().over(rw))
-            .filter(F.col("rnk") <= 3)
             .select(
-                "window_start",
-                "rnk",
+                F.col("w.start").alias("window_start"),
                 "user_id",
                 "n",
-                (F.col("spend_cents") / 100.0).alias("spend"),
+                "spend_cents",
             )
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    rw = Window.partitionBy("window_start").orderBy(
+        F.desc("spend_cents"), F.asc("user_id")
+    )
+    return (
+        emitted.withColumn("rnk", F.row_number().over(rw))
+        .filter(F.col("rnk") <= 3)
+        .select(
+            "window_start",
+            "rnk",
+            "user_id",
+            "n",
+            (F.col("spend_cents") / 100.0).alias("spend"),
+        )
+    )
 
 
 def _stream_stream_join(spark: SparkSession, sf_dir: str, how: str, select_cols):
@@ -1222,20 +1064,9 @@ def _stream_stream_join(spark: SparkSession, sf_dir: str, how: str, select_cols)
     One function so the predicate, watermark delay, and staging can
     never diverge between the hash-checked inner twin and the
     null-semantics outer twin."""
-    base, src, n_rows = _stage_chunks(spark, sf_dir, n_chunks=6, late_tail=False)
-    try:
-        schema = spark.read.parquet(os.path.join(src, "chunk_000")).schema
-
-        def source() -> DataFrame:
-            return (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .option("latestFirst", "false")
-                .parquet(os.path.join(src, "chunk_*"))
-            )
-
+    with _replay(spark, sf_dir, n_chunks=6) as rp:
         v = (
-            source()
+            rp.source()
             .filter(F.col("event_type") == "view")
             .select(
                 F.col("event_id").alias("view_id"),
@@ -1245,7 +1076,7 @@ def _stream_stream_join(spark: SparkSession, sf_dir: str, how: str, select_cols)
             .withWatermark("v_ts", "10 minutes")
         )
         k = (
-            source()
+            rp.source()
             .filter(F.col("event_type") == "click")
             .select(
                 F.col("event_id").alias("click_id"),
@@ -1254,27 +1085,15 @@ def _stream_stream_join(spark: SparkSession, sf_dir: str, how: str, select_cols)
             )
             .withWatermark("k_ts", "10 minutes")
         )
-        joined = v.join(
-            k,
-            (F.col("user_id") == F.col("k_user"))
-            & (F.col("k_ts") > F.col("v_ts"))
-            & (F.col("k_ts") <= F.col("v_ts") + F.expr("INTERVAL 5 MINUTES")),
-            how,
-        ).select(*select_cols)
-        name = f"ssjoin_{how}_{uuid.uuid4().hex[:8]}"
-        with _replay_shuffle_clamp(spark, n_rows):
-            q = (
-                joined.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.processAllAvailable()
-            q.stop()
-        return spark.table(name)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return rp.run(
+            v.join(
+                k,
+                (F.col("user_id") == F.col("k_user"))
+                & (F.col("k_ts") > F.col("v_ts"))
+                & (F.col("k_ts") <= F.col("v_ts") + F.expr("INTERVAL 5 MINUTES")),
+                how,
+            ).select(*select_cols)
+        )
 
 
 def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:

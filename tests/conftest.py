@@ -39,7 +39,7 @@ TABLES = (
 def spark():
     from jsmr_spark.session import get_spark
 
-    s = get_spark("jsmr_tests", shuffle_partitions=8)
+    s = get_spark("jsmr_tests")
     yield s
 
 

@@ -3,25 +3,60 @@
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+
+import pytest
 from pyspark.sql import functions as F
 
 from jsmr_spark.io import load_table
 from jsmr_spark.registry import get_query
 from jsmr_spark.streaming.core import (
+    _replay,
+    _replay_tmp_root,
     run_dedup_stream,
     run_tumbling_stream,
     run_watermark_late_replay,
 )
 from tests.conftest import SF_DIR
 
+_REPLAY_CONFS = ("spark.sql.shuffle.partitions", "spark.sql.streaming.checkpointLocation")
 
-def test_tumbling_stream_matches_batch_prefix(spark):
+
+@pytest.fixture
+def replay_root(monkeypatch):
+    """A private scratch root for this test's replays, on the same
+    filesystem the replays use by default, so a leftover directory
+    can only be this test's."""
+    root = tempfile.mkdtemp(prefix="jsmr_test_", dir=_replay_tmp_root())
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_TMP", root)
+    yield root
+    shutil.rmtree(root, ignore_errors=True)
+
+
+def _replay_confs(spark) -> dict:
+    return {k: spark.conf.get(k, None) for k in _REPLAY_CONFS}
+
+
+def _assert_replay_cleaned_up(spark, confs_before: dict) -> None:
+    """What every replay must leave behind, on success or on error: no
+    running query, nothing under the scratch root, both confs it
+    clamps back at their previous values."""
+    assert spark.streams.active == []
+    assert os.listdir(_replay_tmp_root()) == []
+    assert _replay_confs(spark) == confs_before
+
+
+def test_tumbling_stream_matches_batch_prefix(spark, replay_root):
     """Every window the stream emitted (watermark-closed) must carry
     exactly the batch counts; the stream may only be missing the tail
     windows still open at shutdown."""
+    confs = _replay_confs(spark)
+    out = run_tumbling_stream(spark, SF_DIR)
+    _assert_replay_cleaned_up(spark, confs)
     streamed = {
-        (r.window_start, r.window_end, r.event_type): r.n
-        for r in run_tumbling_stream(spark, SF_DIR).collect()
+        (r.window_start, r.window_end, r.event_type): r.n for r in out.collect()
     }
     batch = {
         (r.window_start, r.window_end, r.event_type): r.n
@@ -210,17 +245,21 @@ def test_tumbling_stream_on_rocksdb_state_store(spark):
         assert batch.get(k) == n, f"window {k}: rocksdb={n} batch={batch.get(k)}"
 
 
-def test_exactly_once_sink_survives_injected_failure(spark):
+def test_exactly_once_sink_survives_injected_failure(spark, replay_root):
     """The idempotent foreachBatch sink must (1) actually hit the
     injected post-publish/pre-commit failure, (2) skip the redelivered
     batch on restart, and (3) deliver every input row exactly once —
-    totals equal to the batch aggregate, in count AND exact cents."""
+    totals equal to the batch aggregate, in count AND exact cents. The
+    failed first incarnation goes through the replay's error path, which
+    must still clean up."""
     from jsmr_spark.compat import cents
     from jsmr_spark.io import load_table
     from jsmr_spark.streaming.core import run_exactly_once_sink_stream
     from tests.conftest import SF_DIR
 
+    confs = _replay_confs(spark)
     df, evidence = run_exactly_once_sink_stream(spark, SF_DIR)
+    _assert_replay_cleaned_up(spark, confs)
     assert evidence["failed_injected"]
     assert evidence["skipped_batches"] == [2], evidence
     assert sorted(evidence["written_batches"]) == list(range(6)), evidence
@@ -427,3 +466,44 @@ def test_replay_tmp_root_falls_back_when_shm_is_full(monkeypatch):
     asked.clear()
     assert core._replay_tmp_root() == "/tmp/jsmr_custom_root"
     assert asked == []
+
+
+def test_replay_cleans_up_after_error_in_block(spark, replay_root):
+    """An exception inside a bare ``with _replay(...)`` block, after a
+    query ran and its memory sink registered a view, still stops every
+    query, drops the view, restores both confs (here set to non-default
+    values first) and deletes the scratch root."""
+    old = _replay_confs(spark)
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    spark.conf.set("spark.sql.streaming.checkpointLocation", os.path.join(replay_root, "elsewhere"))
+    try:
+        confs = _replay_confs(spark)
+        views = spark.catalog.listTables()
+        with pytest.raises(RuntimeError, match="inside the replay"):
+            with _replay(spark, SF_DIR, n_chunks=2) as rp:
+                assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+                assert rp.run(rp.source()).count() == rp.n_rows
+                raise RuntimeError("inside the replay")
+        _assert_replay_cleaned_up(spark, confs)
+        assert spark.catalog.listTables() == views
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_memory_sink_runner_leaves_no_temp_view(spark):
+    """A memory sink registers a temp view holding its rows in the
+    driver; the replay drops it, so repeated runs do not pile views up,
+    and the returned DataFrame stays valid without it."""
+
+    def temp_tables() -> int:
+        return sum(t.isTemporary for t in spark.catalog.listTables())
+
+    n_before = temp_tables()
+    first = run_tumbling_stream(spark, SF_DIR)
+    second = run_tumbling_stream(spark, SF_DIR)
+    assert temp_tables() == n_before
+    assert sorted(first.collect()) == sorted(second.collect())

@@ -32,7 +32,7 @@ def main() -> int:
     # conftest reads the env var at import time; override defensively.
     C.SF_DIR = sf
 
-    spark = get_spark("check_keys", shuffle_partitions=8)
+    spark = get_spark("check_keys")
     duck = duckdb.connect()
     for name in C.TABLES:
         duck.execute(
