@@ -106,9 +106,10 @@ def load_table(
         elif ts_type == "timestamp_ntz":
             # Round-1 normalization produced TIMESTAMP (LTZ); the cast
             # below is value-identical ONLY under a UTC session tz —
-            # and ensure_engine_confs swallows conf-set failures on a
-            # driver-owned session, so verify instead of assuming:
-            # shifting every instant by a tz offset must fail loudly.
+            # and a deployment may not let ensure_engine_confs set the
+            # timezone (or the caller overrode it), so verify instead of
+            # assuming: shifting every instant by a tz offset must fail
+            # loudly.
             tz = spark.conf.get("spark.sql.session.timeZone")
             if tz != "UTC":
                 raise RuntimeError(

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from jsmr_spark.compat import cents, sql_cents
 from jsmr_spark.queries.common import t
 from jsmr_spark.registry import query
+from jsmr_spark.session import conf_override
 
 _PRICE = sql_cents("l_extendedprice")
 
@@ -101,7 +102,6 @@ def sink_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
     from urllib.parse import urlparse
 
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     # uuid-suffixed table names: concurrent sessions (driver run, bench,
     # plan audit) share one warehouse dir and must never race on the
@@ -109,23 +109,23 @@ def sink_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mid-join undercounted the join).
     run = uuid.uuid4().hex[:8]
     try:
-        for name, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
-            (
-                t(spark, sf_dir, name)
-                .write.mode("overwrite")
-                .bucketBy(8, key)
-                .sortBy(key)
-                .saveAsTable(f"jsmr_b_{name}_{run}")
+        with conf_override(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            for name, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
+                (
+                    t(spark, sf_dir, name)
+                    .write.mode("overwrite")
+                    .bucketBy(8, key)
+                    .sortBy(key)
+                    .saveAsTable(f"jsmr_b_{name}_{run}")
+                )
+            joined = spark.table(f"jsmr_b_orders_{run}").join(
+                spark.table(f"jsmr_b_lineitem_{run}"),
+                F.col("o_orderkey") == F.col("l_orderkey"),
             )
-        joined = spark.table(f"jsmr_b_orders_{run}").join(
-            spark.table(f"jsmr_b_lineitem_{run}"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        n_exchanges = plan.count("Exchange")
-        n_rows = joined.count()
+            plan = joined._jdf.queryExecution().executedPlan().toString()
+            n_exchanges = plan.count("Exchange")
+            n_rows = joined.count()
     finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         for name in ("orders", "lineitem"):
             spark.sql(f"DROP TABLE IF EXISTS jsmr_b_{name}_{run}")
             shutil.rmtree(f"{warehouse}/jsmr_b_{name}_{run}", ignore_errors=True)
@@ -173,19 +173,17 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(cents(F.col("value"))).alias("sum_cents"),
         )
     )
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     try:
         agg.write.mode("overwrite").partitionBy("event_type").parquet(out)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # the partition refresh: recompute ONE partition from source and
         # overwrite it in place — every other partition must survive
-        agg.filter(F.col("event_type") == "click").write.mode("overwrite").partitionBy(
-            "event_type"
-        ).parquet(out)
+        with conf_override(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
+            agg.filter(F.col("event_type") == "click").write.mode(
+                "overwrite"
+            ).partitionBy("event_type").parquet(out)
         back = spark.read.parquet(out).select("event_type", "day", "n", "sum_cents")
         rows = back.collect()  # materialize before cleanup
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
         shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows, "event_type string, day date, n bigint, sum_cents bigint"

@@ -4,9 +4,19 @@ Two usage modes:
   * Tests / bench / standalone: ``get_spark()`` builds a local session.
   * Driver mode: the driver owns the session and passes it to
     ``entry(spark)`` / ``queries()[k](spark, sf_dir)``; we cannot rebuild
-    it, so ``ensure_engine_confs(spark)`` applies the runtime-settable
-    subset (all engine-required confs are SQLConf entries, hence
-    session-settable).
+    it, so ``ensure_engine_confs(spark)`` applies the runtime confs.
+
+Every conf the engine sets is named once, in one of two places:
+
+  * ``RUNTIME_CONFS()`` — the one table of session-settable (SQLConf)
+    confs. ``ensure_engine_confs`` applies it in one loop, once per
+    session, to ``get_spark`` and driver-owned sessions alike (plus the
+    local-only ``spark.sql.files.openCostInBytes`` when the master is
+    ``local``). A key the deployment does not let it modify is skipped;
+    any other failure raises, and the session is not marked configured.
+  * ``get_spark``'s builder — only what cannot be set on a live
+    session: master, driver memory, UI, Arrow, the Python worker daemon
+    and the static ``spark.python.sql.dataFrameDebugging.enabled``.
 
 Required confs and why (SURVEY.md §7.1):
   * ``spark.sql.legacy.parquet.nanosAsLong=true`` — the ``events``
@@ -28,15 +38,20 @@ The last two are SparkContext-static: a driver-owned session
 (``ensure_engine_confs``) cannot set them and keeps the stock
 ``pyspark.daemon``. Results are identical; only the per-task cost of
 Python stages (mr.py, Python UDFs) differs.
+
+A temporary change to a conf goes through ``conf_override``, which puts
+back exactly the state it found: the old value, or unset.
 """
 
 from __future__ import annotations
 
 import os
-
-from pyspark.sql import SparkSession
-
 import weakref
+from contextlib import contextmanager
+from typing import Iterator
+
+import pyspark.errors.utils as _peu
+from pyspark.sql import SparkSession
 
 
 def _aqe_default() -> str:
@@ -49,9 +64,10 @@ def _aqe_default() -> str:
     return os.environ.get("SPARK_GRAFT_AQE", "true")
 
 
-# Confs that are safe (and required) to set on a live session.
-# A function, not a module constant: the AQE entries read the env at
-# call time so a harness can flip SPARK_GRAFT_AQE after import.
+# The one table of session-settable confs, applied by
+# ensure_engine_confs. A function, not a module constant: the AQE
+# entries read the env at call time so a harness can flip
+# SPARK_GRAFT_AQE after import.
 def RUNTIME_CONFS() -> dict[str, str]:
     return {
         "spark.sql.legacy.parquet.nanosAsLong": "true",
@@ -59,42 +75,16 @@ def RUNTIME_CONFS() -> dict[str, str]:
         "spark.sql.adaptive.enabled": _aqe_default(),
         "spark.sql.adaptive.coalescePartitions.enabled": _aqe_default(),
         "spark.sql.adaptive.skewJoin.enabled": _aqe_default(),
-        # r12 (guide §4 — the Python boundary): PySpark 4 wraps every
-        # DataFrame/Column API call with a call-site capture for error
-        # context (a Python stack walk + 2 extra py4j round trips + a
-        # conf read PER CALL). Measured on this box: F.col alone drops
-        # 7.3 -> 2.2 ms with it off. Pure client-side debug metadata —
-        # no effect on plans or results.
-        "spark.python.sql.dataFrameDebugging.enabled": "false",
+        # A vanilla session defaults to 200 shuffle partitions, which at
+        # bench scale is pure task-scheduling overhead (on a real
+        # cluster this is instead sized to ~2-3x total executor cores).
+        # Capped at 16 locally: at fixture sizes the per-task scheduling
+        # cost dominates past ~16 tasks per exchange (measured: the 4
+        # shuffle-heavy headline keys run 12% faster at 16 than at 32; 8
+        # is flat vs 16), while AQE coalescing keeps the reduce side
+        # right-sized either way.
+        "spark.sql.shuffle.partitions": str(min(default_parallelism(), 16)),
     }
-
-# Applied alongside RUNTIME_CONFS by ensure_engine_confs, to get_spark
-# and driver-owned sessions alike: a vanilla session defaults to 200
-# shuffle partitions, which at bench scale is pure task-scheduling
-# overhead (on a real cluster this is instead sized to ~2-3x total
-# executor cores). Capped at 16 locally:
-# at fixture sizes the per-task scheduling cost dominates past ~16
-# tasks per exchange (measured: the 4 shuffle-heavy headline keys run
-# 12% faster at 16 than at 32; 8 is flat vs 16), while AQE coalescing
-# keeps the reduce side right-sized either way.
-_ADAPTIVE_CONFS = {
-    "spark.sql.shuffle.partitions": lambda: str(min(default_parallelism(), 16)),
-}
-
-# Local-mode-only sizing, env-overridable. r13 correction: every
-# fixture parquet file is ONE row group (verified with pyarrow), and
-# Spark's parquet reader is row-group granular — a task whose byte
-# range contains the row-group start decodes the whole group, so
-# sub-file splits can never parallelize these scans; the old 8m
-# default only manufactured empty tasks (lineitem sf0.1: 11 tasks, 10
-# of them no-ops) and their scheduling overhead. 128m (= the engine
-# default) removes them: bench A/B interleaved, exec total 0.98/0.98
-# -> 0.90/0.87 s. Only applied when the master is local[*]; real
-# clusters keep their own sizing.
-_LOCAL_SCAN_CONFS = {
-    "spark.sql.files.maxPartitionBytes": lambda: os.environ.get("SPARK_GRAFT_SPLIT", "128m"),
-    "spark.sql.files.openCostInBytes": lambda: "1m",
-}
 
 
 # The directory holding jsmr_spark/ (see spark.executorEnv.PYTHONPATH).
@@ -108,12 +98,13 @@ def default_parallelism() -> int:
 def get_spark(app_name: str = "jsmr_spark") -> SparkSession:
     """Build (or fetch) a local SparkSession sized to this machine.
 
-    Shuffle partitions and scan split sizing come from
-    ``ensure_engine_confs`` (``_ADAPTIVE_CONFS``, ``_LOCAL_SCAN_CONFS``),
-    the same path a driver-owned session takes.
+    The builder carries only the confs a live session cannot take; the
+    rest come from ``ensure_engine_confs``, the same path a driver-owned
+    session takes. Fetching the session again leaves the caller's later
+    overrides in place.
     """
     cpus = default_parallelism()
-    builder = (
+    spark = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
@@ -121,12 +112,17 @@ def get_spark(app_name: str = "jsmr_spark") -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.python.daemon.module", "jsmr_spark.pyworker")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        # r12 (guide §4 — the Python boundary): PySpark 4 wraps every
+        # DataFrame/Column API call with a call-site capture for error
+        # context (a Python stack walk + 2 extra py4j round trips + a
+        # conf read PER CALL). Measured in r12: F.col alone drops
+        # 7.3 -> 2.2 ms with it off. Pure client-side debug metadata —
+        # no effect on plans or results. A static conf: only the
+        # builder can set it.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .getOrCreate()
     )
-    for k, v in RUNTIME_CONFS().items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    ensure_engine_confs(spark)
-    return spark
+    return ensure_engine_confs(spark)
 
 
 # Sessions ensure_engine_confs has already configured. Memoized so (a)
@@ -138,55 +134,50 @@ _CONFIGURED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
 
 def ensure_engine_confs(spark: SparkSession) -> SparkSession:
-    """Apply engine-required runtime confs to an externally-owned session.
+    """Apply the engine's runtime confs to a session, once.
 
-    Idempotent and applied once per session; later explicit conf
-    overrides by the caller stick."""
+    Later explicit conf overrides by the caller stick. A failed apply
+    raises and is not memoized, so the next call tries again."""
     if spark in _CONFIGURED:
         return spark
-    _CONFIGURED.add(spark)
-    for k, v in RUNTIME_CONFS().items():
-        try:
+    confs = RUNTIME_CONFS()
+    if spark.sparkContext.master.startswith("local"):
+        # Local-mode-only scan sizing: a 1m per-file open cost (Spark's
+        # default is 4m) packs the small fixture files into fewer scan
+        # tasks. Real clusters keep their own sizing. (Split size stays
+        # at Spark's 128m default: every fixture file is one row group,
+        # so smaller splits only manufacture empty tasks.)
+        confs["spark.sql.files.openCostInBytes"] = "1m"
+    for k, v in confs.items():
+        if spark.conf.isModifiable(k):
             spark.conf.set(k, v)
-        except Exception:
-            # Immutable in this deployment; reads must cope (io.py has a
-            # fallback path for events if nanosAsLong can't be set).
-            pass
-    # r13 correction: spark.python.sql.dataFrameDebugging.enabled is a
-    # STATIC conf — on a driver-owned session the conf.set above throws
-    # CANNOT_MODIFY_STATIC_CONFIG (swallowed) and the builder-time
-    # default (true) stands, so r12's cache drop made pyspark re-read
-    # "true" and the per-call capture stayed ON for vanilla sessions
-    # (measured: ~5 ms of Python stack walk + extra py4j round trips
-    # per DataFrame/Column call). The flag is client-side-only error-
-    # context capture with zero effect on plans or results, so apply
-    # the intent at the client: pin pyspark's cached check to the
-    # session's effective conf — False unless the caller explicitly
+    # r13: spark.python.sql.dataFrameDebugging.enabled is static, so a
+    # driver-owned session keeps its builder-time default and pyspark's
+    # per-call capture (~5 ms of stack walk + py4j round trips per
+    # DataFrame/Column call) would stay on. The flag is client-side
+    # error context with no effect on plans or results, so pin
+    # pyspark's cached check to False unless the caller explicitly
     # built the session with it enabled.
-    try:
-        import pyspark.errors.utils as _peu
-
-        _peu._enable_debugging_cache = (
-            spark.conf.get(
-                "spark.python.sql.dataFrameDebugging.enabled", "false"
-            ).lower()
-            == "true"
-        )
-    except Exception:
-        pass
-    for k, fv in _ADAPTIVE_CONFS.items():
-        try:
-            spark.conf.set(k, fv())
-        except Exception:
-            pass
-    try:
-        is_local = spark.sparkContext.master.startswith("local")
-    except Exception:
-        is_local = False
-    if is_local:
-        for k, fv in _LOCAL_SCAN_CONFS.items():
-            try:
-                spark.conf.set(k, fv())
-            except Exception:
-                pass
+    _peu._enable_debugging_cache = (
+        spark.conf.get("spark.python.sql.dataFrameDebugging.enabled", "false").lower()
+        == "true"
+    )
+    _CONFIGURED.add(spark)
     return spark
+
+
+@contextmanager
+def conf_override(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` for the block, then restore each key exactly: its
+    old value if it had one, unset if it had none."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

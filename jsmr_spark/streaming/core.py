@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 
 from jsmr_spark.compat import cents
 from jsmr_spark.io import load_table, table_path
+from jsmr_spark.session import conf_override
 
 # Scratch space one replay's checkpoints may take: offsets, commits and
 # state-store delta files, a few KB each but one per partition per store
@@ -216,7 +217,6 @@ def _replay(
         need += 4 * os.path.getsize(table_path(sf_dir, "events"))
     root = os.path.join(_replay_tmp_root(need), f"jsmr_stream_{uuid.uuid4().hex[:8]}")
     rp = _Replay(spark, root)
-    old = {k: spark.conf.get(k, None) for k in (_PARTITIONS, _CHECKPOINTS)}
     try:
         if sf_dir is not None:
             import pyarrow.compute as pc
@@ -249,12 +249,10 @@ def _replay(
             # INT96 default reads back as ns and would re-write as
             # TIMESTAMP(NANOS), which the nanosAsLong session conf then
             # scans as bigint.
-            old_tt = spark.conf.get("spark.sql.parquet.outputTimestampType")
-            spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-            try:
+            with conf_override(
+                spark, {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
+            ):
                 ev.coalesce(1).write.parquet(stage)
-            finally:
-                spark.conf.set("spark.sql.parquet.outputTimestampType", old_tt)
             part = glob.glob(os.path.join(stage, "part-*.parquet"))
             if len(part) != 1:
                 # coalesce(1) guarantees a single part file; anything
@@ -283,17 +281,12 @@ def _replay(
             shutil.rmtree(stage, ignore_errors=True)
             rp.schema = spark.read.parquet(os.path.join(rp.src, "chunk_000")).schema
         n_parts = 4 if rp.n_rows is None else min(32, max(4, rp.n_rows // 20_000))
-        spark.conf.set(_PARTITIONS, str(n_parts))
-        spark.conf.set(_CHECKPOINTS, os.path.join(rp.root, "queries"))
-        yield rp
+        ckpt = os.path.join(rp.root, "queries")
+        with conf_override(spark, {_PARTITIONS: str(n_parts), _CHECKPOINTS: ckpt}):
+            yield rp
     finally:
         for name in rp.views:
             spark.catalog.dropTempView(name)
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
         shutil.rmtree(rp.root, ignore_errors=True)
 
 

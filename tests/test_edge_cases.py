@@ -9,6 +9,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from jsmr_spark.mr import job
+from jsmr_spark.session import conf_override
 
 
 def test_agg_over_empty_input(spark):
@@ -134,7 +135,7 @@ def test_events_loader_rejects_unknown_ts_dtype(spark, tmp_path):
         load_table(spark, sf_dir, "events")
 
 
-def test_events_loader_requires_utc_for_ntz(spark, tmp_path):
+def test_events_loader_requires_utc_for_ntz(spark, tmp_path, monkeypatch):
     """The NTZ->LTZ cast is only value-identical under a UTC session
     timezone; a non-UTC session must raise instead of silently shifting
     every instant by the zone offset."""
@@ -153,19 +154,13 @@ def test_events_loader_requires_utc_for_ntz(spark, tmp_path):
     ).write.parquet(f"{sf_dir}/events.parquet")
     import jsmr_spark.io as jio
 
-    old_tz = spark.conf.get("spark.sql.session.timeZone")
-    old_fn = jio.ensure_engine_confs
-    try:
-        # Emulate a driver-owned session whose timezone conf is pinned:
-        # ensure_engine_confs cannot fix it (it swallows failures there),
-        # so the loader must detect the non-UTC zone and refuse.
-        jio.ensure_engine_confs = lambda s: s
-        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    # Emulate a driver-owned session whose deployment does not let
+    # ensure_engine_confs set the timezone: the loader must detect the
+    # non-UTC zone and refuse.
+    monkeypatch.setattr(jio, "ensure_engine_confs", lambda s: s)
+    with conf_override(spark, {"spark.sql.session.timeZone": "America/New_York"}):
         with pytest.raises(RuntimeError, match="UTC session"):
             load_table(spark, sf_dir, "events")
-    finally:
-        jio.ensure_engine_confs = old_fn
-        spark.conf.set("spark.sql.session.timeZone", old_tz)
 
 
 def test_not_in_with_null_in_subquery_is_empty(spark):
@@ -347,7 +342,6 @@ def test_dynamic_overwrite_premise_static_would_clobber(spark):
     from tests.conftest import SF_DIR
 
     out = os.path.join(tempfile.gettempdir(), f"jsmr_dynover_premise_{uuid.uuid4().hex[:8]}")
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     try:
         agg = (
             load_table(spark, SF_DIR, "events")
@@ -355,14 +349,13 @@ def test_dynamic_overwrite_premise_static_would_clobber(spark):
             .agg(F.count(F.lit(1)).alias("n"))
         )
         agg.write.mode("overwrite").partitionBy("event_type").parquet(out)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-        agg.filter(F.col("event_type") == "click").write.mode("overwrite").partitionBy(
-            "event_type"
-        ).parquet(out)
+        with conf_override(spark, {"spark.sql.sources.partitionOverwriteMode": "static"}):
+            agg.filter(F.col("event_type") == "click").write.mode(
+                "overwrite"
+            ).partitionBy("event_type").parquet(out)
         left = {r.event_type for r in spark.read.parquet(out).collect()}
         assert left == {"click"}, left
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
         shutil.rmtree(out, ignore_errors=True)
 
 

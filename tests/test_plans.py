@@ -9,6 +9,7 @@ top-k never global-sorts.
 from __future__ import annotations
 
 from jsmr_spark.registry import get_query
+from jsmr_spark.session import conf_override
 from tests.conftest import SF_DIR
 
 
@@ -159,10 +160,7 @@ def test_runtime_bloom_filter_injection(spark):
         # force a non-broadcast join so the runtime filter is the lever
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    old = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_override(spark, confs):
         o = load_table(spark, SF_DIR, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
         )
@@ -173,12 +171,6 @@ def test_runtime_bloom_filter_injection(spark):
             .count()
         )
         plan = j._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     assert "bloom_filter_agg" in plan, plan
 
 
@@ -205,10 +197,7 @@ def test_aqe_skew_join_split(spark):
         # the split is free
         "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
     }
-    old = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_override(spark, confs):
         # One hot key over a background of uniform keys: skew detection
         # compares each shuffle partition against the MEDIAN partition
         # size, so the background keys establish a small median and the
@@ -231,12 +220,6 @@ def test_aqe_skew_join_split(spark):
         j = left.join(right.hint("merge"), "k").select(F.count(F.lit(1)).alias("n"))
         j.collect()
         plan = j._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     assert "skew=true" in plan, plan
 
 

@@ -16,8 +16,12 @@ from __future__ import annotations
 
 import pytest
 
+import pyspark.errors.utils
+from pyspark.errors import IllegalArgumentException
+
+from jsmr_spark import session
 from jsmr_spark.registry import get_query
-from jsmr_spark.session import ensure_engine_confs
+from jsmr_spark.session import conf_override, ensure_engine_confs, get_spark
 from tests.conftest import SF_DIR, canon_rows
 
 # One representative per family: scan-agg, multiway join, window,
@@ -159,6 +163,19 @@ KEYS = [
     # the one-pass card's modal-language argmax and the log-mean sums
     "q_profile_dataset_card",
     "q_agg_geomean",
+    # every remaining key of the benchmark's two workloads, so each
+    # timed key is also planner-config independent: grouping sets,
+    # group top-k, sessionization, word count, threshold pairs, JSON
+    # functions, the mr.py jobs and the exactly-once streaming sink
+    "q_agg_grouping_sets",
+    "q_win_topk_group",
+    "q_stream_session",
+    "q_text_wordcount",
+    "q_sim_threshold_pairs",
+    "q_json_funcs",
+    "mr_api",
+    "q_mr_inverted_index",
+    "stream_exactly_once_sink",
 ]
 
 
@@ -184,3 +201,92 @@ def test_result_invariant_to_planner_config(spark, alt_spark, name):
     a_cols, a_rows = canon_rows(alt.columns, [tuple(r) for r in alt.collect()])
     assert b_cols == a_cols
     assert b_rows == a_rows, f"{name}: result depends on planner config"
+
+
+# --- The one conf path (jsmr_spark/session.py) -------------------------------
+
+
+def test_ensure_engine_confs_applies_table_on_new_session(spark, monkeypatch):
+    """A fresh sibling session gets every modifiable table key at its
+    intended value in one apply; a static key in the table is skipped
+    rather than raising, and keeps its builder-time value."""
+    s2 = spark.newSession()
+    table = {**session.RUNTIME_CONFS(), "spark.sql.files.openCostInBytes": "1m"}
+    static = "spark.python.sql.dataFrameDebugging.enabled"
+    assert not s2.conf.isModifiable(static)
+    before = s2.conf.get(static)
+    monkeypatch.setattr(session, "RUNTIME_CONFS", lambda: {**table, static: "true"})
+    assert ensure_engine_confs(s2) is s2
+    assert {k: s2.conf.get(k) for k in table} == table
+    assert s2.conf.get(static) == before == "false"
+    assert pyspark.errors.utils._enable_debugging_cache is False
+
+
+def test_ensure_engine_confs_raises_and_does_not_memoize(spark, monkeypatch):
+    """A conf the session rejects raises instead of being swallowed, and
+    the failed apply is not memoized: a retry with a valid table
+    applies."""
+    s2 = spark.newSession()
+    with monkeypatch.context() as m:
+        m.setattr(session, "RUNTIME_CONFS", lambda: {"spark.sql.shuffle.partitions": "abc"})
+        with pytest.raises(IllegalArgumentException):
+            ensure_engine_confs(s2)
+    ensure_engine_confs(s2)
+    table = session.RUNTIME_CONFS()
+    assert {k: s2.conf.get(k) for k in table} == table
+
+
+def test_conf_override_restores_set_and_unset_keys(spark):
+    """conf_override puts back exactly what it found — the old value of
+    a set key, and no value at all for an unset one — whether the block
+    returns or raises."""
+    s2 = spark.newSession()
+    was_set, was_unset = "spark.sql.shuffle.partitions", "spark.sql.sources.partitionOverwriteMode"
+    s2.conf.set(was_set, "7")
+    assert s2.conf.get(was_unset, None) is None
+    new = {was_set: "3", was_unset: "dynamic"}
+
+    def assert_restored():
+        assert s2.conf.get(was_set, None) == "7"
+        assert s2.conf.get(was_unset, None) is None
+
+    with conf_override(s2, new):
+        assert {k: s2.conf.get(k) for k in new} == new
+    assert_restored()
+    with pytest.raises(RuntimeError, match="inside the override"):
+        with conf_override(s2, new):
+            raise RuntimeError("inside the override")
+    assert_restored()
+
+
+def test_get_spark_again_keeps_caller_overrides(spark):
+    """Fetching the session a second time must not reset the confs a
+    caller changed after the first."""
+    overrides = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.session.timeZone": "America/New_York",
+    }
+    with conf_override(spark, overrides):
+        assert get_spark(spark.sparkContext.appName) is spark
+        assert {k: spark.conf.get(k) for k in overrides} == overrides
+
+
+def test_sink_bucketed_keeps_caller_broadcast_threshold(spark):
+    """sink_bucketed disables broadcast joins only for its own join: a
+    caller's threshold is still in place after the key ran."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    with conf_override(spark, {key: "1234"}):
+        (row,) = get_query("sink_bucketed").fn(spark, SF_DIR).collect()
+        assert row.colocated
+        assert spark.conf.get(key) == "1234"
+
+
+def test_sink_dynamic_overwrite_leaves_unset_mode_unset(spark):
+    """sink_dynamic_overwrite switches to dynamic partition overwrite
+    only for its refresh write: on a session where the mode was unset,
+    it is unset again afterwards, not pinned to a value."""
+    s2 = ensure_engine_confs(spark.newSession())
+    key = "spark.sql.sources.partitionOverwriteMode"
+    assert s2.conf.get(key, None) is None
+    assert get_query("sink_dynamic_overwrite").fn(s2, SF_DIR).count() > 0
+    assert s2.conf.get(key, None) is None

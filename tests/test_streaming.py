@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from jsmr_spark.io import load_table
 from jsmr_spark.registry import get_query
+from jsmr_spark.session import conf_override
 from jsmr_spark.streaming.core import (
     _replay,
     _replay_tmp_root,
@@ -220,22 +221,12 @@ def test_tumbling_stream_on_rocksdb_state_store(spark):
     state store provider (the backend a 100 TB deployment runs, with
     state spilled off-heap and changelog checkpointing available) must
     emit exactly the same windows as the default HDFS-backed store."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    provider = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    with conf_override(spark, {"spark.sql.streaming.stateStore.providerClass": provider}):
         streamed = {
             (r.window_start, r.window_end, r.event_type): r.n
             for r in run_tumbling_stream(spark, SF_DIR).collect()
         }
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
     batch = {
         (r.window_start, r.window_end, r.event_type): r.n
         for r in get_query("q_stream_tumbling").fn(spark, SF_DIR).collect()
@@ -473,10 +464,11 @@ def test_replay_cleans_up_after_error_in_block(spark, replay_root):
     query ran and its memory sink registered a view, still stops every
     query, drops the view, restores both confs (here set to non-default
     values first) and deletes the scratch root."""
-    old = _replay_confs(spark)
-    spark.conf.set("spark.sql.shuffle.partitions", "7")
-    spark.conf.set("spark.sql.streaming.checkpointLocation", os.path.join(replay_root, "elsewhere"))
-    try:
+    caller = {
+        "spark.sql.shuffle.partitions": "7",
+        "spark.sql.streaming.checkpointLocation": os.path.join(replay_root, "elsewhere"),
+    }
+    with conf_override(spark, caller):
         confs = _replay_confs(spark)
         views = spark.catalog.listTables()
         with pytest.raises(RuntimeError, match="inside the replay"):
@@ -486,12 +478,6 @@ def test_replay_cleans_up_after_error_in_block(spark, replay_root):
                 raise RuntimeError("inside the replay")
         _assert_replay_cleaned_up(spark, confs)
         assert spark.catalog.listTables() == views
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_memory_sink_runner_leaves_no_temp_view(spark):

@@ -20,8 +20,8 @@ Two layers:
    (spark.sql.ansi.enabled=true, runtime-settable): under ANSI, Spark
    RAISES on int64 overflow exactly like DuckDB, so the silent-wrap
    failure mode is structurally unreachable during the run. Results are
-   additionally cross-checked equal to the default-mode run (ANSI must
-   not change in-budget arithmetic).
+   additionally cross-checked equal to a run with ANSI explicitly off
+   (ANSI must not change in-budget arithmetic).
 """
 
 from __future__ import annotations
@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from jsmr_spark.io import load_table
 from jsmr_spark.registry import get_query
+from jsmr_spark.session import conf_override
 
 from tests.conftest import SF01_DIR
 
@@ -82,14 +83,14 @@ def test_tie_budget_headroom_sf01(spark, label, types):
 def test_tie_keys_under_ansi_mode(spark):
     """Both rank-test keys run at sf0.1 with ANSI overflow checking ON:
     any int64 wrap raises here (as DuckDB would) instead of silently
-    corrupting z / hc4. Default-mode results must be identical."""
+    corrupting z / hc4. Results with ANSI explicitly OFF must be
+    identical (Spark 4 defaults ANSI on, so both modes are pinned)."""
     keys = ("q_stats_mannwhitney", "q_stats_kruskal")
-    plain = {k: get_query(k).fn(spark, SF01_DIR).collect() for k in keys}
-    prev = spark.conf.get("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    try:
-        for k in keys:
-            ansi_rows = get_query(k).fn(spark, SF01_DIR).collect()
-            assert ansi_rows == plain[k], f"{k}: ANSI mode changed results"
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+    def run(ansi: str) -> dict:
+        with conf_override(spark, {"spark.sql.ansi.enabled": ansi}):
+            return {k: get_query(k).fn(spark, SF01_DIR).collect() for k in keys}
+
+    plain, ansi = run("false"), run("true")
+    for k in keys:
+        assert ansi[k] == plain[k], f"{k}: ANSI mode changed results"
