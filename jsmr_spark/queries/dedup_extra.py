@@ -20,6 +20,7 @@ similarity.py.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -120,7 +121,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan branch (the same 8x diamond minhash had). n_docs rows only.
     total = sig.select(
         "doc_id", sum([F.col(f"b{j}") for j in range(SIMHASH_BITS)], F.lit(0).cast("long")).alias("simhash")
-    ).cache()
+    ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
     # Pigeonhole blocking: equi-join candidates on one-of-4 byte blocks
     # (see oracle comment) — no nested-loop, shuffle keyed on (blk, bval).
     # One posexplode emits all 4 block keys per doc in a single pass.
@@ -238,7 +239,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("doc_id", "lang", "source")
         .agg(F.collect_set("hv").alias("hvs"))
-        .cache()
+        .persist(StorageLevel.MEMORY_AND_DISK_DESER)
     )
     gr = gr_sets.select("doc_id", "lang", "source", F.explode("hvs").alias("hv"))
     sizes = gr_sets.select("doc_id", F.size("hvs").cast("long").alias("n"))

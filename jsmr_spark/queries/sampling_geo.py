@@ -22,6 +22,7 @@
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -663,7 +664,7 @@ def q_sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DSIR paper materializes between its two passes)
     db = bg.groupBy("doc_id", "lang", "source", "bucket").agg(
         F.count(F.lit(1)).cast("long").alias("n")
-    ).cache()
+    ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
     raw_b = db.groupBy("bucket").agg(F.sum("n").cast("long").alias("cr"))
     tgt_b = (
         db.where(F.col("lang") == DSIR_TARGET)

@@ -15,8 +15,9 @@ Every conf the engine sets is named once, in one of two places:
     ``local``). A key the deployment does not let it modify is skipped;
     any other failure raises, and the session is not marked configured.
   * ``get_spark``'s builder — only what cannot be set on a live
-    session: master, driver memory, UI, Arrow, the Python worker daemon
-    and the static ``spark.python.sql.dataFrameDebugging.enabled``.
+    session: master, driver memory, UI, Arrow, the Python worker daemon,
+    the static ``spark.python.sql.dataFrameDebugging.enabled`` and the
+    static ``spark.sql.codegen.cache.maxEntries``.
 
 Required confs and why (SURVEY.md §7.1):
   * ``spark.sql.legacy.parquet.nanosAsLong=true`` — the ``events``
@@ -33,11 +34,17 @@ Required confs and why (SURVEY.md §7.1):
     start (0.13-0.33 s per task; see pyworker.py).
   * ``spark.executorEnv.PYTHONPATH=<dir holding jsmr_spark/>`` — so the
     daemon imports whatever the driver's cwd.
+  * ``spark.sql.codegen.cache.maxEntries=CODEGEN_CACHE_ENTRIES`` — Spark
+    keeps compiled codegen classes in one JVM-wide cache of 100 entries
+    by default. A warm pass of the headline keys needs more than that,
+    so each pass evicted what the next one needed and recompiled about
+    100 classes with Janino; sized as below, a warm pass compiles none.
 
-The last two are SparkContext-static: a driver-owned session
-(``ensure_engine_confs``) cannot set them and keeps the stock
-``pyspark.daemon``. Results are identical; only the per-task cost of
-Python stages (mr.py, Python UDFs) differs.
+All three are static: a driver-owned session (``ensure_engine_confs``)
+cannot set them, so it keeps the stock ``pyspark.daemon`` and a codegen
+cache of 100 entries. Results are identical; only the per-task cost of
+Python stages (mr.py, Python UDFs) and the recompiles of a long-lived
+session differ.
 
 A temporary change to a conf goes through ``conf_override``, which puts
 back exactly the state it found: the old value, or unset.
@@ -87,6 +94,21 @@ def RUNTIME_CONFS() -> dict[str, str]:
     }
 
 
+# Entries of Spark's codegen class cache (spark.sql.codegen.cache.maxEntries,
+# default 100). Distinct classes one fresh session compiles (4 vCPU, AQE
+# off): 156 for a pass of the 11 headline keys (bench.py), 57 for
+# perfbench's mapreduce_sinks keys, 4539 for one sweep of all 380
+# canonical registry keys at sf0.01. At 100 entries warm headline passes
+# recompiled 95-130 classes each; at 400 they compile none. 400 is the
+# smallest round value with 2x headroom over the headline pass (Guava
+# splits the cache into 4 LRU segments of 100, so the headroom holds per
+# segment too). Retained after that sweep and full GCs, heap / Metaspace:
+# 147 / 220 MB at 100 entries, 149 / 222 MB at 400, 290 / 256 MB with
+# room for all 4539. Covering the registry would nearly double the
+# retained heap to save that sweep's cross-key recompiles (703 at 400,
+# 1718 at 100), which nothing times warm, so it is not covered.
+CODEGEN_CACHE_ENTRIES = 400
+
 # The directory holding jsmr_spark/ (see spark.executorEnv.PYTHONPATH).
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -120,6 +142,7 @@ def get_spark(app_name: str = "jsmr_spark") -> SparkSession:
         # no effect on plans or results. A static conf: only the
         # builder can set it.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )
     return ensure_engine_confs(spark)

@@ -290,3 +290,51 @@ def test_sink_dynamic_overwrite_leaves_unset_mode_unset(spark):
     assert s2.conf.get(key, None) is None
     assert get_query("sink_dynamic_overwrite").fn(s2, SF_DIR).count() > 0
     assert s2.conf.get(key, None) is None
+
+
+# --- Spark's codegen class cache (session.CODEGEN_CACHE_ENTRIES) -------------
+
+# bench.py's HEADLINE keys, the benchmark's headline workload.
+HEADLINE = (
+    "q_agg_q1",
+    "q_join_multiway",
+    "q_agg_grouping_sets",
+    "q_win_topk_group",
+    "q_stream_session",
+    "q_text_wordcount",
+    "q_text_tfidf",
+    "q_dedup_minhash",
+    "q_sim_cosine_topk",
+    "q_sim_threshold_pairs",
+    "q_json_funcs",
+)
+
+
+def _codegen_compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM: one per codegen cache miss."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_get_spark_sizes_codegen_cache(spark):
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        session.CODEGEN_CACHE_ENTRIES
+    )
+
+
+def test_warm_headline_pass_compiles_nothing(spark):
+    """A second pass of the headline keys, straight after the first,
+    finds every generated class still in the cache. Run with AQE off,
+    the configuration the benchmark times: AQE re-plans at run time, and
+    in one of two probes with it on a warm pass compiled 4 new classes
+    even with an unbounded cache."""
+    def headline_pass() -> int:
+        before = _codegen_compiles(spark)
+        for key in HEADLINE:
+            get_query(key).fn(spark, SF_DIR).toPandas()
+            spark.catalog.clearCache()
+        return _codegen_compiles(spark) - before
+
+    with conf_override(spark, {"spark.sql.adaptive.enabled": "false"}):
+        headline_pass()
+        assert headline_pass() == 0
