@@ -129,10 +129,6 @@ def load_table(
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 # session -> sf_dir whose views are currently registered; avoids
 # re-reading 10 parquet footers on every spark.sql-based query. Weak
 # keys: a stopped-and-collected session can never alias a new one (a

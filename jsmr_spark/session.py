@@ -66,7 +66,7 @@ def _aqe_default() -> str:
     100 TB story and costs nothing at cluster scale. At LOCAL bench
     scale (sub-second plans over ~MB inputs) AQE's per-stage replanning
     is pure fixed overhead — measured 1.5-2x wall on sub-second keys —
-    so the perf harnesses (bench.py, tools/ab_sweep.py) export
+    so the perf harnesses (bench.py, tools/bench_all.py) export
     SPARK_GRAFT_AQE=false; correctness paths leave it on."""
     return os.environ.get("SPARK_GRAFT_AQE", "true")
 

@@ -1,215 +1,321 @@
-"""Full M9 measurement: every oracle-keyed query on Spark (warm) and
-DuckDB at a given SF dir; writes BENCH.md (BASELINE.md protocol)."""
+"""The full-registry sweep: selected keys timed through DuckDB and
+Spark in ONE process, one SparkSession and one DuckDB connection,
+measured A/B/A after one untimed warm pass of both engines:
+
+  phase A1: every oracle once through DuckDB         -> duck_a1
+  phase B : every key built (build_s), then executed
+            once (first_s) through Spark             -> spark_s
+  phase A2: every oracle once through DuckDB         -> duck_a2
+  phase B2: every key re-executed on its PRE-BUILT
+            DataFrame, released per key              -> exec_s
+
+One pinned run, because per-key rows stitched from different sessions
+compare different machine states (the r4->r6 "DuckDB total halved"
+swing). B2 runs AFTER A2, not inside the A/B/A sandwich: the first r12
+attempt put it between B and A2, and the extra JVM residency +
+page-cache churn inflated DuckDB's A2 by 40-60 % on identical SQL.
+Phase B includes Python plan construction + Catalyst analysis (a
+~0.5 s/key fixed cost at local scale, the r11 diagnosis); B2 times
+scan+shuffle+agg+Arrow transfer only, the component a 100 TB
+projection extrapolates from (VERDICT r11 #3).
+
+The JSON's ratios count only engine-comparable keys (an oracle, and
+not sink_/source_/stream_, whose ratio prices a side effect, not the
+engine) over mean(A1, A2); |A1 - A2| brackets the within-run noise on
+the denominator. Those keys run all phases first, on their own; the
+other selected keys then get their own warm pass and phases. os.getloadavg() at every phase boundary (`load`) and
+per-phase CPU steal (`steal_pct`, /proc/stat field 8: hypervisor time
+taken from this VM) let a breached run carry its own evidence of
+whether the slowdown was exogenous.
+
+Usage:
+  python tools/bench_all.py                  every oracle key -> BENCH.md
+  python tools/bench_all.py sink_ source_ stream_
+  python tools/bench_all.py q_agg_q1 q_tpch_q5
+Positional args name canonical keys or key prefixes (rows-only keys
+get no DuckDB time). A run with a key filter or AB_EXCLUDE prints a
+markdown table of its keys instead of rewriting BENCH.md. Every run
+prints one JSON line last.
+
+Environment: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1);
+AB_EXCLUDE, comma-separated keys to drop, where the tokens `eval_tier`
+and `quadratic_oracle` expand to exactly the registry's flag sets (the
+10x protocol is AB_EXCLUDE=eval_tier,quadratic_oracle: those keys
+have a by-design-quadratic DuckDB oracle, and excluding them is
+conservative for the ratio — Spark's block-GEMM beats DuckDB ~10x on
+them at sf0.1); AB_WARM=spark warms only the Spark side (JVM and
+codegen caches need it; DuckDB's only warm-up is the OS page cache,
+which its A1 pass both builds and pays for — biasing A1 up, i.e.
+against Spark's ratio: conservative).
+"""
+
+from __future__ import annotations
+
+import argparse
 import json
 import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 from jsmr_spark.io import TABLES
 from jsmr_spark.registry import canonical_specs
 from jsmr_spark.session import get_spark
 
+BENCH_MD = os.path.join(ROOT, "BENCH.md")
+SIDE_EFFECT = ("sink_", "source_", "stream_")
 
-def timed(fn, runs=3):
-    best = float("inf")
-    for _ in range(runs):
+
+def comparable(name: str, spec) -> bool:
+    """A key the ratio counts: an oracle, and no side effect."""
+    return spec.oracle is not None and not name.startswith(SIDE_EFFECT)
+
+
+def select(specs: dict, patterns: list[str], exclude: set[str]) -> list[str]:
+    """Keys named by `patterns` (exact key, else prefix), or every oracle
+    key when there are none, minus `exclude`. Raises KeyError naming a
+    pattern that matches nothing."""
+    if not patterns:
+        names = {n for n, s in specs.items() if s.oracle is not None}
+    else:
+        names = set()
+        for p in patterns:
+            hit = {p} if p in specs else {n for n in specs if n.startswith(p)}
+            if not hit:
+                raise KeyError(p)
+            names |= hit
+    return sorted(names - exclude)
+
+
+def excluded(specs: dict, raw: str) -> set[str]:
+    """AB_EXCLUDE's keys, with the `eval_tier` / `quadratic_oracle`
+    tokens expanded to exactly the registry's flag sets (VERDICT r9 #3:
+    nothing excluded by prose alone)."""
+    out = set(filter(None, raw.split(",")))
+    for flag in ("eval_tier", "quadratic_oracle"):
+        if flag in out:
+            out.discard(flag)
+            out |= {n for n, s in specs.items() if getattr(s, flag)}
+    return out
+
+
+def _stat() -> tuple[int, int]:
+    """(steal jiffies, total jiffies) from /proc/stat."""
+    with open("/proc/stat") as fh:
+        vals = [int(x) for x in fh.readline().split()[1:]]
+    return (vals[7] if len(vals) > 7 else 0), sum(vals)
+
+
+def sweep(spark, con, specs: dict, sf_dir: str, warm_duck: bool = True):
+    """Run the warm pass and phases A1, B, A2, B2 over `specs`.
+
+    Returns (times, env): times[key] holds build_s, first_s and exec_s,
+    plus duck_a1 and duck_a2 for keys with an oracle; env holds the
+    per-phase `load` and `steal_pct`."""
+    for n, s in specs.items():
+        if warm_duck and s.oracle is not None:
+            con.execute(s.oracle).df()
+        s.fn(spark, sf_dir).toPandas()
+    print("warm pass done", file=sys.stderr, flush=True)
+
+    times: dict[str, dict[str, float]] = {n: {} for n in specs}
+
+    def duck(field):
+        for n, s in specs.items():
+            if s.oracle is not None:
+                t0 = time.perf_counter()
+                con.execute(s.oracle).df()
+                times[n][field] = time.perf_counter() - t0
+
+    def spark_first():
+        for n, s in specs.items():
+            t0 = time.perf_counter()
+            df = s.fn(spark, sf_dir)
+            t1 = time.perf_counter()
+            df.toPandas()
+            times[n]["build_s"] = t1 - t0
+            times[n]["first_s"] = time.perf_counter() - t1
+
+    def spark_steady():
+        # Per key: build, execute once untimed, time ONE re-execution of
+        # the same object, release it. Holding all built DataFrames at
+        # once OOM'd the 8g driver JVM at the 10x probe scale (r12).
+        for n, s in specs.items():
+            df = s.fn(spark, sf_dir)
+            df.toPandas()
+            t0 = time.perf_counter()
+            df.toPandas()
+            times[n]["exec_s"] = time.perf_counter() - t0
+            del df
+
+    env = {"load": {"start": round(os.getloadavg()[0], 2)}, "steal_pct": {}}
+    last = _stat()
+    for phase, run in (
+        ("a1", lambda: duck("duck_a1")),
+        ("b", spark_first),
+        ("a2", lambda: duck("duck_a2")),
+        ("b2", spark_steady),
+    ):
         t0 = time.perf_counter()
-        fn()
-        best = min(best, time.perf_counter() - t0)
-    return best
-
-
-def cache_from_md(cache_path: str) -> None:
-    """Seed the resume cache from the committed BENCH.md rows, so a run
-    after adding N new keys measures ONLY those keys instead of
-    repeating the full ~45-minute sweep. Usage:
-        python tools/bench_all.py --cache-from-md /tmp/cache.json
-        JSMR_BENCH_CACHE=/tmp/cache.json python tools/bench_all.py
-    """
-    import re
-
-    bench_md = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH.md"
-    )
-    cache = {}
-    for line in open(bench_md):
-        # Only the per-key table at the top of the file is the cache
-        # source: the appended sections (pinned A/B/A, side-effect tier
-        # trend) contain OTHER tables whose first five cells can match
-        # a per-key row shape — the round-11 rebuild caught the trend
-        # rows (| key | r9_wall | r10_wall | r9_exec | r10_exec | x |)
-        # silently overwriting ~30 sink_/stream_ keys with wrong
-        # columns. Stop at the first appended section header.
-        if line.startswith("## "):
-            break
-        # any per-key row: a bare name plus four numeric cells (the
-        # numeric groups already exclude the header and **TOTAL** rows,
-        # and a fixed prefix list would silently drop future families)
-        m = re.match(
-            r"\| (\S+) \| ([\d.]+) \| ([\d.]+) \| ([\d.]+) \| [\d.]+ \|",
-            line,
+        run()
+        wall = time.perf_counter() - t0
+        now = _stat()
+        dt = now[1] - last[1]
+        env["load"][phase] = round(os.getloadavg()[0], 2)
+        env["steal_pct"][phase] = (
+            round(100.0 * (now[0] - last[0]) / dt, 2) if dt else 0.0
         )
-        if m:
-            cache[m.group(1)] = [float(m.group(2)), float(m.group(3)), float(m.group(4))]
-    with open(cache_path, "w") as f:
-        json.dump(cache, f)
-    print(f"seeded {len(cache)} keys from BENCH.md -> {cache_path}")
+        last = now
+        print(f"{phase:2s} {wall:8.2f}s  load {env['load'][phase]}  steal "
+              f"{env['steal_pct'][phase]}%", file=sys.stderr, flush=True)
+    return times, env
 
 
-def main():
+def summary(times: dict, specs: dict, sf_dir: str, env: dict) -> dict:
+    """The A/B/A JSON over the engine-comparable keys of `times`."""
+    keys = [n for n in times if comparable(n, specs[n])]
+    a1, a2, b2 = (sum(times[n][f] for n in keys) for f in ("duck_a1", "duck_a2", "exec_s"))
+    b = sum(times[n]["build_s"] + times[n]["first_s"] for n in keys)
+    mean = (a1 + a2) / 2
+
+    def ratio(x, digits=2):
+        return round(x / mean, digits) if mean else None
+
+    return {
+        "sf_dir": sf_dir,
+        "n_keys": len(keys),
+        "duck_total_a1": round(a1, 2),
+        "duck_total_a2": round(a2, 2),
+        "spark_total": round(b, 2),
+        "spark_total_steady": round(b2, 2),
+        "ratio_vs_mean": ratio(b),
+        "ratio_steady_vs_mean": ratio(b2),
+        "denominator_spread_pct": ratio(abs(a1 - a2) * 100, 1),
+        "load": env["load"],
+        "steal_pct": env["steal_pct"],
+    }
+
+
+def table(times: dict) -> tuple[list[tuple], str]:
+    """Per-key (key, duckdb_s, spark_s, exec_s, ratio, build_s, first_s)
+    records, worst spark/duckdb ratio first, and their markdown table.
+    duckdb_s = min(A1, A2); it and the ratio are None for a rows-only
+    key."""
+    recs = []
+    for n, t in times.items():
+        s = t["build_s"] + t["first_s"]
+        d = min(t["duck_a1"], t["duck_a2"]) if "duck_a1" in t else None
+        r = None if d is None else (s / d if d > 0 else float("inf"))
+        recs.append((n, d, s, t["exec_s"], r, t["build_s"], t["first_s"]))
+    recs.sort(key=lambda x: (x[4] is None, -(x[4] or 0)))
+    # 6-dp timings: at 3 dp a millisecond-scale key's ratio
+    # recomputed from the cells picks up ~25% rounding error (ADVICE r9).
+    lines = ["| key | duckdb_s | spark_s | exec_s | ratio | build_s | first_s |",
+             "|---|---|---|---|---|---|---|"]
+    for n, d, s, e, r, build, first in recs:
+        duck, ratio = ("-", "-") if d is None else (f"{d:.6f}", f"{r:.2f}")
+        lines.append(
+            f"| {n} | {duck} | {s:.6f} | {e:.6f} | {ratio} | {build:.6f} | {first:.6f} |"
+        )
+    return recs, "\n".join(lines)
+
+
+def write_bench_md(times: dict, sf_dir: str) -> None:
+    """Rewrite BENCH.md's measured parts: the title, the protocol
+    paragraph and the per-key table with its totals. The curated
+    reading notes between protocol and table, and every section from
+    the first `## ` header on (the appended A/B/A and trend records),
+    are kept."""
+    recs, md = table(times)
+    old = open(BENCH_MD).read() if os.path.exists(BENCH_MD) else ""
+    head, _, rest = old.partition("| key |")
+    notes = head.split("\n\n")[2:-1]
+    tail = rest[rest.index("\n## ") + 1 :] if "\n## " in rest else ""
+    title = (
+        f"# BENCH — measured at {sf_dir} (one same-session A/B/A run after"
+        f" a warm pass, local[{os.cpu_count()}])"
+    )
+    protocol = (
+        "Protocol: BASELINE.md, measured by tools/bench_all.py. Sorted by\n"
+        "ratio (spark/duckdb), worst first. duckdb_s = min(A1, A2),\n"
+        "spark_s = phase B (build_s + first_s: build, then first execution),\n"
+        "exec_s = phase B2. (Protocol note: rounds 3-13 published best-of-3\n"
+        "per key after a warm pass, stitched across sessions by a resume\n"
+        "cache; rounds 1-2 were best-of-2 including a cold first run.)"
+    )
+    totals = []
+    q_rows = [r for r in recs if not r[0].startswith(SIDE_EFFECT)]
+    for label, rs in (
+        ("**TOTAL**", recs),
+        (f"**TOTAL (engine-comparable: {len(q_rows)} pure-query keys,"
+         " side-effect rows excluded)**", q_rows),
+    ):
+        d, sp, e = (sum(r[i] for r in rs) for i in (1, 2, 3))
+        totals.append(f"| {label} | {d:.3f} | {sp:.3f} | {e:.3f} | {sp/d:.2f} | | |")
+    with open(BENCH_MD, "w") as f:
+        f.write("\n\n".join([title, protocol, *notes, "\n".join([md, *totals])]))
+        f.write("\n")
+        if tail:
+            f.write("\n" + tail)
+
+
+def main(argv: list[str] | None = None) -> None:
+    parser = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    parser.add_argument(
+        "keys", nargs="*", help="canonical keys or key prefixes (default: every oracle key)"
+    )
+    args = parser.parse_args(argv)
+    specs = canonical_specs()
+    exclude = excluded(specs, os.environ.get("AB_EXCLUDE", ""))
+    try:
+        names = select(specs, args.keys, exclude)
+    except KeyError as e:
+        parser.error(f"no canonical key matches {e.args[0]!r}")
+    if exclude:
+        print(f"excluded ({len(exclude)}): {','.join(sorted(exclude))}",
+              file=sys.stderr, flush=True)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    print(f"{len(names)} keys at {sf_dir}", file=sys.stderr, flush=True)
+
+    # Perf harness: AQE off at local bench scale (see bench.py for the
+    # measured rationale); override with SPARK_GRAFT_AQE=true to compare.
+    os.environ.setdefault("SPARK_GRAFT_AQE", "false")
     spark = get_spark("jsmr_bench_all")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
-    specs = canonical_specs()
-    # warm up JVM
-    specs["q_agg_q1"].fn(spark, SF_DIR).collect()
+        path = f"{sf_dir}/{t}.parquet"
+        # Spark-staged tables (the 10x probe dir) are DIRECTORIES of
+        # part files; the fixture tables are single files.
+        if os.path.isdir(path):
+            path = f"{path}/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
 
-    # Per-key cache so a wall-clock-limited harness can resume the
-    # sweep across invocations (JSMR_BENCH_CACHE=/path.json). BENCH.md
-    # is only written once every oracle key is present.
-    cache_path = os.environ.get("JSMR_BENCH_CACHE")
-    cache: dict[str, list[float]] = {}
-    if cache_path and os.path.exists(cache_path):
-        with open(cache_path) as f:
-            cache = json.load(f)
-
-    todo = {n: s for n, s in specs.items() if s.oracle is not None}
-    for name, spec in todo.items():
-        if name in cache and len(cache[name]) == 3:
-            continue
-        duck_s = timed(lambda: con.execute(spec.oracle).df())
-        spark_s = timed(lambda: spec.fn(spark, SF_DIR).toPandas())
-        # Steady-state execution (VERDICT r3 #5): re-execute the SAME
-        # DataFrame, so plan build/Catalyst/codegen are excluded — the
-        # component that grows with data size. For eager side-effect keys
-        # (sink_*/source_*/stream_*) the writes/micro-batches run at
-        # DataFrame-BUILD time, so exec_s there only re-reads the few-row
-        # result — wall_s stays the honest number for those rows (the
-        # by-design asymmetry BENCH.md documents).
-        df = spec.fn(spark, SF_DIR)
-        df.toPandas()
-        exec_s = timed(lambda: df.toPandas())
-        cache[name] = [duck_s, spark_s, exec_s]
-        print(
-            f"{name:28s} duck={duck_s:7.3f}s spark={spark_s:7.3f}s "
-            f"exec={exec_s:7.3f}s ratio={spark_s/duck_s:6.2f}",
-            flush=True,
-        )
-        if cache_path:
-            with open(cache_path, "w") as f:
-                json.dump(cache, f)
-
-    missing = sorted(n for n in todo if n not in cache or len(cache[n]) != 3)
-    if missing:
-        print(f"partial: {len(todo)-len(missing)}/{len(todo)} keys; rerun to continue ({len(missing)} left)", flush=True)
-        return
-
-    rows = [
-        (name, d, s, e, (s / d if d > 0 else float("inf")))
-        for name, (d, s, e) in cache.items()
-        if name in todo
-    ]
-    rows.sort(key=lambda r: -r[4])
-    # Preserve the hand-curated pinned-A/B/A section (tools/ab_sweep.py
-    # results) across regenerations of the per-key table.
-    bench_path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH.md"
-    )
-    ab_marker = "## Pinned same-session A/B/A"
-    ab_tail = ""
-    if os.path.exists(bench_path):
-        old = open(bench_path).read()
-        if ab_marker in old:
-            ab_tail = old[old.index(ab_marker) :]
-    with open(bench_path, "w") as f:
-        f.write(f"# BENCH — measured at {SF_DIR} (best of 3, warm shared session, local[{os.cpu_count()}])\n\n")
-        f.write("Protocol: BASELINE.md. Sorted by ratio (spark/duckdb), worst first.\n")
-        f.write("(Protocol note: since round 3, timings are best-of-3 after a warm\n")
-        f.write("pass; rounds 1-2 were best-of-2 including a cold first run, so\n")
-        f.write("cross-round totals compare a slightly more favorable steady state\n")
-        f.write("from r3 on.)\n\n")
-        f.write("Reading the ratios: DuckDB executes in-process with ~1-10ms floor;\n")
-        f.write("Spark local mode pays ~0.1-0.3s per query for task scheduling and\n")
-        f.write("the py4j/Arrow boundary, so sub-second queries show large ratios\n")
-        f.write("that are FIXED OVERHEAD, not throughput (see SCALE.md: 10x data ->\n")
-        f.write("0.2-2.5x time for everything but the by-design-quadratic all-pairs\n")
-        f.write("edge graph). Data-heavy queries (pairs/GEMM, top-k, clusters) run\n")
-        f.write("at or beyond DuckDB parity.\n\n")
-        f.write("exec_s re-executes the SAME DataFrame (plan build/Catalyst/codegen\n")
-        f.write("excluded): the steady-state data work a 100 TB projection should\n")
-        f.write("extrapolate from. Where exec_s << spark_s, the wall is local-mode\n")
-        f.write("fixed overhead that amortizes to zero on a long-lived cluster.\n\n")
-        f.write("Cross-round totals carry environment noise in BOTH columns:\n")
-        f.write("round 6 A/B'd the round-3 tree interleaved with the current one\n")
-        f.write("on the same box — identical r3 code measured 6.3-8.2s on the\n")
-        f.write("11-query headline (spanning every recorded round total), and\n")
-        f.write("DuckDB's full-sweep total measured ~59s in r6 vs ~108s recorded\n")
-        f.write("in r4 with materially identical oracle SQL. Treat round-over-\n")
-        f.write("round TOTAL deltas under ~2x as environment until a per-key\n")
-        f.write("exec_s regression confirms them; exec_s is the stable signal.\n\n")
-        f.write("The sink_*/source_*/stream_rate_source rows compare asymmetric\n")
-        f.write("work BY DESIGN: Spark writes + re-reads real files (or runs real\n")
-        f.write("micro-batches) while the oracle only recomputes the expected\n")
-        f.write("values from the source table to VERIFY that round trip — their\n")
-        f.write("ratios measure the cost of the side effect, not engine speed. For\n")
-        f.write("those keys the side effect runs at DataFrame-BUILD time, so exec_s\n")
-        f.write("only re-reads the few-row verification result; spark_s is the\n")
-        f.write("honest cost of the side effect itself.\n\n")
-        f.write("The MR-compat rows (mr_api, q_mr_join) measure the per-record\n")
-        f.write("Python lane BY DESIGN: the compat API exists so a JsMr job ports\n")
-        f.write("verbatim, and its docstrings point at the Tier-B DataFrame twin\n")
-        f.write("(same computation, JVM-side) that every real query should use —\n")
-        f.write("q_text_wordcount and q_join_inner/q_join_broadcast run the same\n")
-        f.write("work at two orders of magnitude lower cost in this table.\n\n")
-        f.write("| key | duckdb_s | spark_s | exec_s | ratio |\n|---|---|---|---|---|\n")
-        # 6-dp timings: the resume cache reseeds from these cells
-        # (cache_from_md), and at 3 dp a millisecond-scale key's
-        # recomputed ratio picked up ~25% rounding error (ADVICE r9) —
-        # micro-second precision keeps reseeded ratios faithful to the
-        # original measurement.
-        for name, d, s, e, r in rows:
-            f.write(f"| {name} | {d:.6f} | {s:.6f} | {e:.6f} | {r:.2f} |\n")
-        tot_d = sum(r[1] for r in rows); tot_s = sum(r[2] for r in rows)
-        tot_e = sum(r[3] for r in rows)
-        f.write(f"| **TOTAL** | {tot_d:.3f} | {tot_s:.3f} | {tot_e:.3f} | {tot_s/tot_d:.2f} |\n")
-        # Engine-comparable subtotal: drop the BY-DESIGN asymmetric
-        # side-effect keys (sink_*/source_*/stream_* run real writes /
-        # micro-batches on Spark while the oracle only recomputes the
-        # expected values — their ratio prices the side effect, not the
-        # engine). What remains is the pure-query surface both engines
-        # genuinely execute.
-        def _sidefx(name: str) -> bool:
-            return name.startswith(("sink_", "source_", "stream_"))
-        q_rows = [r for r in rows if not _sidefx(r[0])]
-        q_d = sum(r[1] for r in q_rows); q_s = sum(r[2] for r in q_rows)
-        q_e = sum(r[3] for r in q_rows)
-        f.write(
-            f"| **TOTAL (engine-comparable: {len(q_rows)} pure-query keys,"
-            f" side-effect rows excluded)** | {q_d:.3f} | {q_s:.3f} |"
-            f" {q_e:.3f} | {q_s/q_d:.2f} |\n"
-        )
-        if ab_tail:
-            f.write("\n" + ab_tail)
-    print(json.dumps({
-        "total_duck": round(tot_d,3), "total_spark": round(tot_s,3),
-        "total_exec": round(tot_e,3), "n": len(rows),
-        "query_duck": round(q_d,3), "query_spark": round(q_s,3),
-        "query_exec": round(q_e,3), "n_query": len(q_rows)}))
+    # The ratio's keys run their own A/B/A first, so nothing another key
+    # leaves behind in the session (written files, stopped streams, their
+    # heap) is in their numbers; the other selected keys follow.
+    warm_duck = os.environ.get("AB_WARM", "both") != "spark"
+    times, env = {}, None
+    for group in (
+        [n for n in names if comparable(n, specs[n])],
+        [n for n in names if not comparable(n, specs[n])],
+    ):
+        if group:
+            t, e = sweep(spark, con, {n: specs[n] for n in group}, sf_dir, warm_duck)
+            times.update(t)
+            env = env or e
+    if args.keys or exclude:
+        print(table(times)[1])
+    else:
+        write_bench_md(times, sf_dir)
+    print(json.dumps(summary(times, specs, sf_dir, env)))
 
 
 if __name__ == "__main__":
-    if "--cache-from-md" in sys.argv:
-        idx = sys.argv.index("--cache-from-md")
-        if idx + 1 >= len(sys.argv):
-            sys.exit("--cache-from-md requires a cache-file path")
-        cache_from_md(sys.argv[idx + 1])
-    else:
-        main()
+    main()

@@ -10,6 +10,7 @@ grown side) shows up immediately as a >>10x jump.
 
 from __future__ import annotations
 
+import argparse
 import os
 import shutil
 import sys
@@ -307,8 +308,8 @@ def patch_rows(rows):
     hand-curated narrative intact — only the full run rewrites it.
     """
     text = open(SCALE_MD).read().splitlines()
-    for key, (small, big, factor) in rows.items():
-        row = f"| {key} | {small:.2f} | {big:.2f} | {factor:.1f} |"
+    for key, probe in rows.items():
+        row = _row(key, probe)
         hits = [i for i, l in enumerate(text) if l.startswith(f"| {key} |")]
         if hits:
             text[hits[0]] = row
@@ -319,81 +320,133 @@ def patch_rows(rows):
         f.write("\n".join(text) + "\n")
 
 
-def _sem_control(spark):
-    """Frozen-k CONTROL for SemDeDup (round 7): the registered key now
-    computes k = clamp(ceil(n/32), 16, 4096) inside the DAG, so its own
-    probe row measures the adaptive rule. This control re-runs the 10x
-    corpus with the OLD frozen k=16 to show what the rule prevents
-    (mean cluster size growing with n, within-cluster GEMM ~N^2/k)."""
-    from jsmr_spark.queries.dedup_extra import sem_dedup_frame
-
+def _probe(name, small_fn, big_fn):
+    """Time small_fn() then big_fn() (each returns a DataFrame, collected
+    with toPandas) and print the pair; returns (small, big, factor)."""
     t0 = time.perf_counter()
-    sem_dedup_frame(spark, BASE, k_frozen=16).toPandas()
+    small_fn().toPandas()
     small = time.perf_counter() - t0
     t0 = time.perf_counter()
-    sem_dedup_frame(spark, OUT_DIR, k_frozen=16).toPandas()
+    big_fn().toPandas()
     big = time.perf_counter() - t0
     factor = big / small if small else float("inf")
-    name = "q_dedup_semantic frozen16@10x (control)"
     print(f"{name:24s} {small:7.2f}s -> {big:7.2f}s  x{factor:.1f}", flush=True)
-    return (small, big, factor)
+    return small, big, factor
 
 
-def _nb_control(spark):
-    """Vocabulary-held CONTROL for naive Bayes (VERDICT r8 #4): the 10x
-    staging tags every 5th token with an r<k>x prefix (so dedup keys
-    don't measure clone-grown output), inflating the vocab ~2.8x and
-    with it the (langs x vocab) model build — the x10.9 probe row
-    measures that staging artifact on top of the plan. This control
-    strips the tag before tokenizing AT BOTH SCALES, holding the
-    vocabulary at its base size: a flat factor here proves the
-    per-token cost is linear."""
+def _row(name, probe):
+    small, big, factor = probe
+    return f"| {name} | {small:.2f} | {big:.2f} | {factor:.1f} |"
+
+
+def _controls(spark):
+    """Controls keyed by the probe key they control, run after it:
+    (row name, sf0.1 frame, 10x frame). Each holds fixed what the 10x
+    staging grows by design, so its factor shows the plan's own
+    scaling."""
+    from jsmr_spark.queries import ann
+    from jsmr_spark.queries.dedup_extra import sem_dedup_frame
+    from jsmr_spark.queries.graph import triangles_frame
     from jsmr_spark.queries.ml_cluster import naive_bayes_frame
+    from jsmr_spark.queries.pipeline import clusters_lsh_frame
 
     tag = r"(^|(?<=\s))r[0-9]{1,3}x"
-    t0 = time.perf_counter()
-    naive_bayes_frame(spark, BASE, strip_token_tag=tag).toPandas()
-    small = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    naive_bayes_frame(spark, OUT_DIR, strip_token_tag=tag).toPandas()
-    big = time.perf_counter() - t0
-    factor = big / small if small else float("inf")
-    name = "q_ml_naive_bayes vocab-held@10x (control)"
-    print(f"{name:24s} {small:7.2f}s -> {big:7.2f}s  x{factor:.1f}", flush=True)
-    return (small, big, factor)
+    return {
+        # frozen-plane CONTROL (round 6): the registered key now applies
+        # planes = max(8, ceil(log2(n))) itself (see clusters_lsh_frame),
+        # so its own probe row measures the adaptive rule. This control
+        # re-runs the 10x corpus with the OLD frozen 8 planes to show
+        # what the rule prevents (quadratic candidate growth).
+        "q_dedup_clusters_lsh": (
+            "q_dedup_clusters_lsh frozen8@10x (control)",
+            lambda: clusters_lsh_frame(spark, BASE, ann.planes_for(8)),
+            lambda: clusters_lsh_frame(spark, OUT_DIR, ann.planes_for(8)),
+        ),
+        # Frozen-k CONTROL for SemDeDup (round 7): the registered key now
+        # computes k = clamp(ceil(n/32), 16, 4096) inside the DAG, so its
+        # own probe row measures the adaptive rule. This control re-runs
+        # the 10x corpus with the OLD frozen k=16 to show what the rule
+        # prevents (mean cluster size growing with n, within-cluster
+        # GEMM ~N^2/k).
+        "q_dedup_semantic": (
+            "q_dedup_semantic frozen16@10x (control)",
+            lambda: sem_dedup_frame(spark, BASE, k_frozen=16),
+            lambda: sem_dedup_frame(spark, OUT_DIR, k_frozen=16),
+        ),
+        # fixed-eval-set CONTROL for the ANN recall report: the registered
+        # key's query set is every RECALL_QMODth vector, so at 10x rows the
+        # exact ground-truth side is ~100x pairs (10x queries x 10x corpus)
+        # BY DESIGN — the probe factor measures the scaled eval set, not
+        # the plan. A deployment holds the eval slice constant; this
+        # control re-runs the 10x corpus with qmod*10 (same ~query count
+        # as the sf0.1 run) to show the per-query cost scaling ~linearly.
+        "q_sim_recall_report": (
+            "q_sim_recall_report qmod*10@10x (fixed eval set)",
+            lambda: ann.recall_report_frame(spark, BASE, ann.RECALL_QMOD),
+            lambda: ann.recall_report_frame(spark, OUT_DIR, ann.RECALL_QMOD * REPLICAS),
+        ),
+        # Vocabulary-held CONTROL for naive Bayes (VERDICT r8 #4): the 10x
+        # staging tags every 5th token with an r<k>x prefix (so dedup keys
+        # don't measure clone-grown output), inflating the vocab ~2.8x and
+        # with it the (langs x vocab) model build — the x10.9 probe row
+        # measures that staging artifact on top of the plan. This control
+        # strips the tag before tokenizing AT BOTH SCALES, holding the
+        # vocabulary at its base size: a flat factor here proves the
+        # per-token cost is linear.
+        "q_ml_naive_bayes": (
+            "q_ml_naive_bayes vocab-held@10x (control)",
+            lambda: naive_bayes_frame(spark, BASE, strip_token_tag=tag),
+            lambda: naive_bayes_frame(spark, OUT_DIR, strip_token_tag=tag),
+        ),
+        # radius ~ 1/sqrt(density) demonstration for the spatial tier: the
+        # 10x staging multiplies POINT DENSITY (same 1000 km domain, 10x
+        # points), so fixed-radius edges grow ~100x and wedges worse — the
+        # probe factor measures the synthetic domain's densification, not
+        # the plan. Real geo growth adds AREA at ~constant density; the
+        # equivalent control is radius/sqrt(10), which holds expected
+        # neighbors per point constant. Probe-only: the registered key and
+        # oracle keep TRI_RADIUS.
+        "q_graph_triangles": (
+            "q_graph_triangles r/sqrt10@10x",
+            lambda: triangles_frame(spark, BASE),
+            lambda: triangles_frame(spark, OUT_DIR, 31_623),
+        ),
+        # Fixed-eval-panel CONTROL for the IVF tuning curve — the
+        # q_sim_recall_report control applied to its sibling: the
+        # registered key's query panel is every RECALL_QMODth vector, so
+        # at 10x rows the exact ground-truth side is ~100x pairs BY
+        # DESIGN. This control re-runs the 10x corpus with qmod*10 (same
+        # ~panel size as sf0.1) — the deployment shape, where the tuning
+        # panel is a constant-size sample.
+        "q_sim_ann_tune": (
+            "q_sim_ann_tune fixed-panel@10x (control)",
+            lambda: ann.ann_tune_frame(spark, BASE, ann.RECALL_QMOD),
+            lambda: ann.ann_tune_frame(spark, OUT_DIR, ann.RECALL_QMOD * REPLICAS),
+        ),
+    }
 
 
-def _tune_control(spark):
-    """Fixed-eval-panel CONTROL for the IVF tuning curve — the
-    q_sim_recall_report control applied to its sibling: the registered
-    key's query panel is every RECALL_QMODth vector, so at 10x rows the
-    exact ground-truth side is ~100x pairs BY DESIGN. This control
-    re-runs the 10x corpus with qmod*10 (same ~panel size as sf0.1) —
-    the deployment shape, where the tuning panel is a constant-size
-    sample."""
-    from jsmr_spark.queries.ann import RECALL_QMOD, ann_tune_frame
+def main(argv=None):
+    parser = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    parser.add_argument(
+        "--keys",
+        nargs="+",
+        metavar="KEY",
+        help="probe only these keys (and their controls) and splice their "
+        "rows into SCALE.md, keeping its narrative",
+    )
+    subset = parser.parse_args(argv).keys
 
-    t0 = time.perf_counter()
-    ann_tune_frame(spark, BASE, RECALL_QMOD).toPandas()
-    small = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    ann_tune_frame(spark, OUT_DIR, RECALL_QMOD * REPLICAS).toPandas()
-    big = time.perf_counter() - t0
-    factor = big / small if small else float("inf")
-    name = "q_sim_ann_tune fixed-panel@10x (control)"
-    print(f"{name:24s} {small:7.2f}s -> {big:7.2f}s  x{factor:.1f}", flush=True)
-    return (small, big, factor)
-
-
-def main():
     from jsmr_spark import io as jio
     from jsmr_spark.registry import canonical_specs
     from jsmr_spark.session import get_spark
 
-    subset = None
-    if "--keys" in sys.argv:
-        subset = sys.argv[sys.argv.index("--keys") + 1 :]
-        assert subset, "--keys requires at least one key"
+    specs = canonical_specs()
+    unknown = [k for k in subset or () if k not in specs]
+    if unknown:
+        parser.error(f"unknown keys: {' '.join(unknown)}")
 
     spark = get_spark("scale_probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -413,7 +466,6 @@ def main():
 
     common.t = lambda sp, sf, name: load_patched(sp, sf, name)
 
-    specs = canonical_specs()
     lines = ["# SCALE — 10x probe (tools/scale_probe.py)", "",
              f"sf0.1 replicated {REPLICAS}x with shifted keys and per-replica content",
              "perturbation (tagged tokens / masked embedding dims — verbatim replicas",
@@ -454,101 +506,24 @@ def main():
         for name in subset:
             specs[name].fn(spark, BASE).toPandas()
 
-    factors = {}
     rows = {}
     for name in subset if subset is not None else PROBES:
         fn = specs[name].fn
-        t0 = time.perf_counter(); fn(spark, BASE).toPandas(); small = time.perf_counter() - t0
-        t0 = time.perf_counter(); fn(spark, OUT_DIR).toPandas(); big = time.perf_counter() - t0
-        factor = big / small if small else float("inf")
-        factors[name] = factor
-        rows[name] = (small, big, factor)
-        print(f"{name:24s} {small:7.2f}s -> {big:7.2f}s  x{factor:.1f}", flush=True)
-        lines.append(f"| {name} | {small:.2f} | {big:.2f} | {factor:.1f} |")
+        rows[name] = _probe(
+            name, lambda: fn(spark, BASE), lambda: fn(spark, OUT_DIR)
+        )
+        lines.append(_row(name, rows[name]))
+    for key, (name, small_fn, big_fn) in _controls(spark).items():
+        if key in rows:
+            rows[name] = _probe(name, small_fn, big_fn)
+            lines.append(_row(name, rows[name]))
 
     if subset is not None:
-        if "q_dedup_semantic" in subset:
-            rows["q_dedup_semantic frozen16@10x (control)"] = _sem_control(spark)
-        if "q_ml_naive_bayes" in subset:
-            rows["q_ml_naive_bayes vocab-held@10x (control)"] = _nb_control(spark)
-        if "q_sim_ann_tune" in subset:
-            rows["q_sim_ann_tune fixed-panel@10x (control)"] = _tune_control(spark)
         patch_rows(rows)
         return
 
-    # frozen-plane CONTROL (round 6): the registered key now applies
-    # planes = max(8, ceil(log2(n))) itself (see clusters_lsh_frame),
-    # so its own probe row above measures the adaptive rule. This
-    # control re-runs the 10x corpus with the OLD frozen 8 planes to
-    # show what the rule prevents (quadratic candidate growth).
-    from jsmr_spark.queries.ann import planes_for
-    from jsmr_spark.queries.pipeline import clusters_lsh_frame
-
-    t0 = time.perf_counter()
-    clusters_lsh_frame(spark, BASE, planes_for(8)).toPandas()
-    small = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    clusters_lsh_frame(spark, OUT_DIR, planes_for(8)).toPandas()
-    big = time.perf_counter() - t0
-    frozen_ctl = big / small if small else float("inf")
-    name = "q_dedup_clusters_lsh frozen8@10x (control)"
-    print(f"{name:24s} {small:7.2f}s -> {big:7.2f}s  x{frozen_ctl:.1f}", flush=True)
-    lines.append(f"| {name} | {small:.2f} | {big:.2f} | {frozen_ctl:.1f} |")
-
-    # frozen-k CONTROL for SemDeDup (round 7) — same pattern as the
-    # planes control above; the registered key is corpus-adaptive.
-    small, big, factor = _sem_control(spark)
-    lines.append(
-        f"| q_dedup_semantic frozen16@10x (control) | {small:.2f} | {big:.2f} | {factor:.1f} |"
-    )
-
-    # fixed-eval-set CONTROL for the ANN recall report: the registered
-    # key's query set is every RECALL_QMODth vector, so at 10x rows the
-    # exact ground-truth side is ~100x pairs (10x queries x 10x corpus)
-    # BY DESIGN — the probe factor measures the scaled eval set, not
-    # the plan. A deployment holds the eval slice constant; this
-    # control re-runs the 10x corpus with qmod*10 (same ~query count
-    # as the sf0.1 run) to show the per-query cost scaling ~linearly.
-    from jsmr_spark.queries.ann import RECALL_QMOD, recall_report_frame
-
-    t0 = time.perf_counter()
-    recall_report_frame(spark, BASE, RECALL_QMOD).toPandas()
-    small = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    recall_report_frame(spark, OUT_DIR, RECALL_QMOD * REPLICAS).toPandas()
-    big = time.perf_counter() - t0
-    factor = big / small if small else float("inf")
-    name = "q_sim_recall_report qmod*10@10x (fixed eval set)"
-    print(f"{name:24s} {small:7.2f}s -> {big:7.2f}s  x{factor:.1f}", flush=True)
-    lines.append(f"| {name} | {small:.2f} | {big:.2f} | {factor:.1f} |")
-
-    small, big, factor = _nb_control(spark)
-    lines.append(
-        f"| q_ml_naive_bayes vocab-held@10x (control) | {small:.2f} | {big:.2f} | {factor:.1f} |"
-    )
-
-    # radius ~ 1/sqrt(density) demonstration for the spatial tier: the
-    # 10x staging multiplies POINT DENSITY (same 1000 km domain, 10x
-    # points), so fixed-radius edges grow ~100x and wedges worse — the
-    # probe factor measures the synthetic domain's densification, not
-    # the plan. Real geo growth adds AREA at ~constant density; the
-    # equivalent control is radius/sqrt(10), which holds expected
-    # neighbors per point constant. Probe-only: the registered key and
-    # oracle keep TRI_RADIUS.
-    from jsmr_spark.queries.graph import triangles_frame
-
-    t0 = time.perf_counter()
-    triangles_frame(spark, BASE).toPandas()
-    small = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    triangles_frame(spark, OUT_DIR, 31_623).toPandas()
-    big = time.perf_counter() - t0
-    factor = big / small if small else float("inf")
-    name = "q_graph_triangles r/sqrt10@10x"
-    print(f"{name:24s} {small:7.2f}s -> {big:7.2f}s  x{factor:.1f}", flush=True)
-    lines.append(f"| {name} | {small:.2f} | {big:.2f} | {factor:.1f} |")
-
-    adaptive = factors.get("q_dedup_clusters_lsh", float("nan"))
+    adaptive = rows["q_dedup_clusters_lsh"][2]
+    frozen_ctl = rows["q_dedup_clusters_lsh frozen8@10x (control)"][2]
     lines += [
         "",
         f"Reading the planes-rule pair (round 6): the ADAPTIVE registered key costs",
@@ -580,7 +555,7 @@ def main():
         "baseline the report exists to provide.",
     ]
 
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE.md"), "w") as f:
+    with open(SCALE_MD, "w") as f:
         f.write("\n".join(lines) + "\n")
 
 
