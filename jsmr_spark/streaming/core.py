@@ -12,13 +12,17 @@ Every runner goes through one replay lifecycle, ``_replay``:
   * events are staged there as K ordered parquet chunk files, a
     deterministic replay of the stream (optionally with a late tail of
     the oldest rows, or with every chunk delivered twice);
-  * ``spark.sql.shuffle.partitions`` is clamped to the staged input and
-    ``spark.sql.streaming.checkpointLocation`` points into the root;
+  * three confs are set for the replay: ``spark.sql.shuffle.partitions``
+    is clamped to the staged input,
+    ``spark.sql.streaming.checkpointLocation`` points into the root, and
+    ``spark.sql.streaming.checkpointFileManagerClass`` selects the
+    FileSystem-based checkpoint manager, which renames without starting
+    a process;
   * ``source()`` streams the chunks one file per trigger, and ``run()``
     starts a query into a memory, foreachBatch or custom-format sink,
     drains it and stops it;
   * on exit, on success and on error alike, the memory sinks' temp
-    views are dropped, both confs restored and the root deleted.
+    views are dropped, the three confs restored and the root deleted.
 
 A runner is only its transform, its sink and its result shape.
 Stateful aggregations run with withWatermark(); in append mode a window
@@ -38,7 +42,6 @@ length.
 from __future__ import annotations
 
 import contextlib
-import glob
 import os
 import shutil
 import tempfile
@@ -62,6 +65,11 @@ _CKPT_BYTES = 32 << 20
 
 _PARTITIONS = "spark.sql.shuffle.partitions"
 _CHECKPOINTS = "spark.sql.streaming.checkpointLocation"
+_CKPT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def _replay_tmp_root(need_bytes: int = _CKPT_BYTES) -> str:
@@ -69,17 +77,16 @@ def _replay_tmp_root(need_bytes: int = _CKPT_BYTES) -> str:
 
     Everything the replay harness writes is throwaway by construction
     (``_replay`` deletes its root on exit), so it defaults to the
-    RAM-backed tmpdir when one exists: the HDFS-backed state store
-    commits one fsync'd delta file PER PARTITION PER STORE PER
-    MICRO-BATCH (a stream-stream join carries 4 stores/partition), and
-    on a disk-backed /tmp that fsync chain is the dominant cost of the
-    replay tier — measured r13: commitTimeMs 600-800 ms summed per
-    micro-batch on ext4 for the outer interval join. A real deployment
-    checkpoints to durable storage ON PURPOSE; this is placement of a
-    simulation's scratch space, not an engine setting, and
-    $SPARK_GRAFT_STREAM_TMP overrides it. A RAM-backed root with less
-    than ``need_bytes`` free is passed over for the standard tempdir, so
-    a full /dev/shm costs speed instead of an ENOSPC mid-replay."""
+    RAM-backed tmpdir when one exists, which keeps a simulation's scratch
+    off the disk. Placement is not what a checkpoint commit costs,
+    though: moving the root to /dev/shm left the ~40-60 ms per metadata
+    commit unchanged. That cost was process starts (see ``_replay``),
+    not an fsync chain. A real deployment checkpoints to durable storage
+    ON PURPOSE; this is placement of a simulation's scratch space, not
+    an engine setting, and $SPARK_GRAFT_STREAM_TMP overrides it. A
+    RAM-backed root with less than ``need_bytes`` free is passed over
+    for the standard tempdir, so a full /dev/shm costs speed instead of
+    an ENOSPC mid-replay."""
     env = os.environ.get("SPARK_GRAFT_STREAM_TMP")
     if env:
         return env
@@ -207,70 +214,65 @@ def _replay(
 
     ``spark.sql.streaming.checkpointLocation`` points into the root
     (r13): a memory-sink query otherwise checkpoints to a temp dir under
-    java.io.tmpdir, which on a disk-backed /tmp pays the state store's
-    per-partition-per-store fsync chain every micro-batch (see
-    _replay_tmp_root)."""
+    java.io.tmpdir, outside what the replay deletes.
+
+    ``spark.sql.streaming.checkpointFileManagerClass`` selects
+    ``FileSystemBasedCheckpointFileManager`` for the replay. Without the
+    native libhadoop, Hadoop's local filesystem starts a process for
+    some metadata calls: one ``chmod`` per file created or directory
+    made, and four ``readlink`` per rename through ``FileContext``,
+    which is how Spark's default manager renames every offset, commit,
+    source-log and state-store delta file (one per partition per store
+    per micro-batch). Each start costs about 5-9 ms inside the driver
+    JVM, and that, not an fsync chain, is what made a metadata commit
+    cost ~40-60 ms on tmpfs and on disk alike. JFR counted 258 process
+    starts in the driver JVM over one warm ``stream_exactly_once_sink``
+    run at sf0.01, 152 of them ``readlink``; with this manager and the
+    staging below, 97, all ``chmod``. It renames with
+    ``FileSystem.rename`` (``File.renameTo``), which starts no process.
+    That rename is not atomic on every filesystem (object stores), which
+    is why Spark defaults to ``FileContext``; the replay root is always
+    local, where a POSIX rename is. The checksummed local filesystem
+    stays, ``.crc`` files included. The conf is scoped to the replay
+    like the other two."""
     need = _CKPT_BYTES
     if sf_dir is not None:
-        # Staged copy plus per-chunk split: about twice the events file
-        # at once; 4x leaves room for the wider staged schema.
+        # The staged chunks are one copy of the events columns, two with
+        # redelivery; 4x the events file leaves room for their encoding.
         need += 4 * os.path.getsize(table_path(sf_dir, "events"))
     root = os.path.join(_replay_tmp_root(need), f"jsmr_stream_{uuid.uuid4().hex[:8]}")
     rp = _Replay(spark, root)
     try:
         if sf_dir is not None:
-            import pyarrow.compute as pc
             import pyarrow.parquet as pq
 
             os.makedirs(rp.src)
             n_main = n_chunks - 1 if late_tail else n_chunks
-            # ONE Spark job (r12, guide §1.2 step 1): the old form ran
-            # window+cache+count plus one filtered write job PER CHUNK
-            # (~9 jobs per streaming key, the dominant fixed cost of the
-            # replay tier). Chunk assignment is the same single-partition
-            # ntile window (the replay is a bounded local harness by
-            # construction); the sorted 1-partition write preserves rn
-            # order, and the per-chunk split is driver-local pyarrow over
-            # that one small file — byte-identical rows and ntile
-            # boundaries, zero extra Spark jobs. Arrival order is pinned
-            # with EXPLICIT strictly-increasing mtimes (the file source
-            # orders by modification time), which the sequential writes
-            # only guaranteed implicitly.
+            # ONE Spark job, the collect: the replay is a bounded local
+            # harness by construction, so the driver holds the table.
+            # Arrival order is (ts, event_id) ascending, nulls first as
+            # Spark sorts, and the chunk boundaries are those of Spark's
+            # ntile(n_main) over that order: the first n_rows % n_main
+            # tiles hold one extra row. Arrival order is pinned with
+            # EXPLICIT strictly-increasing mtimes (the file source orders
+            # by modification time).
             cols = ["event_id", "ts", "user_id", "event_type", "value"]
-            w = Window.orderBy("ts", "event_id")
-            ev = (
-                load_table(spark, sf_dir, "events")
-                .select(*cols)
-                .withColumn("rn", F.row_number().over(w))
-                .withColumn("chunk", F.ntile(n_main).over(w) - 1)
+            ev = load_table(spark, sf_dir, "events").select(*cols)
+            tbl = ev.toArrow().sort_by(
+                [("ts", "ascending"), ("event_id", "ascending")], null_placement="at_start"
             )
-            stage = os.path.join(rp.root, "stage")
-            # TIMESTAMP_MICROS so the pyarrow round trip is exact: the
-            # INT96 default reads back as ns and would re-write as
-            # TIMESTAMP(NANOS), which the nanosAsLong session conf then
-            # scans as bigint.
-            with conf_override(
-                spark, {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
-            ):
-                ev.coalesce(1).write.parquet(stage)
-            part = glob.glob(os.path.join(stage, "part-*.parquet"))
-            if len(part) != 1:
-                # coalesce(1) guarantees a single part file; anything
-                # else would silently stage a subset of rows below. Not
-                # an assert: those are stripped under `python -O`
-                # (ADVICE r12).
-                raise RuntimeError(f"expected exactly one staged part file, got {part}")
-            tbl = pq.read_table(part[0])
             rp.n_rows = tbl.num_rows
-            chunks = [tbl.filter(pc.equal(tbl["chunk"], i)) for i in range(n_main)]
+            size, extra = divmod(rp.n_rows, n_main)
+            bounds = [i * size + min(i, extra) for i in range(n_main + 1)]
+            chunks = [tbl.slice(a, b - a) for a, b in zip(bounds, bounds[1:])]
             if late_tail:
                 # Replay the oldest 50 rows after the watermark has
                 # advanced far beyond them -> guaranteed drop.
-                chunks.append(tbl.filter(pc.less_equal(tbl["rn"], 50)))
+                chunks.append(tbl.slice(0, 50))
             t0 = time.time() - 2 * (n_chunks + 2)
             for i, chunk in enumerate(chunks):
                 p = os.path.join(rp.src, f"chunk_{i:03d}")
-                pq.write_table(chunk.select(cols), p)
+                pq.write_table(chunk, p)
                 os.utime(p, (t0 + 2 * i, t0 + 2 * i))
                 if redeliver:
                     # The copy's mtime (+1 s, between chunk i at +0 and
@@ -278,11 +280,14 @@ def _replay(
                     # in the file source's arrival order.
                     shutil.copy2(p, p + "_redeliver")
                     os.utime(p + "_redeliver", (t0 + 2 * i + 1, t0 + 2 * i + 1))
-            shutil.rmtree(stage, ignore_errors=True)
-            rp.schema = spark.read.parquet(os.path.join(rp.src, "chunk_000")).schema
+            rp.schema = ev.schema
         n_parts = 4 if rp.n_rows is None else min(32, max(4, rp.n_rows // 20_000))
-        ckpt = os.path.join(rp.root, "queries")
-        with conf_override(spark, {_PARTITIONS: str(n_parts), _CHECKPOINTS: ckpt}):
+        confs = {
+            _PARTITIONS: str(n_parts),
+            _CHECKPOINTS: os.path.join(rp.root, "queries"),
+            _CKPT_MANAGER: _FS_CKPT_MANAGER,
+        }
+        with conf_override(spark, confs):
             yield rp
     finally:
         for name in rp.views:
@@ -641,9 +646,11 @@ def run_exactly_once_sink_stream(
                 raise
         rp.run(out, sink=sink)  # restart from the same checkpoint
 
-        # Materialize before the scratch root is deleted.
+        # Materialize before the scratch root is deleted. Every batch was
+        # written from `out`, so its schema spares an inference job.
         rows = (
-            spark.read.parquet(os.path.join(out_dir, "batch-*"))
+            spark.read.schema(out.schema)
+            .parquet(os.path.join(out_dir, "batch-*"))
             .groupBy("user_id")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),

@@ -7,7 +7,9 @@ import os
 import shutil
 import tempfile
 
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from jsmr_spark.io import load_table
@@ -22,7 +24,11 @@ from jsmr_spark.streaming.core import (
 )
 from tests.conftest import SF_DIR
 
-_REPLAY_CONFS = ("spark.sql.shuffle.partitions", "spark.sql.streaming.checkpointLocation")
+_REPLAY_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.checkpointLocation",
+    "spark.sql.streaming.checkpointFileManagerClass",
+)
 
 
 @pytest.fixture
@@ -42,8 +48,8 @@ def _replay_confs(spark) -> dict:
 
 def _assert_replay_cleaned_up(spark, confs_before: dict) -> None:
     """What every replay must leave behind, on success or on error: no
-    running query, nothing under the scratch root, both confs it
-    clamps back at their previous values."""
+    running query, nothing under the scratch root, the three confs it
+    sets back at their previous values."""
     assert spark.streams.active == []
     assert os.listdir(_replay_tmp_root()) == []
     assert _replay_confs(spark) == confs_before
@@ -462,11 +468,15 @@ def test_replay_tmp_root_falls_back_when_shm_is_full(monkeypatch):
 def test_replay_cleans_up_after_error_in_block(spark, replay_root):
     """An exception inside a bare ``with _replay(...)`` block, after a
     query ran and its memory sink registered a view, still stops every
-    query, drops the view, restores both confs (here set to non-default
-    values first) and deletes the scratch root."""
+    query, drops the view, restores the three confs (here set to
+    caller values first) and deletes the scratch root."""
     caller = {
         "spark.sql.shuffle.partitions": "7",
         "spark.sql.streaming.checkpointLocation": os.path.join(replay_root, "elsewhere"),
+        "spark.sql.streaming.checkpointFileManagerClass": (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileContextBasedCheckpointFileManager"
+        ),
     }
     with conf_override(spark, caller):
         confs = _replay_confs(spark)
@@ -493,3 +503,72 @@ def test_memory_sink_runner_leaves_no_temp_view(spark):
     second = run_tumbling_stream(spark, SF_DIR)
     assert temp_tables() == n_before
     assert sorted(first.collect()) == sorted(second.collect())
+
+
+def test_replay_checkpoints_through_filesystem_manager(spark, replay_root):
+    """A query started inside a replay writes its offset and commit logs
+    through FileSystemBasedCheckpointFileManager, which renames with
+    File.renameTo; Spark's default FileContext-based manager starts four
+    readlink processes per rename on a local filesystem without the
+    native libhadoop."""
+    confs = _replay_confs(spark)
+    with _replay(spark, SF_DIR, n_chunks=2) as rp:
+        q = rp.source().writeStream.format("noop").trigger(availableNow=True).start()
+        try:
+            q.awaitTermination()
+            jq = q._jsq.streamingQuery()
+            managers = {
+                log.fileManager().getClass().getSimpleName()
+                for log in (jq.offsetLog(), jq.commitLog())
+            }
+        finally:
+            q.stop()
+    _assert_replay_cleaned_up(spark, confs)
+    assert managers == {"FileSystemBasedCheckpointFileManager"}
+
+
+@pytest.mark.parametrize(
+    "n_chunks, late_tail, redeliver",
+    [(2, False, False), (6, False, False), (8, False, False), (5, True, False), (4, False, True)],
+)
+def test_staged_chunks_match_ntile_assignment(spark, replay_root, n_chunks, late_tail, redeliver):
+    """The staged chunks are the rows a single-partition
+    row_number/ntile window over (ts, event_id) assigns to each tile, in
+    rn order within each file; the late tail is the 50 smallest rn; a
+    redelivered copy sits between its original and the next chunk in
+    mtime (arrival) order; and the staged schema is the one Spark infers
+    from a chunk file. Spark reports the same nullability for both
+    schemas, so they are compared whole."""
+    n_main = n_chunks - 1 if late_tail else n_chunks
+    w = Window.orderBy("ts", "event_id")
+    ref = sorted(
+        load_table(spark, SF_DIR, "events")
+        .select(
+            "event_id",
+            F.row_number().over(w).alias("rn"),
+            (F.ntile(n_main).over(w) - 1).alias("chunk"),
+        )
+        .collect(),
+        key=lambda r: r.rn,
+    )
+    expected = [[r.event_id for r in ref if r.chunk == i] for i in range(n_main)]
+    if late_tail:
+        expected.append([r.event_id for r in ref if r.rn <= 50])
+
+    with _replay(spark, SF_DIR, n_chunks=n_chunks, late_tail=late_tail, redeliver=redeliver) as rp:
+        assert rp.n_rows == len(ref)
+        assert rp.schema == spark.read.parquet(os.path.join(rp.src, "chunk_000")).schema
+        arrival = sorted(
+            os.listdir(rp.src), key=lambda n: os.path.getmtime(os.path.join(rp.src, n))
+        )
+        names = [f"chunk_{i:03d}" for i in range(n_chunks)]
+        if redeliver:
+            names = [n for name in names for n in (name, name + "_redeliver")]
+        assert arrival == names
+        staged = {
+            n: pq.read_table(os.path.join(rp.src, n))["event_id"].to_pylist() for n in arrival
+        }
+    for i, ids in enumerate(expected):
+        assert staged[f"chunk_{i:03d}"] == ids, f"chunk {i}"
+        if redeliver:
+            assert staged[f"chunk_{i:03d}_redeliver"] == ids, f"chunk {i} redelivery"

@@ -1,5 +1,5 @@
 """tools/bench_all.py, the full-registry A/B/A sweep, and the argv
-handling of tools/scale_probe.py.
+handling and probe list of tools/scale_probe.py.
 
 The sweep runs on the shared test session over three keys, one of each
 kind: engine-comparable (q_agg_q1), rows-only (q_agg_approx_distinct:
@@ -134,3 +134,9 @@ def test_argv_is_parsed(tool):
     with pytest.raises(SystemExit) as help_:
         main(["--help"])
     assert help_.value.code == 0
+
+
+def test_scale_probes_are_distinct():
+    """Each probe key is timed once per scale and gets one SCALE.md row."""
+    probes = _load("scale_probe").PROBES
+    assert len(probes) == len(set(probes))

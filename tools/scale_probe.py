@@ -135,10 +135,11 @@ PROBES = ["q_agg_q1", "q_join_multiway", "q_win_topk_group", "q_stream_session",
           # round-6 batch 12: robust dispersion (two keyed medians +
           # broadcast joins), membership-pinned balanced sample (one
           # class-keyed window), Hampel despike (7-row frame per
-          # series), exact-OLS Gram pass (9-scalar exchange),
-          # bucket-amortized cogroup lane
+          # series), exact-OLS Gram pass (9-scalar exchange); the
+          # bucket-amortized cogroup lane is q_cogrouped_map, probed
+          # with batch 5
           "q_agg_mad", "q_sample_balanced", "q_ts_hampel", "q_ml_linreg",
-          "q_cogrouped_map", "q_rank_mrr", "q_ts_acf", "q_sketch_kmv",
+          "q_rank_mrr", "q_ts_acf", "q_sketch_kmv",
           "q_skew_report", "q_join_asof_nearest", "q_text_ccnet_bucket",
           "sink_vacuum", "q_session_rfm", "q_text_lang_confusion",
           "q_ml_calibration", "q_win_streaks", "q_embed_outliers",
