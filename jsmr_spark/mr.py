@@ -12,8 +12,12 @@ surface 1:1 on Spark so a JsMr user can port a job verbatim:
               output_schema="token string, cnt long")
 
 Execution notes (Spark-first, not a coordinator port):
+  * chunks -> the input's partitions (JsMr: input splitting, A2). One
+    Python map task runs per partition: Spark's file splits, or the
+    caller's own `repartition` before calling job().
   * map    -> RDD.flatMap        (JsMr: browser-executed user JS, A3)
-  * shuffle-> groupByKey/reduceByKey (JsMr: server-side partitioner, A5)
+  * shuffle-> groupByKey/reduceByKey (JsMr: server-side partitioner, A5),
+    one reducer per mapped partition, at least two
   * reduce -> flatMap over groups (JsMr: browser reduce, A6)
   * combine: pass an associative `combine_fn` and the job runs as
     map-side-combined reduceByKey — the scalable path (JsMr A4).
@@ -32,6 +36,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable
 from typing import Any
 
+from pyspark import RDD
 from pyspark.sql import DataFrame, Row
 
 MapFn = Callable[[Row], Iterable[tuple[Any, Any]]]
@@ -45,10 +50,13 @@ def job(
     reduce_fn: ReduceFn | None = None,
     combine_fn: CombineFn | None = None,
     output_schema: str | None = None,
-    num_reducers: int | None = None,
-    num_mappers: int | None = None,
 ) -> DataFrame:
     """Run a JsMr-style MapReduce job over a DataFrame.
+
+    The map phase runs one Python task per partition of ``df`` (JsMr's
+    chunks, A2); a caller who wants other chunking repartitions ``df``
+    itself. The keyed shuffle has one reducer per mapped partition
+    (`_reducers`).
 
     Args:
         df: input records (one Row per JsMr input record).
@@ -60,34 +68,13 @@ def job(
             reduce_fn receives the single combined value in a 1-list.
         output_schema: DDL schema of the output rows, e.g.
             "token string, cnt long".
-        num_reducers: shuffle partition count (JsMr's #reducers knob);
-            defaults to Spark's setting.
-        num_mappers: input split count (JsMr's chunk-size knob, A2).
-            Python map_fn runs one worker PER INPUT PARTITION, so a
-            single-file input serializes the whole map phase through
-            one Python process no matter how many cores exist. The
-            old "3.7s -> 0.7s at sf0.1 by splitting to 8" was measured
-            while every Python task also re-read ~0.25 s of zip
-            directories (see pyworker.py). On the pyworker daemon an
-            empty Python task costs ~56 ms of executor run time (256 ms
-            on the stock daemon; 4-vCPU host), and sf0.1 wordcount runs
-            0.46 s unsplit vs 0.60 s at 8 mappers: a split pays only
-            once a partition's map work outweighs that fixed cost.
-            Defaults to the input's existing partitioning.
     """
     if reduce_fn is None:
         reduce_fn = lambda key, values: [(key, list(values))]  # noqa: E731
 
     spark = df.sparkSession
-    if num_mappers is not None:
-        df = df.repartition(num_mappers)
     pairs = df.rdd.flatMap(map_fn)
-    # Reducer count follows the INPUT's partitioning (classic MR sizing:
-    # reducers ~ mappers), not the SQL shuffle conf — a tiny input on a
-    # big session must not fan out to hundreds of near-empty Python
-    # reducer tasks (each one is a JVM<->Python worker round-trip,
-    # ~56 ms of executor run time even when empty; see num_mappers).
-    parts = num_reducers or max(2, pairs.getNumPartitions())
+    parts = _reducers(pairs)
     if combine_fn is not None:
         grouped = pairs.reduceByKey(combine_fn, numPartitions=parts).mapValues(lambda v: [v])
     else:
@@ -98,7 +85,16 @@ def job(
     return spark.createDataFrame(out, output_schema)
 
 
-def wordcount(df: DataFrame, text_col: str = "text", num_mappers: int | None = None) -> DataFrame:
+def _reducers(pairs: RDD) -> int:
+    """The keyed shuffle's partition count: one reducer per mapped
+    partition (classic MR sizing, reducers ~ mappers), at least two.
+    Not the SQL shuffle conf: a tiny input on a big session must not fan
+    out to hundreds of near-empty Python reducer tasks, each a
+    JVM<->Python worker round-trip."""
+    return max(2, pairs.getNumPartitions())
+
+
+def wordcount(df: DataFrame, text_col: str = "text") -> DataFrame:
     """The canonical JsMr example job, via the compat API with map-side
     combine. Oracle-checked twin: queries/text.py::q_text_wordcount."""
     return job(
@@ -107,14 +103,21 @@ def wordcount(df: DataFrame, text_col: str = "text", num_mappers: int | None = N
         reduce_fn=lambda key, values: [(key, values[0])],
         combine_fn=lambda a, b: a + b,
         output_schema="token string, cnt long",
-        num_mappers=num_mappers,
     )
 
 
-def inverted_index(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    num_mappers: int | None = None,
-) -> DataFrame:
+def _extend(a: list, b: list) -> list:
+    """The posting-list combine: extend ``a`` in place and return it, so
+    each merge costs len(b), not a copy of the growing list (``a + b``
+    is quadratic over a token's merges). Safe because reduceByKey starts
+    each combiner from the one-element list ``map_fn`` emitted, which
+    nothing else holds, and a list that comes back from the shuffle or
+    a spill is freshly deserialized."""
+    a.extend(b)
+    return a
+
+
+def inverted_index(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """The second canonical MR job (the one every MR paper shows after
     wordcount): token -> posting list of containing documents.
 
@@ -151,9 +154,8 @@ def inverted_index(
         df,
         map_fn=map_fn,
         reduce_fn=reduce_fn,
-        combine_fn=lambda a, b: a + b,
+        combine_fn=_extend,
         output_schema="token string, df long, min_doc long, max_doc long, postings_md5 string",
-        num_mappers=num_mappers,
     )
 
 
@@ -179,8 +181,6 @@ def mr_join(
     key_fn_r: Callable[[Row], Any],
     join_fn: Callable[[Any, Row, Row], Iterable[tuple]],
     output_schema: str,
-    num_reducers: int | None = None,
-    num_mappers: int | None = None,
 ) -> DataFrame:
     """The third canonical MR job: a reduce-side equi-join, the way the
     JsMr model expresses joins — both inputs map to TAGGED (key,
@@ -199,15 +199,10 @@ def mr_join(
     single reducers. The fast path for every real query is the Tier-B
     DataFrame join (q_join_inner et al.) where Catalyst picks
     broadcast/SMJ/shuffle-hash and AQE splits skew."""
-    # num_mappers: the same A2 chunk-size knob job() has (r13) — both
-    # map phases are per-row user Python, so a single-file input
-    # otherwise serializes them through one Python worker each.
-    if num_mappers is not None:
-        left = left.repartition(num_mappers)
-        right = right.repartition(num_mappers)
     keyed_l = left.rdd.map(lambda row: (key_fn_l(row), ("L", row)))
     keyed_r = right.rdd.map(lambda row: (key_fn_r(row), ("R", row)))
-    grouped = keyed_l.union(keyed_r).groupByKey(num_reducers)
+    pairs = keyed_l.union(keyed_r)
+    grouped = pairs.groupByKey(numPartitions=_reducers(pairs))
 
     def reduce_(kv):
         key, tagged = kv

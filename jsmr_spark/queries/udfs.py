@@ -232,9 +232,7 @@ def mr_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     MR≡DataFrame equivalence is also asserted in tests/test_mr.py."""
     from jsmr_spark.mr import wordcount
 
-    # num_mappers=8: split the single-file input so the Python map
-    # phase parallelizes (A2; see mr.job docstring for the measurement).
-    return wordcount(t(spark, sf_dir, "documents"), num_mappers=8)
+    return wordcount(t(spark, sf_dir, "documents"))
 
 
 @query(
@@ -261,7 +259,7 @@ def q_mr_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     content is hash-checked, not just its cardinalities."""
     from jsmr_spark.mr import inverted_index
 
-    return inverted_index(t(spark, sf_dir, "documents"), num_mappers=8)
+    return inverted_index(t(spark, sf_dir, "documents"))
 
 
 @query(
@@ -283,7 +281,7 @@ def q_mr_chain_dfhist(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeding job N's output file to job N+1, here composed lazily."""
     from jsmr_spark.mr import df_histogram, inverted_index
 
-    return df_histogram(inverted_index(t(spark, sf_dir, "documents"), num_mappers=8))
+    return df_histogram(inverted_index(t(spark, sf_dir, "documents")))
 
 
 @query(
@@ -368,10 +366,6 @@ def q_mr_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = mr_join(
         orders,
         cust,
-        # num_mappers=8: the A2 chunk-size knob (see mr_api) — the
-        # per-row Python map phases otherwise serialize on the
-        # single-file fixture input (r13).
-        num_mappers=8,
         key_fn_l=lambda r: r.o_custkey,
         key_fn_r=lambda r: r.c_custkey,
         # o_totalprice has 2dp, so *100 is integer up to fp noise and

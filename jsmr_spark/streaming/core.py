@@ -151,7 +151,9 @@ class _Replay:
         after a batch's sink write commits, and both unbounded sources
         emit a sequential counter, so the gate costs no Spark job per
         poll (r13: a confirming collect every 0.2 s competed with the
-        micro-batches it waited on)."""
+        micro-batches it waited on). The stop cancels a micro-batch that
+        may still be running, so an unbounded run returns only once the
+        stopped query's tasks have finished (`_await_tasks_done`)."""
         w = df.writeStream.outputMode(mode)
         if sink is None:
             name = f"replay_{uuid.uuid4().hex[:8]}"
@@ -176,7 +178,33 @@ class _Replay:
                 time.sleep(0.05)
         finally:
             q.stop()
+        if until_rows is not None:
+            self._await_tasks_done(str(q.runId))
         return None if sink else self.spark.table(name)
+
+    def _await_tasks_done(self, run_id: str) -> None:
+        """Wait until no task of the stopped query ``run_id`` runs.
+
+        ``stop()`` cancels the in-flight micro-batch and returns while
+        its killed tasks still unwind; a state-store task among them
+        re-creates ``<root>/queries/...`` after the replay deletes the
+        root. Every micro-batch job runs in the job group named by the
+        query's runId, and a cancelled job is FAILED while its stages
+        still count active tasks, so both are checked."""
+        st = self.spark.sparkContext.statusTracker()
+
+        def running(job_id: int) -> bool:
+            job = st.getJobInfo(job_id)
+            if job is None:
+                return False
+            stages = (st.getStageInfo(s) for s in job.stageIds)
+            return job.status == "RUNNING" or any(s and s.numActiveTasks for s in stages)
+
+        deadline = time.time() + 30
+        while any(running(j) for j in st.getJobIdsForGroup(run_id)):
+            if time.time() > deadline:
+                raise TimeoutError(f"tasks of stopped query {run_id} still running after 30 s")
+            time.sleep(0.02)
 
 
 @contextlib.contextmanager

@@ -1,9 +1,11 @@
 """MR-compat API: Tier-A parity checks (SURVEY.md §2.A)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from jsmr_spark.io import load_table
-from jsmr_spark.mr import job, wordcount
+from jsmr_spark.mr import inverted_index, job, wordcount
+from jsmr_spark.registry import get_query
 from tests.conftest import SF_DIR
 
 
@@ -37,17 +39,14 @@ def test_mr_job_without_combiner(spark):
     assert {(r.lang, r.n_docs, r.total_chars) for r in out.collect()} == expect
 
 
-def test_mr_inverted_index_equals_dataframe(spark):
-    """The list-concat combine + digest reduce must agree with the
-    DataFrame re-expression (collect_set + sort + md5)."""
-    docs = load_table(spark, SF_DIR, "documents")
-    from jsmr_spark.mr import inverted_index
+def _index_rows(df) -> set:
+    return {(r.token, r.df, r.min_doc, r.max_doc, r.postings_md5) for r in df.collect()}
 
-    mr = {
-        (r.token, r.df, r.min_doc, r.max_doc, r.postings_md5)
-        for r in inverted_index(docs).collect()
-    }
-    df = {
+
+def _inverted_index_reference(docs) -> set:
+    """The DataFrame re-expression of the inverted index: distinct-doc
+    count, min, max and md5 of the comma-joined sorted doc ids."""
+    return {
         (r.token, r.df, r.min_doc, r.max_doc, r.postings_md5)
         for r in docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
         .groupBy("token")
@@ -66,7 +65,38 @@ def test_mr_inverted_index_equals_dataframe(spark):
         )
         .collect()
     }
-    assert mr == df and len(mr) > 0
+
+
+def test_mr_inverted_index_equals_dataframe(spark):
+    """The list-concat combine + digest reduce must agree with the
+    DataFrame re-expression (collect_set + sort + md5)."""
+    docs = load_table(spark, SF_DIR, "documents")
+    mr = _index_rows(inverted_index(docs))
+    assert mr == _inverted_index_reference(docs) and len(mr) > 0
+
+
+def test_mr_inverted_index_in_place_combine_across_merges(spark):
+    """The in-place posting-list combine over a caller-repartitioned
+    input: three map partitions, so lists merge map-side within a
+    partition and reduce-side across partitions. A second call on the
+    same input returns the same rows, so no list leaks across calls."""
+    docs = load_table(spark, SF_DIR, "documents").repartition(3)
+    first = _index_rows(inverted_index(docs))
+    assert first == _inverted_index_reference(docs) and len(first) > 0
+    assert _index_rows(inverted_index(docs)) == first
+
+
+@pytest.mark.parametrize(
+    "key, jobs",
+    [("mr_api", 1), ("q_mr_inverted_index", 1), ("q_mr_chain_dfhist", 2), ("q_mr_join", 2)],
+)
+def test_mr_keys_map_over_input_partitions(spark, key, jobs):
+    """The registry's MR keys shuffle once per MR job and never before
+    the map phase: no DataFrame exchange (ShuffledRowRDD) in the
+    lineage, one keyed RDD shuffle (ShuffledRDD) per job."""
+    lineage = get_query(key).fn(spark, SF_DIR).rdd.toDebugString().decode()
+    assert lineage.count("ShuffledRowRDD") == 0, lineage
+    assert lineage.count("ShuffledRDD") == jobs, lineage
 
 
 def test_mr_job_chaining(spark):

@@ -209,17 +209,24 @@ def test_sliding_stream_matches_batch_prefix(spark):
     assert len(streamed) >= 0.8 * len(batch)
 
 
-def test_rate_source_stream_is_deterministic(spark):
+def test_rate_source_stream_is_deterministic(spark, replay_root):
     """The unbounded rate source's aggregate must equal the pure
     function of the counter prefix (the same thing its DuckDB oracle
-    checks, exercised here through the streaming engine twice)."""
+    checks, exercised here through the streaming engine), and the
+    replay must be cleaned up after each run: the stop cancels a
+    micro-batch whose state-store tasks would otherwise re-create the
+    root after it was deleted. Three runs, since that race does not
+    show on every stop."""
     from jsmr_spark.streaming.core import run_rate_source_stream
 
-    rows = {r.user_key: (r.n, r.sum_value) for r in run_rate_source_stream(spark).collect()}
-    assert len(rows) == 50
-    for k, (n, sv) in rows.items():
-        assert n == 100
-        assert sv == sum(range(k, 5000, 50))
+    confs = _replay_confs(spark)
+    for _ in range(3):
+        rows = {r.user_key: (r.n, r.sum_value) for r in run_rate_source_stream(spark).collect()}
+        assert len(rows) == 50
+        for k, (n, sv) in rows.items():
+            assert n == 100
+            assert sv == sum(range(k, 5000, 50))
+        _assert_replay_cleaned_up(spark, confs)
 
 
 def test_tumbling_stream_on_rocksdb_state_store(spark):
