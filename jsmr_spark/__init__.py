@@ -9,13 +9,19 @@ with Structured Streaming for stateful stream operators and
 Arrow-vectorized UDFs where built-ins cannot express the semantics.
 
 Layout:
-    session.py   SparkSession factory with engine-required configs
-    io.py        fixture table loader (incl. ns-timestamp normalization)
-    registry.py  query registry backing __spark_entry__.py
-    queries/     the declared operator inventory (SURVEY.md §2.B)
-    mr.py        JsMr-style MapReduce-compat API (SURVEY.md §2.A)
-    pyworker.py  Python worker daemon of get_spark sessions
-    streaming/   Structured Streaming twins of the batch q_stream_* keys
+    session.py    SparkSession factory with engine-required configs
+    io.py         fixture table loader (incl. ns-timestamp normalization)
+    registry.py   query registry backing __spark_entry__.py
+    queries/      the declared operator inventory (SURVEY.md §2.B)
+    compat.py     oracle-compatibility helpers (exact cents, rounding)
+    mr.py         JsMr-style MapReduce-compat API (SURVEY.md §2.A)
+    jobspec.py    declarative JSON job specs run through mr.py
+    status.py     job/cluster status surface (SURVEY.md §2.A A9-A10)
+    multimodal.py binary (image/audio) column processing
+    vectorized.py block-vectorized similarity kernels over pandas UDFs
+    pyds.py       custom Python DataSource reader and sinks
+    pyworker.py   Python worker daemon of get_spark sessions
+    streaming/    Structured Streaming twins of the batch q_stream_* keys
 """
 
 from jsmr_spark.registry import all_oracles, all_queries, get_query

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from jsmr_spark.compat import cents, pct, r4, sql_cents, sql_pct
-from jsmr_spark.queries.common import sql, t
+from jsmr_spark.queries.common import scratch_dir, sql, t
 from jsmr_spark.registry import query
 
 _PRICE_C = sql_cents("l_extendedprice")
@@ -820,22 +820,14 @@ def q_sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged estimate lands within 2% — a broken merge or a corrupted
     persisted sketch flips est_ok and fails the hash, while the
     estimate itself stays out of the hash."""
-    import os
-    import shutil
-    import tempfile
-
     ev = t(spark, sf_dir, "events").select(
         "event_type", F.to_date("ts").alias("day"), "user_id"
-    )
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"jsmr_hll_sketches_{spark.sparkContext.applicationId}",
     )
     daily = ev.groupBy("event_type", "day").agg(
         F.hll_sketch_agg("user_id").alias("sk")
     )
-    daily.write.mode("overwrite").parquet(path)
-    try:
+    with scratch_dir("q_sketch_hll_merge") as path:
+        daily.write.mode("overwrite").parquet(path)
         merged = (
             spark.read.parquet(path)
             .groupBy("event_type")
@@ -854,10 +846,8 @@ def q_sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                     <= 0.02 * F.col("n_exact")
                 ).alias("est_ok"),
             )
-            .collect()  # materialize before deleting the sketch table
+            .collect()
         )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
     return spark.createDataFrame(
         rows, "event_type string, n_exact bigint, est_ok boolean"
     )

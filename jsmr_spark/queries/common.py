@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 
 from jsmr_spark.io import load_table, register_views
@@ -21,3 +26,23 @@ def sql(spark: SparkSession, sf_dir: str, stmt: str) -> DataFrame:
     """
     register_views(spark, sf_dir)
     return spark.sql(stmt)
+
+
+@contextmanager
+def scratch_dir(name: str) -> Iterator[str]:
+    """The one place a key's staged files live: a fresh directory,
+    removed with everything in it when the block exits, normally or not.
+
+    mkdtemp creates it atomically under a name unique per call, so
+    concurrent Spark applications on one host never share a path, and
+    the `jsmr_<name>_` prefix makes a directory left by a killed process
+    findable with a glob. The directory already exists, so a write into
+    it uses mode("overwrite") or a subdirectory. A key must materialize
+    its rows inside the block: a DataFrame that still reads the
+    directory after the key's function returns reads nothing.
+    """
+    path = tempfile.mkdtemp(prefix=f"jsmr_{name}_")
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)

@@ -19,15 +19,11 @@ and dies by:
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jsmr_spark.compat import cents, r4, sql_cents
-from jsmr_spark.queries.common import t
+from jsmr_spark.queries.common import scratch_dir, t
 from jsmr_spark.registry import query
 
 CUTOFF = "1999-01-01"
@@ -212,11 +208,7 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("zbucket"),
     )
 
-    # mkdtemp: atomically-created unique dir (ADVICE r4 — no
-    # collision window, and a recognizable prefix so stale dirs from a
-    # crashed run are sweepable with a glob).
-    out_dir = tempfile.mkdtemp(prefix="jsmr_sink_zorder_")
-    try:
+    with scratch_dir("sink_zorder") as out_dir:
         (
             zed.repartition(F.col("zbucket"))
             .write.mode("overwrite")
@@ -251,8 +243,6 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         rows = res.collect()
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "zbucket int, n_rows long, min_day int, max_day int, "

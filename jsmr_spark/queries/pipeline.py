@@ -17,16 +17,11 @@ property a training pipeline needs for held-out contamination control.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from jsmr_spark.compat import cents, r4, sql_cents
-from jsmr_spark.queries.common import t
+from jsmr_spark.queries.common import scratch_dir, t
 from jsmr_spark.queries.dedup import hex12_sql
 from jsmr_spark.queries.dedup_extra import EMB_COS_MIN
 from jsmr_spark.registry import query
@@ -349,22 +344,15 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus). Value-checked: the oracle pins the expected counts and
     TRUE for both proofs, so a lost row or an un-pruned scan fails the
     hash."""
-    # uuid-suffixed dir so concurrent sessions never race on one path;
-    # everything materializes before the finally-cleanup.
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"jsmr_sink_partitioned_{uuid.uuid4().hex[:8]}"
-    )
-    try:
-        docs = t(spark, sf_dir, "documents")
-        n_en_written = docs.filter(F.col("lang") == "en").count()
+    docs = t(spark, sf_dir, "documents")
+    n_en_written = docs.filter(F.col("lang") == "en").count()
+    with scratch_dir("sink_partitioned") as out_dir:
         docs.write.mode("overwrite").partitionBy("lang").parquet(out_dir)
 
         back = spark.read.parquet(out_dir).filter(F.col("lang") == "en")
         n_en_reread = back.count()
         plan = back._jdf.queryExecution().executedPlan().toString()
         pruned = "PartitionFilters: [" in plan and "lang" in plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
     return spark.createDataFrame(
         [(n_en_written, n_en_reread, n_en_written == n_en_reread, bool(pruned))],
         "n_en_written long, n_en_reread long, roundtrip_ok boolean, partition_pruned boolean",
@@ -457,13 +445,8 @@ def sink_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-counted. At 100 TB this is the same one-pass narrow write;
     shard count scales with cluster size, not data (files per shard
     do)."""
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"jsmr_sink_shards_{uuid.uuid4().hex[:8]}"
-    )
-    try:
-        docs = t(spark, sf_dir, "documents").withColumn(
-            "shard", F.expr(_SHARD_SPARK)
-        )
+    docs = t(spark, sf_dir, "documents").withColumn("shard", F.expr(_SHARD_SPARK))
+    with scratch_dir("sink_shards") as out_dir:
         docs.write.mode("overwrite").partitionBy("shard").parquet(out_dir)
         back = spark.read.parquet(out_dir)
         out = (
@@ -474,9 +457,7 @@ def sink_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .withColumn("shard", F.col("shard").cast("long"))
         )
-        rows = out.collect()  # materialize before the sink dir is removed
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+        rows = out.collect()
     return spark.createDataFrame(rows, "shard long, n_docs long, n_tokens long")
 
 

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jsmr_spark.compat import cents, sql_cents
-from jsmr_spark.queries.common import t
+from jsmr_spark.queries.common import scratch_dir, t
 from jsmr_spark.registry import query
 from jsmr_spark.session import conf_override
 
@@ -157,14 +157,6 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     source-derived values is the semantic proof — and the oracle pins
     it, so clobbered partitions or a stale refreshed partition fail
     the hash."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    out = os.path.join(
-        tempfile.gettempdir(), f"jsmr_sink_dynover_{uuid.uuid4().hex[:8]}"
-    )
     agg = (
         t(spark, sf_dir, "events")
         .groupBy("event_type", F.col("ts").cast("date").alias("day"))
@@ -173,7 +165,7 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(cents(F.col("value"))).alias("sum_cents"),
         )
     )
-    try:
+    with scratch_dir("sink_dynamic_overwrite") as out:
         agg.write.mode("overwrite").partitionBy("event_type").parquet(out)
         # the partition refresh: recompute ONE partition from source and
         # overwrite it in place — every other partition must survive
@@ -182,9 +174,7 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "overwrite"
             ).partitionBy("event_type").parquet(out)
         back = spark.read.parquet(out).select("event_type", "day", "n", "sum_cents")
-        rows = back.collect()  # materialize before cleanup
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+        rows = back.collect()
     return spark.createDataFrame(
         rows, "event_type string, day date, n bigint, sum_cents bigint"
     )

@@ -14,14 +14,12 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jsmr_spark.compat import cents, sql_cents
-from jsmr_spark.queries.common import t
+from jsmr_spark.queries.common import scratch_dir, t
 from jsmr_spark.registry import query
 
 
@@ -116,12 +114,7 @@ def _sink_roundtrip(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
     pattern: the round trip verifies the written bytes, not just the
     row count). All values are strings/longs, which survive every
     container's serialization exactly."""
-    # uuid-suffixed dir: concurrent sessions (driver run + bench) must
-    # never race on one path. Rows materialize before cleanup.
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"jsmr_sink_{fmt}_{uuid.uuid4().hex[:8]}"
-    )
-    try:
+    with scratch_dir(f"sink_{fmt}") as out_dir:
         src = (
             t(spark, sf_dir, "orders")
             .groupBy("o_orderstatus", "o_orderpriority")
@@ -143,9 +136,7 @@ def _sink_roundtrip(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
         else:
             writer.option("header", "true").csv(out_dir)
             back = spark.read.schema(_SINK_SCHEMA).option("header", "true").csv(out_dir)
-        rows = back.collect()  # materialize before the sink dir is removed
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+        rows = back.collect()
     return spark.createDataFrame(rows, _SINK_SCHEMA)
 
 
@@ -198,22 +189,25 @@ def source_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checked: the oracle recomputes the same statistics from the
     source table, so a line lost or mangled in serialization flips the
     count/token columns and fails the hash."""
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"jsmr_source_text_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(out_dir, ignore_errors=True)
     src = t(spark, sf_dir, "documents").select("text")
     n_written = src.count()
-    src.write.mode("overwrite").text(out_dir)
-    back = spark.read.text(out_dir)
-    return back.select(
-        F.size(F.split(F.col("value"), " ")).cast("long").alias("n_tokens")
-    ).agg(
-        F.lit(n_written).cast("long").alias("n_lines_written"),
-        F.count(F.lit(1)).alias("n_lines_reread"),
-        F.sum("n_tokens").alias("total_tokens"),
-        (F.count(F.lit(1)) == n_written).alias("roundtrip_ok"),
+    with scratch_dir("source_text") as out_dir:
+        src.write.mode("overwrite").text(out_dir)
+        rows = (
+            spark.read.text(out_dir)
+            .select(F.size(F.split(F.col("value"), " ")).cast("long").alias("n_tokens"))
+            .agg(
+                F.lit(n_written).cast("long").alias("n_lines_written"),
+                F.count(F.lit(1)).alias("n_lines_reread"),
+                F.sum("n_tokens").alias("total_tokens"),
+                (F.count(F.lit(1)) == n_written).alias("roundtrip_ok"),
+            )
+            .collect()
+        )
+    return spark.createDataFrame(
+        rows,
+        "n_lines_written bigint, n_lines_reread bigint, total_tokens bigint, "
+        "roundtrip_ok boolean",
     )
 
 
@@ -237,27 +231,24 @@ def source_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle runs the same aggregate on the source table, so any
     row dropped or field corrupted in JSON serialization fails the
     hash."""
-    # Session-scoped dir (returned DataFrame reads it lazily, so it
-    # cannot be deleted here); the applicationId suffix keeps concurrent
-    # sessions from racing on one path.
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"jsmr_source_jsonl_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(out_dir, ignore_errors=True)
     src = t(spark, sf_dir, "events").select("event_id", "event_type", "user_id")
-    src.write.mode("overwrite").json(out_dir)
-    back = spark.read.schema("event_id bigint, event_type string, user_id bigint").json(
-        out_dir
-    )
-    return (
-        back.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("user_id").alias("n_users"),
-            F.min("event_id").alias("min_event"),
-            F.max("event_id").alias("max_event"),
+    with scratch_dir("source_jsonl") as out_dir:
+        src.write.mode("overwrite").json(out_dir)
+        rows = (
+            spark.read.schema("event_id bigint, event_type string, user_id bigint")
+            .json(out_dir)
+            .groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.countDistinct("user_id").alias("n_users"),
+                F.min("event_id").alias("min_event"),
+                F.max("event_id").alias("max_event"),
+            )
+            .collect()
         )
+    return spark.createDataFrame(
+        rows,
+        "event_type string, n bigint, n_users bigint, min_event bigint, max_event bigint",
     )
 
 
@@ -291,15 +282,11 @@ def sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (maxRecordsPerFile / 128MB files), not a global coalesce(4) — the
     shape (read fragmented, narrow rewrite, verify) is identical; that
     per-partition form is shipped as sink_compact_partitioned."""
-    base = os.path.join(
-        tempfile.gettempdir(), f"jsmr_compact_{uuid.uuid4().hex[:8]}"
-    )
-    frag, compact = os.path.join(base, "frag"), os.path.join(base, "compact")
-
     def _parquet_files(d: str) -> int:
         return sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
 
-    try:
+    with scratch_dir("sink_compact") as base:
+        frag, compact = os.path.join(base, "frag"), os.path.join(base, "compact")
         docs = t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
         docs.repartition(N_SMALL_FILES).write.parquet(frag)
         n_before = _parquet_files(frag)
@@ -311,9 +298,7 @@ def sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_chars").alias("sum_chars"),
         )
-        rows = agg.collect()  # materialize before cleanup
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        rows = agg.collect()
     return spark.createDataFrame(
         rows, "n_files_before int, n_files_after int, n_docs long, sum_chars long"
     )
@@ -341,10 +326,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition, wrong corpus-wide; evolved tables belong behind a
     catalog (Delta/Iceberg) where the schema lives in metadata. The
     scan behavior exercised here is identical."""
-    base = os.path.join(
-        tempfile.gettempdir(), f"jsmr_evolve_{uuid.uuid4().hex[:8]}"
-    )
-    try:
+    with scratch_dir("source_schema_evolution") as base:
         docs = t(spark, sf_dir, "documents")
         docs.select("doc_id", "lang", "n_chars").write.parquet(os.path.join(base, "gen=a"))
         docs.select("doc_id", "lang", "n_chars", "source").write.parquet(os.path.join(base, "gen=b"))
@@ -355,9 +337,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_rows"),
             F.count(F.when(F.col("source").isNull(), 1)).alias("n_null_source"),
         )
-        rows = out.collect()  # materialize before cleanup
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        rows = out.collect()
     return spark.createDataFrame(rows, "lang string, n_rows long, n_null_source long")
 
 
@@ -381,24 +361,25 @@ def source_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputed by the oracle from the source table, so any row or field
     corrupted through text serialization fails the hash. Completes the
     file-source matrix: text / jsonl / csv / parquet generations."""
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"jsmr_source_csv_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(out_dir, ignore_errors=True)
     src = t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    src.write.mode("overwrite").option("header", "true").csv(out_dir)
-    back = (
-        spark.read.schema("doc_id bigint, lang string, n_chars bigint")
-        .option("header", "true")
-        .option("mode", "FAILFAST")
-        .csv(out_dir)
-    )
-    return back.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("n_chars").alias("sum_chars"),
-        F.min("doc_id").alias("min_doc"),
-        F.max("doc_id").alias("max_doc"),
+    with scratch_dir("source_csv") as out_dir:
+        src.write.mode("overwrite").option("header", "true").csv(out_dir)
+        rows = (
+            spark.read.schema("doc_id bigint, lang string, n_chars bigint")
+            .option("header", "true")
+            .option("mode", "FAILFAST")
+            .csv(out_dir)
+            .groupBy("lang")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum("n_chars").alias("sum_chars"),
+                F.min("doc_id").alias("min_doc"),
+                F.max("doc_id").alias("max_doc"),
+            )
+            .collect()
+        )
+    return spark.createDataFrame(
+        rows, "lang string, n bigint, sum_chars bigint, min_doc bigint, max_doc bigint"
     )
 
 
@@ -428,11 +409,6 @@ def sink_compact_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic by pigeonhole — each round-robin partition holds at
     most ceil(N/16) rows, fewer than any language's row count, so every
     language provably spans >1 pre-compaction file."""
-    base = os.path.join(
-        tempfile.gettempdir(), f"jsmr_compactp_{uuid.uuid4().hex[:8]}"
-    )
-    frag, compact = os.path.join(base, "frag"), os.path.join(base, "compact")
-
     def _files_per_lang(d: str) -> dict[str, int]:
         out: dict[str, int] = {}
         for sub in os.listdir(d):
@@ -442,7 +418,8 @@ def sink_compact_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
         return out
 
-    try:
+    with scratch_dir("sink_compact_partitioned") as base:
+        frag, compact = os.path.join(base, "frag"), os.path.join(base, "compact")
         docs = t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
         docs.repartition(16).write.partitionBy("lang").parquet(frag)
         before = _files_per_lang(frag)
@@ -470,8 +447,6 @@ def sink_compact_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             for r in agg.collect()
         ]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "lang string, was_fragmented boolean, n_files_after int, n_docs long, sum_chars long",
@@ -540,8 +515,7 @@ def source_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_chars sum must all reconcile with the source table — a silently
     dropped good row, or a bad line parsed as garbage values, fails
     the hash."""
-    base = os.path.join(tempfile.gettempdir(), f"jsmr_corrupt_{uuid.uuid4().hex[:8]}")
-    try:
+    with scratch_dir("source_json_corrupt") as base:
         docs = t(spark, sf_dir, "documents")
         docs.select(
             F.to_json(F.struct("doc_id", "lang", "n_chars")).alias("value")
@@ -573,12 +547,10 @@ def source_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "good_chars"
             ),
         ).collect()[0]
-        return spark.createDataFrame(
-            [(row["n_good"], row["n_corrupt"], row["good_chars"])],
-            "n_good long, n_corrupt int, good_chars long",
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return spark.createDataFrame(
+        [(row["n_good"], row["n_corrupt"], row["good_chars"])],
+        "n_good long, n_corrupt int, good_chars long",
+    )
 
 
 @query(
@@ -602,10 +574,7 @@ def sink_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan. tests/test_plans.py asserts the pruned ReadSchema; the
     oracle recomputes the leaf aggregate straight from orders, so a
     wrong leaf binding or a lossy struct round-trip fails the hash."""
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"jsmr_sink_nested_{uuid.uuid4().hex[:8]}"
-    )
-    try:
+    with scratch_dir("sink_nested") as out_dir:
         nested = t(spark, sf_dir, "orders").select(
             "o_orderkey",
             F.struct(
@@ -626,9 +595,7 @@ def sink_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("price_c").alias("sum_price_cents"),
             )
         )
-        rows = back.collect()  # materialize before the sink dir is removed
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+        rows = back.collect()
     return spark.createDataFrame(rows, "status string, n bigint, sum_price_cents bigint")
 
 
@@ -657,48 +624,45 @@ def source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the md5 digest over content is value-checked against the oracle
     hashing the original rows — any dropped, truncated, or mangled
     blob fails the hash."""
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"jsmr_source_binfile_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir, exist_ok=True)
-
     src = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0).select(
         "doc_id", "text"
     )
+    with scratch_dir("source_binaryfile") as out_dir:
+        def write_blobs(batches):
+            import pandas as pd
 
-    def write_blobs(batches):
-        import pandas as pd
+            for pdf in batches:
+                for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                    with open(os.path.join(out_dir, f"{doc_id}.bin"), "wb") as fh:
+                        fh.write(text.encode("utf-8"))
+                yield pd.DataFrame({"n": [len(pdf)]})
 
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                with open(os.path.join(out_dir, f"{doc_id}.bin"), "wb") as fh:
-                    fh.write(text.encode("utf-8"))
-            yield pd.DataFrame({"n": [len(pdf)]})
+        n_files = (
+            src.mapInPandas(write_blobs, "n long").agg(F.sum("n")).collect()[0][0] or 0
+        )
 
-    n_files = (
-        src.mapInPandas(write_blobs, "n long").agg(F.sum("n")).collect()[0][0] or 0
-    )
-
-    # Two small-files traps, both measured at the 10x probe (5000
-    # files): (1) a per-file GLOB expands to 5000 root paths and
-    # triggers a 5000-task distributed listing job — loading the
-    # DIRECTORY keeps the listing driver-side (1 root path, under the
-    # parallel-discovery threshold); (2) the scan plans one partition
-    # per file — coalesce groups them into ~64-file tasks without a
-    # shuffle. Together: 19.5s -> ~2s at 10x. This is the mitigation
-    # every blob-crawl ingest needs before real decode work.
-    back = (
-        spark.read.format("binaryFile")
-        .load(out_dir)
-        .coalesce(max(1, min(1024, n_files // 64 + 1)))
-    )
-    return back.select(
-        F.regexp_extract(F.col("path"), r"(\d+)\.bin$", 1).cast("long").alias("doc_id"),
-        F.col("length").alias("n_bytes"),
-        F.md5(F.col("content")).alias("digest"),
-    )
+        # Two small-files traps, both measured at the 10x probe (5000
+        # files): (1) a per-file GLOB expands to 5000 root paths and
+        # triggers a 5000-task distributed listing job — loading the
+        # DIRECTORY keeps the listing driver-side (1 root path, under the
+        # parallel-discovery threshold); (2) the scan plans one partition
+        # per file — coalesce groups them into ~64-file tasks without a
+        # shuffle. Together: 19.5s -> ~2s at 10x. This is the mitigation
+        # every blob-crawl ingest needs before real decode work.
+        rows = (
+            spark.read.format("binaryFile")
+            .load(out_dir)
+            .coalesce(max(1, min(1024, n_files // 64 + 1)))
+            .select(
+                F.regexp_extract(F.col("path"), r"(\d+)\.bin$", 1)
+                .cast("long")
+                .alias("doc_id"),
+                F.col("length").alias("n_bytes"),
+                F.md5(F.col("content")).alias("digest"),
+            )
+            .collect()
+        )
+    return spark.createDataFrame(rows, "doc_id bigint, n_bytes bigint, digest string")
 
 
 GEN_N = 100_000
@@ -769,47 +733,40 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the oracle's semantic restatement (days where
     day-since-epoch % 10 = 0), so the pruning must also be CORRECT —
     over-pruning drops rows and under-pruning adds them."""
-    import os
-    import shutil
-    import tempfile
-
-    base = os.path.join(
-        tempfile.gettempdir(), f"jsmr_dpp_{spark.sparkContext.applicationId}"
-    )
-    fact_p, dim_p = os.path.join(base, "fact"), os.path.join(base, "dim")
     ev = t(spark, sf_dir, "events").select(
         "event_type", "value", F.to_date("ts").alias("day")
     )
-    ev.write.mode("overwrite").partitionBy("day").parquet(fact_p)
-    (
-        ev.select("day")
-        .distinct()
-        .select(
-            "day",
-            F.when(
-                F.datediff(F.col("day"), F.lit("2024-01-01").cast("date")) % 10 == 0,
-                "keep",
+    with scratch_dir("q_join_dpp") as base:
+        fact_p, dim_p = os.path.join(base, "fact"), os.path.join(base, "dim")
+        ev.write.mode("overwrite").partitionBy("day").parquet(fact_p)
+        (
+            ev.select("day")
+            .distinct()
+            .select(
+                "day",
+                F.when(
+                    F.datediff(F.col("day"), F.lit("2024-01-01").cast("date")) % 10 == 0,
+                    "keep",
+                )
+                .otherwise("skip")
+                .alias("tag"),
             )
-            .otherwise("skip")
-            .alias("tag"),
+            .write.mode("overwrite")
+            .parquet(dim_p)
         )
-        .write.mode("overwrite")
-        .parquet(dim_p)
-    )
-    fact = spark.read.parquet(fact_p)
-    dim = spark.read.parquet(dim_p).filter(F.col("tag") == "keep")
-    joined = fact.join(dim, "day")
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    dpp = "dynamicpruning" in plan.lower()
-    rows = (
-        joined.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(cents(F.col("value"))).alias("sum_cents"),
+        fact = spark.read.parquet(fact_p)
+        dim = spark.read.parquet(dim_p).filter(F.col("tag") == "keep")
+        joined = fact.join(dim, "day")
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+        dpp = "dynamicpruning" in plan.lower()
+        rows = (
+            joined.groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(cents(F.col("value"))).alias("sum_cents"),
+            )
+            .collect()
         )
-        .collect()  # materialize before the staging dir can be cleaned
-    )
-    shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(
         [(r.event_type, r.n, r.sum_cents, dpp) for r in rows],
         "event_type string, n bigint, sum_cents bigint, dpp_active boolean",
@@ -829,18 +786,11 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     usual sink aggregate is hash-checked, so a lost part, a double
     write, or a manifest/commit bug fails the hash."""
     import json
-    import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.pyds import register_sink
 
     register_sink(spark)
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"jsmr_pyds_sink_{uuid.uuid4().hex[:8]}"
-    )
-    try:
+    with scratch_dir("sink_python_datasource") as out_dir:
         src = (
             t(spark, sf_dir, "orders")
             .groupBy("o_orderstatus", "o_orderpriority")
@@ -860,8 +810,6 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             .csv(paths)
         )
         rows = back.collect()
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
     return spark.createDataFrame(rows, _SINK_SCHEMA)
 
 
@@ -897,9 +845,8 @@ def sink_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     read is the verification scan of the latest snapshot. Real tables
     gate deletion on a snapshot's expiry time rather than a count, but
     the mechanism — list, sort by version, drop the tail — is this."""
-    base = os.path.join(tempfile.gettempdir(), f"jsmr_vac_{uuid.uuid4().hex[:8]}")
     docs = t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    try:
+    with scratch_dir("sink_vacuum") as base:
         for ver in range(1, VACUUM_VERSIONS + 1):
             docs.filter(F.col("doc_id") % VACUUM_VERSIONS < ver).write.parquet(
                 os.path.join(base, f"v={ver}")
@@ -919,9 +866,7 @@ def sink_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(after[0]).cast("int").alias("oldest_retained"),
             F.count(F.lit(1)).alias("n_docs_latest"),
             F.sum("n_chars").alias("sum_chars_latest"),
-        ).collect()  # materialize before cleanup
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        ).collect()
     return spark.createDataFrame(
         rows,
         "n_versions_before int, n_versions_after int, oldest_retained int, "
@@ -959,10 +904,8 @@ def source_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     control-plane); the historical read is a plain partition-prunable
     parquet scan of that snapshot — time travel costs what the
     snapshot costs, nothing more."""
-    base = os.path.join(tempfile.gettempdir(), f"jsmr_tt_{uuid.uuid4().hex[:8]}")
     docs = t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    try:
-        os.makedirs(base, exist_ok=True)
+    with scratch_dir("source_time_travel") as base:
         manifest = os.path.join(base, "_versions")
         for ver in range(1, TT_VERSIONS + 1):
             docs.filter(F.col("doc_id") % 4 <= ver).write.parquet(
@@ -978,9 +921,7 @@ def source_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(len(committed)).cast("int").alias("n_versions"),
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_chars").alias("sum_chars"),
-        ).collect()  # materialize before cleanup
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        ).collect()
     return spark.createDataFrame(
         rows, "version_read int, n_versions int, n_docs long, sum_chars long"
     )
@@ -1029,10 +970,7 @@ def sink_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out_rows = []
     for codec in SINK_CODECS:
-        out_dir = os.path.join(
-            tempfile.gettempdir(), f"jsmr_sink_codec_{codec}_{uuid.uuid4().hex[:8]}"
-        )
-        try:
+        with scratch_dir(f"sink_codecs_{codec}") as out_dir:
             src.write.mode("overwrite").option("compression", codec).parquet(
                 out_dir
             )
@@ -1045,11 +983,7 @@ def sink_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .collect()[0]
             )
-            out_rows.append(
-                (codec, back.n_groups, back.n_total, back.sum_price_cents_total)
-            )
-        finally:
-            shutil.rmtree(out_dir, ignore_errors=True)
+        out_rows.append((codec, back.n_groups, back.n_total, back.sum_price_cents_total))
     return spark.createDataFrame(
         out_rows,
         "codec string, n_groups bigint, n_total bigint, sum_price_cents_total bigint",
@@ -1132,12 +1066,6 @@ def q_source_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, mis-parses a good row, or double-counts fails the hash.
     Scale shape: stage and read are both one narrow executor pass; the
     final count aggregate is map-side combined."""
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"jsmr_csv_malformed_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(out_dir, ignore_errors=True)
-
     bad = (F.col("doc_id") % CSV_BAD_MOD) == CSV_BAD_RESIDUE
     lines = t(spark, sf_dir, "documents").select(
         F.concat(
@@ -1149,8 +1077,8 @@ def q_source_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("lang"),
         ).alias("value")
     )
-    lines.write.mode("overwrite").text(out_dir)
-    try:
+    with scratch_dir("q_source_csv_malformed") as out_dir:
+        lines.write.mode("overwrite").text(out_dir)
         back = (
             spark.read.schema(
                 "doc_id LONG, n_chars INT, lang STRING, _corrupt STRING"
@@ -1173,9 +1101,7 @@ def q_source_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("sum_chars_good"),
         )
-        rows = agg.collect()  # materialize before the staging dir is removed
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+        rows = agg.collect()
     return spark.createDataFrame(
         rows, "n_rows bigint, n_good bigint, n_corrupt bigint, sum_chars_good bigint"
     )

@@ -277,7 +277,7 @@ def test_text_chunk_window_invariants(spark):
         assert len(chunks) == expect, (doc_id, n, len(chunks), expect)
 
 
-def test_text_chunk_single_token_doc(spark):
+def test_text_chunk_single_token_doc(spark, tmp_path):
     """A document shorter than one window yields exactly one chunk
     whose hash is the md5 of the whole text."""
     import hashlib
@@ -285,14 +285,13 @@ def test_text_chunk_single_token_doc(spark):
     from jsmr_spark.queries import text_extra  # noqa: F401  (key registered)
     from jsmr_spark.registry import get_query
     import os
-    import tempfile
 
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(
-            [(1, "hello world", 11, "en", "src0")],
-            "doc_id long, text string, n_chars long, lang string, source string",
-        ).write.parquet(os.path.join(d, "documents.parquet"))
-        rows = get_query("q_text_chunk").fn(spark, d).collect()
+    d = str(tmp_path)
+    spark.createDataFrame(
+        [(1, "hello world", 11, "en", "src0")],
+        "doc_id long, text string, n_chars long, lang string, source string",
+    ).write.parquet(os.path.join(d, "documents.parquet"))
+    rows = get_query("q_text_chunk").fn(spark, d).collect()
     assert len(rows) == 1
     r = rows[0]
     assert r.chunk_idx == 0 and r.start_tok == 0 and r.n_chunk_tokens == 2
@@ -326,37 +325,29 @@ def test_embed_quantize_error_bound(spark):
         assert 0.0 <= r.mean_sq_err <= bound + 1e-4, (r.label, r.mean_sq_err, bound)
 
 
-def test_dynamic_overwrite_premise_static_would_clobber(spark):
+def test_dynamic_overwrite_premise_static_would_clobber(spark, tmp_path):
     """The discriminating premise of sink_dynamic_overwrite: the same
     one-partition rewrite under the default STATIC mode deletes every
     other partition — so the key's full read-back genuinely proves
     dynamic semantics rather than passing vacuously."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql import functions as F
 
     from jsmr_spark.io import load_table
     from tests.conftest import SF_DIR
 
-    out = os.path.join(tempfile.gettempdir(), f"jsmr_dynover_premise_{uuid.uuid4().hex[:8]}")
-    try:
-        agg = (
-            load_table(spark, SF_DIR, "events")
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        agg.write.mode("overwrite").partitionBy("event_type").parquet(out)
-        with conf_override(spark, {"spark.sql.sources.partitionOverwriteMode": "static"}):
-            agg.filter(F.col("event_type") == "click").write.mode(
-                "overwrite"
-            ).partitionBy("event_type").parquet(out)
-        left = {r.event_type for r in spark.read.parquet(out).collect()}
-        assert left == {"click"}, left
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    out = str(tmp_path)
+    agg = (
+        load_table(spark, SF_DIR, "events")
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    agg.write.mode("overwrite").partitionBy("event_type").parquet(out)
+    with conf_override(spark, {"spark.sql.sources.partitionOverwriteMode": "static"}):
+        agg.filter(F.col("event_type") == "click").write.mode(
+            "overwrite"
+        ).partitionBy("event_type").parquet(out)
+    left = {r.event_type for r in spark.read.parquet(out).collect()}
+    assert left == {"click"}, left
 
 
 def test_round6_new_key_invariants(spark):
@@ -405,7 +396,7 @@ def test_round6_new_key_invariants(spark):
     assert min_toks >= 10
 
 
-def test_cogrouped_map_tie_and_one_sided_keys(spark):
+def test_cogrouped_map_tie_and_one_sided_keys(spark, tmp_path):
     """The cogroup function must count a view at EXACTLY the click ts
     (side='right') and must tolerate keys present on only one side —
     pinned on a hand-built frame, independent of the fixtures."""
@@ -431,30 +422,24 @@ def test_cogrouped_map_tie_and_one_sided_keys(spark):
     df = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
     )
-    import tempfile, os, shutil, uuid
+    import os
 
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_cog_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "events.parquet"))
-        out = {
-            (r.user_id, r.click_id): r.n_views_before
-            for r in get_query("q_cogrouped_map").fn(spark, d).collect()
-        }
-        assert out == {(1, 2): 1, (1, 3): 0, (2, 4): 0}
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "events.parquet"))
+    out = {
+        (r.user_id, r.click_id): r.n_views_before
+        for r in get_query("q_cogrouped_map").fn(spark, d).collect()
+    }
+    assert out == {(1, 2): 1, (1, 3): 0, (2, 4): 0}
 
 
-def test_attribution_tie_and_window_rules(spark):
+def test_attribution_tie_and_window_rules(spark, tmp_path):
     """Pin the attribution boundary semantics on a hand-built frame:
     same-ts click attributes only with a smaller event_id; a click
     older than the 7-day lookback falls back to 'direct'; the LAST of
     several qualifying clicks wins."""
     import datetime as dt
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -482,26 +467,20 @@ def test_attribution_tie_and_window_rules(spark):
         rows,
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_attr_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "events.parquet"))
-        out = {
-            r.channel: (r.n_purchases, r.revenue_cents)
-            for r in get_query("q_attribution_last_touch").fn(spark, d).collect()
-        }
-        assert out == {"ch2": (1, 1000), "ch3": (1, 2000), "direct": (2, 7000)}, out
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "events.parquet"))
+    out = {
+        r.channel: (r.n_purchases, r.revenue_cents)
+        for r in get_query("q_attribution_last_touch").fn(spark, d).collect()
+    }
+    assert out == {"ch2": (1, 1000), "ch3": (1, 2000), "direct": (2, 7000)}, out
 
 
-def test_containment_is_asymmetric(spark):
+def test_containment_is_asymmetric(spark, tmp_path):
     """A short doc fully inside a long doc must flag (short, long) at
     containment 1.0 while (long, short) stays below threshold — the
     exact asymmetry symmetric Jaccard cannot express."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -514,14 +493,11 @@ def test_containment_is_asymmetric(spark):
          (3, other, "en", "s", len(other))],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_cont_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "documents.parquet"))
-        rows = {(r.doc_a, r.doc_b): r.containment
-                for r in get_query("q_text_containment").fn(spark, d).collect()}
-        assert rows == {(1, 2): 1.0}, rows
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "documents.parquet"))
+    rows = {(r.doc_a, r.doc_b): r.containment
+            for r in get_query("q_text_containment").fn(spark, d).collect()}
+    assert rows == {(1, 2): 1.0}, rows
 
 
 def test_bm25_and_rrf_sanity(spark):
@@ -568,14 +544,11 @@ def test_ks_auc_zipf_mrl_invariants(spark):
     assert all(0 <= v <= 1 for v in mrl.values())
 
 
-def test_auc_is_half_on_identical_distributions(spark):
+def test_auc_is_half_on_identical_distributions(spark, tmp_path):
     """Mann-Whitney sanity: pos and neg drawn as the SAME multiset must
     give AUC exactly 0.5 (all mass in ties, exact half-credit)."""
     import datetime as dt
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -589,13 +562,10 @@ def test_auc_is_half_on_identical_distributions(spark):
     df = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_auc_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "events.parquet"))
-        r = get_query("q_ml_auc").fn(spark, d).collect()[0]
-        assert r.auc == 0.5 and r.u2 == r.n_pos * r.n_neg
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "events.parquet"))
+    r = get_query("q_ml_auc").fn(spark, d).collect()[0]
+    assert r.auc == 0.5 and r.u2 == r.n_pos * r.n_neg
 
 
 def test_tclose_cusum_silence_epochs_invariants(spark):
@@ -673,15 +643,12 @@ def test_stream_sink_commit_is_idempotent(tmp_path):
     assert manifest == [{"file": "part-a.tsv", "rows": 10}]
 
 
-def test_mad_median_tie_and_strict_outlier_boundary(spark):
+def test_mad_median_tie_and_strict_outlier_boundary(spark, tmp_path):
     """Pin q_agg_mad's three boundary rules on a hand-built frame:
     a zero MAD still counts deviators (strict > 0), the .5 median
     interpolation is exact, and a deviation EXACTLY at 3*MAD does not
     flag (strict inequality)."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -694,23 +661,20 @@ def test_mad_median_tie_and_strict_outlier_boundary(spark):
         + [("C", 1.0), ("C", 3.0), ("C", 5.0), ("C", 7.0), ("C", 11.0)]
     )
     df = spark.createDataFrame(rows, "l_returnflag string, l_quantity double")
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_mad_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "lineitem.parquet"))
-        out = {
-            r.l_returnflag: (r.med_qty, r.mad_qty, r.n_outliers, r.n_rows)
-            for r in get_query("q_agg_mad").fn(spark, d).collect()
-        }
-        assert out == {
-            "A": (1.0, 0.0, 1, 5),
-            "B": (2.5, 1.0, 0, 4),
-            "C": (5.0, 2.0, 0, 5),
-        }, out
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "lineitem.parquet"))
+    out = {
+        r.l_returnflag: (r.med_qty, r.mad_qty, r.n_outliers, r.n_rows)
+        for r in get_query("q_agg_mad").fn(spark, d).collect()
+    }
+    assert out == {
+        "A": (1.0, 0.0, 1, 5),
+        "B": (2.5, 1.0, 0, 4),
+        "C": (5.0, 2.0, 0, 5),
+    }, out
 
 
-def test_sample_balanced_membership_matches_portable_hash(spark):
+def test_sample_balanced_membership_matches_portable_hash(spark, tmp_path):
     """q_sample_balanced must keep a class smaller than the cap whole,
     and for a capped class must keep EXACTLY the BALANCED_CAP ids whose
     md5-prefix rank is lowest — recomputed here independently with
@@ -718,9 +682,6 @@ def test_sample_balanced_membership_matches_portable_hash(spark):
     on membership (kept_id_sum), not just counts."""
     import hashlib
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.queries.sampling_geo import BALANCED_CAP
     from jsmr_spark.registry import get_query
@@ -730,29 +691,26 @@ def test_sample_balanced_membership_matches_portable_hash(spark):
     df = spark.createDataFrame(
         [(i, lang) for i, lang in small + big], "doc_id long, lang string"
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_bal_{uuid.uuid4().hex[:8]}")
+    d = str(tmp_path)
 
     def rank_key(doc_id: int) -> tuple[int, int]:
         h = int(hashlib.md5(str(doc_id).encode()).hexdigest()[:12], 16)
         return (h, doc_id)
 
     expect_bb = sorted((i for i, _ in big), key=rank_key)[:BALANCED_CAP]
-    try:
-        df.write.parquet(os.path.join(d, "documents.parquet"))
-        out = {
-            r.lang: (r.n_total, r.n_kept, r.kept_id_sum)
-            for r in get_query("q_sample_balanced").fn(spark, d).collect()
-        }
-        assert out["aa"] == (3, 3, sum(i for i, _ in small)), out
-        assert out["bb"] == (25, BALANCED_CAP, sum(expect_bb)), (
-            out,
-            expect_bb,
-        )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    df.write.parquet(os.path.join(d, "documents.parquet"))
+    out = {
+        r.lang: (r.n_total, r.n_kept, r.kept_id_sum)
+        for r in get_query("q_sample_balanced").fn(spark, d).collect()
+    }
+    assert out["aa"] == (3, 3, sum(i for i, _ in small)), out
+    assert out["bb"] == (25, BALANCED_CAP, sum(expect_bb)), (
+        out,
+        expect_bb,
+    )
 
 
-def test_hampel_spike_flag_and_partition_edge_frames(spark):
+def test_hampel_spike_flag_and_partition_edge_frames(spark, tmp_path):
     """Pin q_ts_hampel on a constant series with one spike: only the
     spike flags (its own window's IQR is 0 and its deviation huge;
     neighbors see the spike inflate their IQR, never their deviation),
@@ -762,9 +720,6 @@ def test_hampel_spike_flag_and_partition_edge_frames(spark):
     one)."""
     import datetime as dt
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -778,35 +733,29 @@ def test_hampel_spike_flag_and_partition_edge_frames(spark):
         rows,
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_ham_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "events.parquet"))
-        out = {
-            r.event_id: r
-            for r in get_query("q_ts_hampel").fn(spark, d).collect()
-        }
-        flagged = sorted(i for i, r in out.items() if r.is_outlier)
-        assert flagged == [1], flagged
-        # spike row's own 4-row edge frame (cents 5000,100,100,100):
-        # p25 @ rank 0.75 = 100, p75 @ rank 2.25 = 100 + 0.25*4900,
-        # deviation 4900 > 1.5*1225 -> flagged
-        assert out[1].med_cents == 100.0
-        assert out[1].iqr_cents == 1225.0
-        # a mid-series row: full 7-row frame of constants, iqr 0
-        assert out[6].med_cents == 100.0 and out[6].iqr_cents == 0.0
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "events.parquet"))
+    out = {
+        r.event_id: r
+        for r in get_query("q_ts_hampel").fn(spark, d).collect()
+    }
+    flagged = sorted(i for i, r in out.items() if r.is_outlier)
+    assert flagged == [1], flagged
+    # spike row's own 4-row edge frame (cents 5000,100,100,100):
+    # p25 @ rank 0.75 = 100, p75 @ rank 2.25 = 100 + 0.25*4900,
+    # deviation 4900 > 1.5*1225 -> flagged
+    assert out[1].med_cents == 100.0
+    assert out[1].iqr_cents == 1225.0
+    # a mid-series row: full 7-row frame of constants, iqr 0
+    assert out[6].med_cents == 100.0 and out[6].iqr_cents == 0.0
 
 
-def test_linreg_recovers_exact_planted_coefficients(spark):
+def test_linreg_recovers_exact_planted_coefficients(spark, tmp_path):
     """Plant y = 200 + 300*qty + 50*disc_pct cents exactly and assert
     q_ml_linreg returns the planted coefficients in exact micro-cents
     (zero residual -> the rational solve must be exact, no tolerance);
     then sanity-check the fixture fit against numpy's float lstsq."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     import numpy as np
 
@@ -820,18 +769,15 @@ def test_linreg_recovers_exact_planted_coefficients(spark):
     df = spark.createDataFrame(
         rows, "l_quantity double, l_discount double, l_extendedprice double"
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_ols_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "lineitem.parquet"))
-        r = get_query("q_ml_linreg").fn(spark, d).collect()[0]
-        assert (r.n_rows, r.beta0_micro, r.beta1_micro, r.beta2_micro) == (
-            15,
-            200_000_000,
-            300_000_000,
-            50_000_000,
-        ), r
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "lineitem.parquet"))
+    r = get_query("q_ml_linreg").fn(spark, d).collect()[0]
+    assert (r.n_rows, r.beta0_micro, r.beta1_micro, r.beta2_micro) == (
+        15,
+        200_000_000,
+        300_000_000,
+        50_000_000,
+    ), r
 
     # fixture sanity vs a float solver: agree to <1e-6 relative
     sf = "/root/testdata/sf0.001"
@@ -849,15 +795,12 @@ def test_linreg_recovers_exact_planted_coefficients(spark):
     assert np.allclose(got, beta, rtol=1e-6), (got, beta)
 
 
-def test_cogrouped_map_counts_all_views_at_tied_ts(spark):
+def test_cogrouped_map_counts_all_views_at_tied_ts(spark, tmp_path):
     """Several views at EXACTLY the click ts must all count (the
     cum-max collapse feeding merge_asof's last-match rule): 3 tied
     views -> n_views_before = 3, and an earlier click still sees 0."""
     import datetime as dt
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -873,19 +816,16 @@ def test_cogrouped_map_counts_all_views_at_tied_ts(spark):
         rows,
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_cogt_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "events.parquet"))
-        out = {
-            r.click_id: r.n_views_before
-            for r in get_query("q_cogrouped_map").fn(spark, d).collect()
-        }
-        assert out == {4: 3, 5: 0}, out
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "events.parquet"))
+    out = {
+        r.click_id: r.n_views_before
+        for r in get_query("q_cogrouped_map").fn(spark, d).collect()
+    }
+    assert out == {4: 3, 5: 0}, out
 
 
-def test_mrr_first_hit_rank_and_top10_miss(spark):
+def test_mrr_first_hit_rank_and_top10_miss(spark, tmp_path):
     """Pin q_rank_mrr's boundary rules on a hand-built corpus: at a
     sim TIE the smaller vec_id ranks first (the wrong-label twin id 1
     beats the same-label twin id 2, so the first hit is rank 2 ->
@@ -893,9 +833,6 @@ def test_mrr_first_hit_rank_and_top10_miss(spark):
     by 12 nearer wrong-label vectors is a MISS (rr 0, n_hit 0) even
     though it exists."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -913,19 +850,16 @@ def test_mrr_first_hit_rank_and_top10_miss(spark):
         [(i, [float(x) for x in e], lb) for i, e, lb in rows],
         "vec_id long, embedding array<float>, label int",
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_mrr_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "embeddings.parquet"))
-        out = {
-            r.label: (r.n_queries, r.n_hit, r.rr_scaled_sum, r.mrr)
-            for r in get_query("q_rank_mrr").fn(spark, d).collect()
-        }
-        assert out == {1: (1, 1, 1260, 0.5), 2: (1, 0, 0, 0.0)}, out
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "embeddings.parquet"))
+    out = {
+        r.label: (r.n_queries, r.n_hit, r.rr_scaled_sum, r.mrr)
+        for r in get_query("q_rank_mrr").fn(spark, d).collect()
+    }
+    assert out == {1: (1, 1, 1260, 0.5), 2: (1, 0, 0, 0.0)}, out
 
 
-def test_acf_alternating_series_and_gap_drops_pairs(spark):
+def test_acf_alternating_series_and_gap_drops_pairs(spark, tmp_path):
     """Pin q_ts_acf on constructed hourly counts: a 1,2,1,2,... series
     gives acf exactly -1 at lag 1, +1 at lag 2, -1 at lag 3; a series
     with a missing hour must DROP the pairs that would span the gap
@@ -933,9 +867,6 @@ def test_acf_alternating_series_and_gap_drops_pairs(spark):
     side yields NULL, not a crash."""
     import datetime as dt
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -960,35 +891,29 @@ def test_acf_alternating_series_and_gap_drops_pairs(spark):
         rows,
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_acf_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "events.parquet"))
-        out = {
-            (r.event_type, r.lag_h): (r.n_pairs, r.acf)
-            for r in get_query("q_ts_acf").fn(spark, d).collect()
-        }
-        assert out[("x", 1)] == (5, -1.0), out
-        assert out[("x", 2)] == (4, 1.0), out
-        assert out[("x", 3)] == (3, -1.0), out
-        # gap: only (h1,h0) and (h4,h3) survive lag 1; both later
-        # values are 2 -> zero variance -> NULL acf
-        assert out[("y", 1)] == (2, None), out
-        # lag 2 would need h2/h5 partners -> no clock-contiguous pairs
-        assert ("y", 2) not in out, out
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "events.parquet"))
+    out = {
+        (r.event_type, r.lag_h): (r.n_pairs, r.acf)
+        for r in get_query("q_ts_acf").fn(spark, d).collect()
+    }
+    assert out[("x", 1)] == (5, -1.0), out
+    assert out[("x", 2)] == (4, 1.0), out
+    assert out[("x", 3)] == (3, -1.0), out
+    # gap: only (h1,h0) and (h4,h3) survive lag 1; both later
+    # values are 2 -> zero variance -> NULL acf
+    assert out[("y", 1)] == (2, None), out
+    # lag 2 would need h2/h5 partners -> no clock-contiguous pairs
+    assert ("y", 2) not in out, out
 
 
-def test_kmv_below_k_is_exact_and_merge_unions_types(spark):
+def test_kmv_below_k_is_exact_and_merge_unions_types(spark, tmp_path):
     """Below k distinct values the KMV sketch IS the value set: every
     per-type estimate must equal the exact count, and the ALL row must
     estimate the UNION of the per-type sketches (15 distinct users
     across two overlapping 10-user types), not their sum."""
     import datetime as dt
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -1005,31 +930,25 @@ def test_kmv_below_k_is_exact_and_merge_unions_types(spark):
         rows,
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_kmv_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "events.parquet"))
-        out = {
-            r.event_type: (r.n_exact, r.n_est, r.est_ok)
-            for r in get_query("q_sketch_kmv").fn(spark, d).collect()
-        }
-        assert out == {
-            "a": (10, 10, True),
-            "b": (10, 10, True),
-            "ALL": (15, 15, True),
-        }, out
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "events.parquet"))
+    out = {
+        r.event_type: (r.n_exact, r.n_est, r.est_ok)
+        for r in get_query("q_sketch_kmv").fn(spark, d).collect()
+    }
+    assert out == {
+        "a": (10, 10, True),
+        "b": (10, 10, True),
+        "ALL": (15, 15, True),
+    }, out
 
 
-def test_skew_report_exact_shares_and_tie_order(spark):
+def test_skew_report_exact_shares_and_tie_order(spark, tmp_path):
     """Pin q_skew_report's integer arithmetic on a known histogram:
     user 1 x7, user 2 x3, users 3..12 x1 -> median key 1, user 1 is
     350000 ppm and 70 tenths-of-median; count ties rank by user_id."""
     import datetime as dt
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -1043,23 +962,20 @@ def test_skew_report_exact_shares_and_tie_order(spark):
         rows,
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_skr_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "events.parquet"))
-        out = {
-            r.rnk: (r.user_id, r.n_rows_key, r.share_ppm, r.x10_vs_median,
-                    r.n_keys, r.n_rows)
-            for r in get_query("q_skew_report").fn(spark, d).collect()
-        }
-        assert out[1] == (1, 7, 350000, 70, 12, 20), out
-        assert out[2] == (2, 3, 150000, 30, 12, 20), out
-        # ties at count 1 rank by user_id ascending
-        assert [out[r][0] for r in range(3, 11)] == list(range(3, 11)), out
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "events.parquet"))
+    out = {
+        r.rnk: (r.user_id, r.n_rows_key, r.share_ppm, r.x10_vs_median,
+                r.n_keys, r.n_rows)
+        for r in get_query("q_skew_report").fn(spark, d).collect()
+    }
+    assert out[1] == (1, 7, 350000, 70, 12, 20), out
+    assert out[2] == (2, 3, 150000, 30, 12, 20), out
+    # ties at count 1 rank by user_id ascending
+    assert [out[r][0] for r in range(3, 11)] == list(range(3, 11)), out
 
 
-def test_asof_nearest_tie_gap_cutoff_and_bucket_edge(spark):
+def test_asof_nearest_tie_gap_cutoff_and_bucket_edge(spark, tmp_path):
     """Pin q_join_asof_nearest's rules: an equidistant before/after
     pair resolves to the EARLIER view; a nearest view outside the
     1-hour gap leaves the click unmatched (NULLs survive); an exact-ts
@@ -1068,9 +984,6 @@ def test_asof_nearest_tie_gap_cutoff_and_bucket_edge(spark):
     fan-out reaches the adjacent bucket."""
     import datetime as dt
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -1091,30 +1004,24 @@ def test_asof_nearest_tie_gap_cutoff_and_bucket_edge(spark):
         rows,
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_nrst_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "events.parquet"))
-        out = {
-            r.click_id: (r.view_id, r.gap_us, r.direction)
-            for r in get_query("q_join_asof_nearest").fn(spark, d).collect()
-        }
-        assert out[3] == (1, 1_800_000_000, "before"), out
-        assert out[5] == (None, None, None), out
-        assert out[7] == (6, 0, "exact"), out
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "events.parquet"))
+    out = {
+        r.click_id: (r.view_id, r.gap_us, r.direction)
+        for r in get_query("q_join_asof_nearest").fn(spark, d).collect()
+    }
+    assert out[3] == (1, 1_800_000_000, "before"), out
+    assert out[5] == (None, None, None), out
+    assert out[7] == (6, 0, "exact"), out
 
 
-def test_ccnet_buckets_order_by_fluency_and_partition_exactly(spark):
+def test_ccnet_buckets_order_by_fluency_and_partition_exactly(spark, tmp_path):
     """Pin q_text_ccnet_bucket's semantics on a constructed corpus:
     9 docs split into exact tertiles (3/3/3), the most predictable
     documents (one repeated bigram) land in head, the all-unique-token
     documents land in tail, and the doc_id sums prove the membership
     partition is exact and disjoint."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -1131,32 +1038,26 @@ def test_ccnet_buckets_order_by_fluency_and_partition_exactly(spark):
     df = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_ccn_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "documents.parquet"))
-        out = {
-            r.bucket: (r.n_docs, r.doc_id_sum)
-            for r in get_query("q_text_ccnet_bucket").fn(spark, d).collect()
-        }
-        assert out == {
-            "head": (3, 1 + 2 + 3),
-            "middle": (3, 4 + 5 + 6),
-            "tail": (3, 7 + 8 + 9),
-        }, out
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "documents.parquet"))
+    out = {
+        r.bucket: (r.n_docs, r.doc_id_sum)
+        for r in get_query("q_text_ccnet_bucket").fn(spark, d).collect()
+    }
+    assert out == {
+        "head": (3, 1 + 2 + 3),
+        "middle": (3, 4 + 5 + 6),
+        "tail": (3, 7 + 8 + 9),
+    }, out
 
 
-def test_rfm_scores_align_and_nonbuyers_are_absent(spark):
+def test_rfm_scores_align_and_nonbuyers_are_absent(spark, tmp_path):
     """Pin q_session_rfm: 5 users with strictly increasing recency,
     frequency, and spend land on the diagonal cells (i,i,i) with their
     own user_id as the membership sum; a user with views but no
     purchases appears in no cell."""
     import datetime as dt
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -1175,30 +1076,24 @@ def test_rfm_scores_align_and_nonbuyers_are_absent(spark):
         rows,
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_rfm_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "events.parquet"))
-        out = {
-            (r.r_score, r.f_score, r.m_score): (r.n_users, r.monetary_cents,
-                                                r.user_id_sum)
-            for r in get_query("q_session_rfm").fn(spark, d).collect()
-        }
-        assert out == {
-            (i, i, i): (1, i * i * 100, i) for i in range(1, 6)
-        }, out
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "events.parquet"))
+    out = {
+        (r.r_score, r.f_score, r.m_score): (r.n_users, r.monetary_cents,
+                                            r.user_id_sum)
+        for r in get_query("q_session_rfm").fn(spark, d).collect()
+    }
+    assert out == {
+        (i, i, i): (1, i * i * 100, i) for i in range(1, 6)
+    }, out
 
 
-def test_lang_confusion_shares_and_tie_prediction(spark):
+def test_lang_confusion_shares_and_tie_prediction(spark, tmp_path):
     """Pin q_text_lang_confusion on a constructed corpus: a 'bb' doc
     written entirely in 'aa' tokens lands in the (bb -> aa) cell (the
     profile-hit tie resolves to the lexicographically first language),
     and the exact ppm shares row- and column-normalize the matrix."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -1212,33 +1107,27 @@ def test_lang_confusion_shares_and_tie_prediction(spark):
     df = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_cfm_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "documents.parquet"))
-        out = {
-            (r.actual_lang, r.predicted_lang): (
-                r.n, r.doc_id_sum, r.share_of_actual_ppm, r.share_of_predicted_ppm
-            )
-            for r in get_query("q_text_lang_confusion").fn(spark, d).collect()
-        }
-        assert out == {
-            ("aa", "aa"): (2, 3, 1000000, 666666),
-            ("bb", "aa"): (1, 5, 333333, 333333),
-            ("bb", "bb"): (2, 7, 666666, 1000000),
-        }, out
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "documents.parquet"))
+    out = {
+        (r.actual_lang, r.predicted_lang): (
+            r.n, r.doc_id_sum, r.share_of_actual_ppm, r.share_of_predicted_ppm
+        )
+        for r in get_query("q_text_lang_confusion").fn(spark, d).collect()
+    }
+    assert out == {
+        ("aa", "aa"): (2, 3, 1000000, 666666),
+        ("bb", "aa"): (1, 5, 333333, 333333),
+        ("bb", "bb"): (2, 7, 666666, 1000000),
+    }, out
 
 
-def test_calibration_bins_exact_rates(spark):
+def test_calibration_bins_exact_rates(spark, tmp_path):
     """Pin q_ml_calibration's bin assignment and exact rates: scores
     10 and 90 cents with max 90 land in bins 1 and 9 (c*10 // 91), a
     mixed low bin reports 250000 ppm, a pure-positive bin 1000000."""
     import datetime as dt
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -1256,31 +1145,25 @@ def test_calibration_bins_exact_rates(spark):
         rows,
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_cal_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "events.parquet"))
-        out = {
-            r.bin: (r.n, r.n_pos, r.pos_rate_ppm, r.sum_score_cents,
-                    r.mean_score_cents)
-            for r in get_query("q_ml_calibration").fn(spark, d).collect()
-        }
-        assert out == {
-            1: (4, 1, 250000, 40, 10.0),
-            9: (2, 2, 1000000, 180, 90.0),
-        }, out
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "events.parquet"))
+    out = {
+        r.bin: (r.n, r.n_pos, r.pos_rate_ppm, r.sum_score_cents,
+                r.mean_score_cents)
+        for r in get_query("q_ml_calibration").fn(spark, d).collect()
+    }
+    assert out == {
+        1: (4, 1, 250000, 40, 10.0),
+        9: (2, 2, 1000000, 180, 90.0),
+    }, out
 
 
-def test_streaks_islands_and_month_boundary(spark):
+def test_streaks_islands_and_month_boundary(spark, tmp_path):
     """Pin q_win_streaks' islands arithmetic: runs split exactly at
     calendar gaps, a month boundary is NOT a gap (Jan 31 -> Feb 1),
     multiple events on one day collapse to one active day."""
     import datetime as dt
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -1302,26 +1185,20 @@ def test_streaks_islands_and_month_boundary(spark):
         rows,
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_stk_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "events.parquet"))
-        out = {
-            r.user_id: (r.active_days, r.n_streaks, r.longest_streak)
-            for r in get_query("q_win_streaks").fn(spark, d).collect()
-        }
-        assert out == {1: (6, 3, 3), 2: (4, 1, 4), 3: (1, 1, 1)}, out
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "events.parquet"))
+    out = {
+        r.user_id: (r.active_days, r.n_streaks, r.longest_streak)
+        for r in get_query("q_win_streaks").fn(spark, d).collect()
+    }
+    assert out == {1: (6, 3, 3), 2: (4, 1, 4), 3: (1, 1, 1)}, out
 
 
-def test_embed_outliers_exact_distance_and_tie(spark):
+def test_embed_outliers_exact_distance_and_tie(spark, tmp_path):
     """Pin q_embed_outliers against a literal integer recomputation of
     dist2n2 on a hand-built corpus, including the vec_id tie-break for
     two identical far vectors."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -1340,30 +1217,24 @@ def test_embed_outliers_exact_distance_and_tie(spark):
     dist = {i: sum((n * v[d] - s[d]) ** 2 for d in range(2)) for i, v in q}
     expect = sorted(dist.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
 
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_out_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "embeddings.parquet"))
-        got = [
-            (r.vec_id, r.dist2n2)
-            for r in sorted(
-                get_query("q_embed_outliers").fn(spark, d).collect(),
-                key=lambda r: r.rnk,
-            )
-        ]
-        assert got == expect, (got, expect)
-        assert got[0][0] == 20 and got[1][0] == 21  # tie -> smaller vec_id
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "embeddings.parquet"))
+    got = [
+        (r.vec_id, r.dist2n2)
+        for r in sorted(
+            get_query("q_embed_outliers").fn(spark, d).collect(),
+            key=lambda r: r.rnk,
+        )
+    ]
+    assert got == expect, (got, expect)
+    assert got[0][0] == 20 and got[1][0] == 21  # tie -> smaller vec_id
 
 
-def test_gini_zero_on_equal_and_exact_on_skewed(spark):
+def test_gini_zero_on_equal_and_exact_on_skewed(spark, tmp_path):
     """Pin q_agg_gini's rank identity: equal spends give exactly 0;
     spends [1,1,1,97] cents give numerator 288 and gini 0.72."""
     import datetime as dt
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -1382,27 +1253,21 @@ def test_gini_zero_on_equal_and_exact_on_skewed(spark):
         rows,
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_gini_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "events.parquet"))
-        out = {
-            r.event_type: (r.n_users, r.total_cents, r.gini_num, r.gini)
-            for r in get_query("q_agg_gini").fn(spark, d).collect()
-        }
-        assert out == {"eq": (4, 100, 0, 0.0), "sk": (4, 100, 288, 0.72)}, out
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "events.parquet"))
+    out = {
+        r.event_type: (r.n_users, r.total_cents, r.gini_num, r.gini)
+        for r in get_query("q_agg_gini").fn(spark, d).collect()
+    }
+    assert out == {"eq": (4, 100, 0, 0.0), "sk": (4, 100, 288, 0.72)}, out
 
 
-def test_entropy_zero_on_constant_and_lnk_on_uniform(spark):
+def test_entropy_zero_on_constant_and_lnk_on_uniform(spark, tmp_path):
     """Pin q_text_entropy's identity: a language of one repeated token
     has exactly 0 nats; k distinct once-only tokens have ln(k) (to the
     1e-6 grid)."""
     import math
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -1414,30 +1279,24 @@ def test_entropy_zero_on_constant_and_lnk_on_uniform(spark):
     df = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_ent_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "documents.parquet"))
-        out = {
-            r.lang: (r.n_tokens, r.n_distinct, r.clnc_scaled, r.entropy_nats)
-            for r in get_query("q_text_entropy").fn(spark, d).collect()
-        }
-        lnq = lambda x: math.floor(math.log(x) * 1_000_000 + 0.5)
-        assert out["cc"] == (12, 1, 12 * lnq(12), 0.0), out
-        assert out["uu"] == (k, k, 0, round(lnq(k) / 1e6, 4)), out
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "documents.parquet"))
+    out = {
+        r.lang: (r.n_tokens, r.n_distinct, r.clnc_scaled, r.entropy_nats)
+        for r in get_query("q_text_entropy").fn(spark, d).collect()
+    }
+    lnq = lambda x: math.floor(math.log(x) * 1_000_000 + 0.5)
+    assert out["cc"] == (12, 1, 12 * lnq(12), 0.0), out
+    assert out["uu"] == (k, k, 0, round(lnq(k) / 1e6, 4)), out
 
 
-def test_pareto_n80_boundary_rules(spark):
+def test_pareto_n80_boundary_rules(spark, tmp_path):
     """Pin q_agg_pareto's crossing rule: a single dominant user who
     holds exactly 80% yields n80 = 1 (the integer test 5*cum >= 4*total
     includes the crossing row); an equal split of 5 users needs 4 of
     them to reach 80%."""
     import datetime as dt
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -1458,29 +1317,23 @@ def test_pareto_n80_boundary_rules(spark):
         rows,
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_p80_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "events.parquet"))
-        out = {
-            r.event_type: (r.n_users, r.total_cents, r.n80, r.n80_ppm)
-            for r in get_query("q_agg_pareto").fn(spark, d).collect()
-        }
-        assert out == {
-            "dom": (3, 100, 1, 333333),
-            "flat": (5, 100, 4, 800000),
-        }, out
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "events.parquet"))
+    out = {
+        r.event_type: (r.n_users, r.total_cents, r.n80, r.n80_ppm)
+        for r in get_query("q_agg_pareto").fn(spark, d).collect()
+    }
+    assert out == {
+        "dom": (3, 100, 1, 333333),
+        "flat": (5, 100, 4, 800000),
+    }, out
 
 
-def test_time_travel_reads_historical_not_latest(spark):
+def test_time_travel_reads_historical_not_latest(spark, tmp_path):
     """source_time_travel must resolve version 2 through the manifest
     and read the HISTORICAL subset: with doc ids 0..7, v2 holds ids
     with doc_id %% 4 <= 2 (six docs), not v3's full eight."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -1488,26 +1341,20 @@ def test_time_travel_reads_historical_not_latest(spark):
     df = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_ttt_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "documents.parquet"))
-        r = get_query("source_time_travel").fn(spark, d).collect()[0]
-        keep = [i for i in range(8) if i % 4 <= 2]
-        assert (r.version_read, r.n_versions, r.n_docs, r.sum_chars) == (
-            2, 3, len(keep), sum(10 + i for i in keep)
-        ), r
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "documents.parquet"))
+    r = get_query("source_time_travel").fn(spark, d).collect()[0]
+    keep = [i for i in range(8) if i % 4 <= 2]
+    assert (r.version_read, r.n_versions, r.n_docs, r.sum_chars) == (
+        2, 3, len(keep), sum(10 + i for i in keep)
+    ), r
 
 
-def test_dup_rate_attributes_cross_source_copies(spark):
+def test_dup_rate_attributes_cross_source_copies(spark, tmp_path):
     """q_dedup_rate_by_source must count a duplicate against EVERY
     source carrying a copy: the same text in sources A and B marks one
     doc in each; unique docs stay clean; ppm is exact floor division."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -1521,26 +1368,20 @@ def test_dup_rate_attributes_cross_source_copies(spark):
     df = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_dps_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "documents.parquet"))
-        out = {
-            r.source: (r.n_docs, r.n_dup_docs, r.dup_ppm)
-            for r in get_query("q_dedup_rate_by_source").fn(spark, d).collect()
-        }
-        assert out == {"A": (2, 1, 500000), "B": (3, 1, 333333)}, out
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "documents.parquet"))
+    out = {
+        r.source: (r.n_docs, r.n_dup_docs, r.dup_ppm)
+        for r in get_query("q_dedup_rate_by_source").fn(spark, d).collect()
+    }
+    assert out == {"A": (2, 1, 500000), "B": (3, 1, 333333)}, out
 
 
-def test_novelty_shared_vs_unique_shingles(spark):
+def test_novelty_shared_vs_unique_shingles(spark, tmp_path):
     """Pin q_text_novelty: two docs sharing their full shingle set have
     0 novel shingles; a doc with entirely unique text is 1000000 ppm;
     a doc sharing exactly one of its three shingles lands at 666666."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -1557,32 +1398,26 @@ def test_novelty_shared_vs_unique_shingles(spark):
     df = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_nov_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "documents.parquet"))
-        out = {
-            r.lang: (r.n_docs, r.n_shingles, r.n_novel, r.novelty_ppm)
-            for r in get_query("q_text_novelty").fn(spark, d).collect()
-        }
-        # aa docs: shingles {'a b c','b c d'} x2 docs; 'b c d' is also
-        # in doc 4, 'a b c' appears in BOTH aa docs -> nothing novel
-        assert out["aa"] == (2, 4, 0, 0), out
-        assert out["bb"] == (1, 2, 2, 1000000), out
-        # doc 4: 'b c d' shared with aa, 'c d x'/'d x y' unique
-        assert out["cc"] == (1, 3, 2, 666666), out
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "documents.parquet"))
+    out = {
+        r.lang: (r.n_docs, r.n_shingles, r.n_novel, r.novelty_ppm)
+        for r in get_query("q_text_novelty").fn(spark, d).collect()
+    }
+    # aa docs: shingles {'a b c','b c d'} x2 docs; 'b c d' is also
+    # in doc 4, 'a b c' appears in BOTH aa docs -> nothing novel
+    assert out["aa"] == (2, 4, 0, 0), out
+    assert out["bb"] == (1, 2, 2, 1000000), out
+    # doc 4: 'b c d' shared with aa, 'c d x'/'d x y' unique
+    assert out["cc"] == (1, 3, 2, 666666), out
 
 
-def test_profile_drift_matches_literal_recomputation(spark):
+def test_profile_drift_matches_literal_recomputation(spark, tmp_path):
     """Pin q_profile_drift against a hashlib recomputation of the
     split boundary, per-half counts, mean lengths, and the exact TVD
     numerator on a hand-built corpus."""
     import hashlib
     import os
-    import shutil
-    import tempfile
-    import uuid
     from collections import Counter
 
     from jsmr_spark.registry import get_query
@@ -1603,26 +1438,20 @@ def test_profile_drift_matches_literal_recomputation(spark):
     tvd_num = sum(
         abs(ca.get(l, 0) * nb - cb.get(l, 0) * na) for l in set(ca) | set(cb)
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_drift_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "documents.parquet"))
-        r = get_query("q_profile_drift").fn(spark, d).collect()[0]
-        assert (r.n_a, r.n_b, r.tvd_num) == (na, nb, tvd_num), (r, na, nb, tvd_num)
-        assert r.mean_chars_a == round(sum(nc for *_, nc in a) / na, 4)
-        assert r.mean_chars_b == round(sum(nc for *_, nc in b) / nb, 4)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "documents.parquet"))
+    r = get_query("q_profile_drift").fn(spark, d).collect()[0]
+    assert (r.n_a, r.n_b, r.tvd_num) == (na, nb, tvd_num), (r, na, nb, tvd_num)
+    assert r.mean_chars_a == round(sum(nc for *_, nc in a) / na, 4)
+    assert r.mean_chars_b == round(sum(nc for *_, nc in b) / nb, 4)
 
 
-def test_winsorized_clamp_decomposition(spark):
+def test_winsorized_clamp_decomposition(spark, tmp_path):
     """Pin q_agg_winsorized on a known frame: quantities 1..19 plus a
     1000 outlier; p05/p95 interpolate at rank 0.05*(n-1)/0.95*(n-1),
     the outlier clamps to p95, and win_mean equals the literal
     decomposition mid_sum + n_low*p05 + n_high*p95 over n."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -1645,27 +1474,21 @@ def test_winsorized_clamp_decomposition(spark):
     mid = sum(v for v in s if p05 <= v <= p95)
     win_mean = round((mid + n_low * p05 + n_high * p95) / n, 4)
 
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_win_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "lineitem.parquet"))
-        r = get_query("q_agg_winsorized").fn(spark, d).collect()[0]
-        assert (r.p05, r.p95, r.n_low, r.n_high, r.win_mean) == (
-            round(p05, 4), round(p95, 4), n_low, n_high, win_mean
-        ), (r, p05, p95, n_low, n_high, win_mean)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "lineitem.parquet"))
+    r = get_query("q_agg_winsorized").fn(spark, d).collect()[0]
+    assert (r.p05, r.p95, r.n_low, r.n_high, r.win_mean) == (
+        round(p05, 4), round(p95, 4), n_low, n_high, win_mean
+    ), (r, p05, p95, n_low, n_high, win_mean)
 
 
-def test_geo_knn_rank_order_and_radius_bound(spark):
+def test_geo_knn_rank_order_and_radius_bound(spark, tmp_path):
     """Pin q_geo_knn: neighbor ranks follow exact integer d2 with the
     nbr-id tie-break, a point with fewer than k radius-neighbors emits
     only what exists, and results match a literal brute-force kNN over
     the same synthetic coordinates."""
     import datetime as dt
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.queries.sampling_geo import (
         GEO_DOMAIN, GEO_KNN_K, GEO_PX, GEO_PY, GEO_RADIUS,
@@ -1691,27 +1514,21 @@ def test_geo_knn_rank_order_and_radius_bound(spark):
         )[:GEO_KNN_K]
         for r, (d2, v) in enumerate(cand, start=1):
             expect[(u, r)] = (v, d2)
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_knn_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "events.parquet"))
-        got = {
-            (r.user_id, r.rnk): (r.nbr, r.d2)
-            for r in get_query("q_geo_knn").fn(spark, d).collect()
-        }
-        assert got == expect, (got, expect)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "events.parquet"))
+    got = {
+        (r.user_id, r.rnk): (r.nbr, r.d2)
+        for r in get_query("q_geo_knn").fn(spark, d).collect()
+    }
+    assert got == expect, (got, expect)
 
 
-def test_kmv_intersect_exact_below_k(spark):
+def test_kmv_intersect_exact_below_k(spark, tmp_path):
     """Below k per side the KMV inclusion-exclusion is exact: sides of
     10 and 12 users overlapping in 4 give est_inter == 4 and the union
     estimate == 18, with est_ok true."""
     import datetime as dt
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -1727,27 +1544,21 @@ def test_kmv_intersect_exact_below_k(spark):
         rows,
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_kmi_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "events.parquet"))
-        r = get_query("q_sketch_kmv_intersect").fn(spark, d).collect()[0]
-        assert (
-            r.n_a_exact, r.n_b_exact, r.n_inter_exact,
-            r.est_a, r.est_b, r.est_union, r.est_inter, r.est_ok,
-        ) == (10, 12, 4, 10, 12, 18, 4, True), r
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "events.parquet"))
+    r = get_query("q_sketch_kmv_intersect").fn(spark, d).collect()[0]
+    assert (
+        r.n_a_exact, r.n_b_exact, r.n_inter_exact,
+        r.est_a, r.est_b, r.est_union, r.est_inter, r.est_ok,
+    ) == (10, 12, 4, 10, 12, 18, 4, True), r
 
 
-def test_concurrency_sweep_counts_overlaps_and_half_open_ends(spark):
+def test_concurrency_sweep_counts_overlaps_and_half_open_ends(spark, tmp_path):
     """Pin q_ts_concurrency: three overlapping single-day user spans
     peak at 3; a span STARTING at the exact microsecond another ends
     does not overlap it (half-open [s, e+1) semantics)."""
     import datetime as dt
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from jsmr_spark.registry import get_query
 
@@ -1771,28 +1582,24 @@ def test_concurrency_sweep_counts_overlaps_and_half_open_ends(spark):
         rows,
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
-    d = os.path.join(tempfile.gettempdir(), f"jsmr_conc_{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.parquet(os.path.join(d, "events.parquet"))
-        out = {
-            str(r.day): (r.max_concurrent, r.n_instants)
-            for r in get_query("q_ts_concurrency").fn(spark, d).collect()
-        }
-        # peak 3 (users 1,2,3 at 10:08); user 4 alone after 2 closes.
-        # 7 distinct instants, not 8: user 2's end (last+1us) IS user
-        # 4's start instant and the two deltas net to 0 there — the
-        # same-instant merge that makes the prefix sum tie-free.
-        assert out == {"2025-02-01": (3, 7)}, out
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    d = str(tmp_path)
+    df.write.parquet(os.path.join(d, "events.parquet"))
+    out = {
+        str(r.day): (r.max_concurrent, r.n_instants)
+        for r in get_query("q_ts_concurrency").fn(spark, d).collect()
+    }
+    # peak 3 (users 1,2,3 at 10:08); user 4 alone after 2 closes.
+    # 7 distinct instants, not 8: user 2's end (last+1us) IS user
+    # 4's start instant and the two deltas net to 0 there — the
+    # same-instant merge that makes the prefix sum tie-free.
+    assert out == {"2025-02-01": (3, 7)}, out
 
 
-def test_naive_bayes_separable_vocab(spark):
+def test_naive_bayes_separable_vocab(spark, tmp_path):
     """Two languages with fully disjoint vocabularies must classify
     perfectly, and the model's smoothing must not flip the argmax even
     for the shortest doc."""
     import os
-    import tempfile
 
     from jsmr_spark.registry import get_query
 
@@ -1802,25 +1609,24 @@ def test_naive_bayes_separable_vocab(spark):
         (3, "rock stone rock", "bb"),
         (4, "stone", "bb"),
     ]
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(
-            [(i, t, len(t), l, "src0") for i, t, l in rows_in],
-            "doc_id long, text string, n_chars long, lang string, source string",
-        ).write.parquet(os.path.join(d, "documents.parquet"))
-        out = {r.doc_id: r for r in get_query("q_ml_naive_bayes").fn(spark, d).collect()}
+    d = str(tmp_path)
+    spark.createDataFrame(
+        [(i, t, len(t), l, "src0") for i, t, l in rows_in],
+        "doc_id long, text string, n_chars long, lang string, source string",
+    ).write.parquet(os.path.join(d, "documents.parquet"))
+    out = {r.doc_id: r for r in get_query("q_ml_naive_bayes").fn(spark, d).collect()}
     assert len(out) == 4
     assert all(r.correct for r in out.values()), out
     assert out[4].pred_lang == "bb"
 
 
-def test_lttb_selects_the_spike(spark):
+def test_lttb_selects_the_spike(spark, tmp_path):
     """Three hour-buckets, a flat series with one spike in the interior
     bucket: the spike spans the largest triangle with the neighbor
     means and must be the selected point; boundary buckets (no
     prev/next) emit nothing."""
     import datetime as dt
     import os
-    import tempfile
 
     from jsmr_spark.registry import get_query
 
@@ -1833,12 +1639,12 @@ def test_lttb_selects_the_spike(spark):
         (5, t0 + dt.timedelta(hours=1, minutes=55), 7, "tick", 1.00),
         (6, t0 + dt.timedelta(hours=2, minutes=10), 7, "tick", 1.00),
     ]
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(
-            [(i, ts, u, et, v, "{}") for i, ts, u, et, v in evs],
-            "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-        ).write.parquet(os.path.join(d, "events.parquet"))
-        rows = get_query("q_ts_lttb").fn(spark, d).collect()
+    d = str(tmp_path)
+    spark.createDataFrame(
+        [(i, ts, u, et, v, "{}") for i, ts, u, et, v in evs],
+        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
+    ).write.parquet(os.path.join(d, "events.parquet"))
+    rows = get_query("q_ts_lttb").fn(spark, d).collect()
     assert len(rows) == 1, rows  # only the interior bucket selects
     assert rows[0].event_id == 4 and rows[0].yc == 5000
 
@@ -1865,68 +1671,65 @@ def test_kcore_peel_invariants(spark):
     assert all(out[u] <= deg[u] for u in out)
 
 
-def test_corr_matrix_planted_correlations(spark):
+def test_corr_matrix_planted_correlations(spark, tmp_path):
     """Plant qty == price (r = 1.0 exactly) and a CONSTANT discount
     (zero variance -> NULL r for every pair that touches it)."""
     import datetime as dt
     import os
-    import tempfile
 
     from jsmr_spark.registry import get_query
 
     rows_in = [(i, float(i + 1), float(i + 1), 0.05, 0.01 * (i % 3)) for i in range(8)]
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(
-            [
-                (1, 1, 1, i, q, p, disc, tax, "N", "O",
-                 dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 2),
-                 dt.datetime(2024, 1, 3), "c", "m", "x")
-                for i, q, p, disc, tax in rows_in
-            ],
-            "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
-            "l_quantity double, l_extendedprice double, l_discount double, l_tax double, "
-            "l_returnflag string, l_linestatus string, l_shipdate timestamp, "
-            "l_commitdate timestamp, l_receiptdate timestamp, "
-            "l_shipinstruct string, l_shipmode string, l_comment string",
-        ).write.parquet(os.path.join(d, "lineitem.parquet"))
-        out = {
-            (r.feat_x, r.feat_y): r.corr
-            for r in get_query("q_agg_corr_matrix").fn(spark, d).collect()
-        }
+    d = str(tmp_path)
+    spark.createDataFrame(
+        [
+            (1, 1, 1, i, q, p, disc, tax, "N", "O",
+             dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 2),
+             dt.datetime(2024, 1, 3), "c", "m", "x")
+            for i, q, p, disc, tax in rows_in
+        ],
+        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
+        "l_quantity double, l_extendedprice double, l_discount double, l_tax double, "
+        "l_returnflag string, l_linestatus string, l_shipdate timestamp, "
+        "l_commitdate timestamp, l_receiptdate timestamp, "
+        "l_shipinstruct string, l_shipmode string, l_comment string",
+    ).write.parquet(os.path.join(d, "lineitem.parquet"))
+    out = {
+        (r.feat_x, r.feat_y): r.corr
+        for r in get_query("q_agg_corr_matrix").fn(spark, d).collect()
+    }
     assert len(out) == 6
     assert out[("qty", "price")] == 1.0
     assert out[("qty", "disc")] is None and out[("price", "disc")] is None
     assert out[("disc", "tax")] is None
 
 
-def test_vocab_coverage_hand_counts(spark):
+def test_vocab_coverage_hand_counts(spark, tmp_path):
     """7-token vocabulary with known skew: K=5 must cover exactly the
     top-5 counts; K=10/20 cover everything."""
     import os
-    import tempfile
 
     from jsmr_spark.registry import get_query
 
     # counts: a:5 b:4 c:3 d:2 e:2 f:1 g:1  (total 18; top5 = 16)
     text = " ".join(["a"] * 5 + ["b"] * 4 + ["c"] * 3 + ["d"] * 2 + ["e"] * 2 + ["f", "g"])
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(
-            [(1, text, len(text), "en", "src0")],
-            "doc_id long, text string, n_chars long, lang string, source string",
-        ).write.parquet(os.path.join(d, "documents.parquet"))
-        out = {r.k: r for r in get_query("q_text_vocab_coverage").fn(spark, d).collect()}
+    d = str(tmp_path)
+    spark.createDataFrame(
+        [(1, text, len(text), "en", "src0")],
+        "doc_id long, text string, n_chars long, lang string, source string",
+    ).write.parquet(os.path.join(d, "documents.parquet"))
+    out = {r.k: r for r in get_query("q_text_vocab_coverage").fn(spark, d).collect()}
     assert out[5].vocab_size == 7 and out[5].total_tokens == 18
     assert out[5].covered_tokens == 16
     assert out[5].coverage_ppm == 16 * 1000000 // 18
     assert out[10].covered_tokens == 18 and out[20].coverage_ppm == 1000000
 
 
-def test_dedup_priority_prefers_even_then_low_index(spark):
+def test_dedup_priority_prefers_even_then_low_index(spark, tmp_path):
     """Same text from src1/src2/src4: src2 wins (even beats odd, then
     lower index); a group entirely from odd sources keeps the lowest
     odd index."""
     import os
-    import tempfile
 
     from jsmr_spark.registry import get_query
 
@@ -1938,12 +1741,12 @@ def test_dedup_priority_prefers_even_then_low_index(spark):
         (5, "other text", "src5"),
         (6, "unique", "src1"),
     ]
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(
-            [(i, t, len(t), "en", s) for i, t, s in docs],
-            "doc_id long, text string, n_chars long, lang string, source string",
-        ).write.parquet(os.path.join(d, "documents.parquet"))
-        rows = get_query("q_mix_dedup_priority").fn(spark, d).collect()
+    d = str(tmp_path)
+    spark.createDataFrame(
+        [(i, t, len(t), "en", s) for i, t, s in docs],
+        "doc_id long, text string, n_chars long, lang string, source string",
+    ).write.parquet(os.path.join(d, "documents.parquet"))
+    rows = get_query("q_mix_dedup_priority").fn(spark, d).collect()
     assert len(rows) == 3  # full keep-table census: one row per digest
     out = {r.kept_source: r for r in rows if r.is_dup_group}
     assert len(out) == 2  # the unique doc is not a dup group
@@ -1967,11 +1770,10 @@ def test_kfold_partition_of_corpus(spark):
     assert sum(r.token_share_ppm for r in rows) <= 1_000_000
 
 
-def test_bag_of_words_flags_reorderings(spark):
+def test_bag_of_words_flags_reorderings(spark, tmp_path):
     """'a b c' vs 'c b a' collide on the bag signature with TWO exact
     variants (a true reordering); an exact-dup pair collides with ONE."""
     import os
-    import tempfile
 
     from jsmr_spark.registry import get_query
 
@@ -1982,12 +1784,12 @@ def test_bag_of_words_flags_reorderings(spark):
         (4, "x y", "src2"),
         (5, "lonely", "src0"),
     ]
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(
-            [(i, t, len(t), "en", s) for i, t, s in docs],
-            "doc_id long, text string, n_chars long, lang string, source string",
-        ).write.parquet(os.path.join(d, "documents.parquet"))
-        rows = get_query("q_dedup_bag_of_words").fn(spark, d).collect()
+    d = str(tmp_path)
+    spark.createDataFrame(
+        [(i, t, len(t), "en", s) for i, t, s in docs],
+        "doc_id long, text string, n_chars long, lang string, source string",
+    ).write.parquet(os.path.join(d, "documents.parquet"))
+    rows = get_query("q_dedup_bag_of_words").fn(spark, d).collect()
     assert len(rows) == 3  # full census: one row per distinct bag
     out = {r.kept_doc_id: r for r in rows if r.n_docs > 1}
     assert len(out) == 2

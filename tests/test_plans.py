@@ -260,42 +260,34 @@ def test_partsupp_q20_in_is_semi_join(spark):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
 
 
-def test_nested_schema_pruning(spark):
+def test_nested_schema_pruning(spark, tmp_path):
     """The sink_nested read-back must push a pruned struct into the
     parquet scan: only the two narrow leaves read, the wide string
     leaves and the unread array column absent from ReadSchema."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql import functions as F
 
     from jsmr_spark.io import load_table
 
-    out = os.path.join(tempfile.gettempdir(), f"jsmr_nested_plan_{uuid.uuid4().hex[:8]}")
-    try:
-        load_table(spark, SF_DIR, "orders").select(
-            "o_orderkey",
-            F.struct(
-                F.col("o_orderstatus").alias("status"),
-                F.lit(1).alias("price_c"),
-                F.col("o_orderpriority").alias("priority"),
-                F.col("o_orderdate").cast("string").alias("odate"),
-            ).alias("meta"),
-            F.array(F.col("o_custkey")).alias("keys"),
-        ).write.mode("overwrite").parquet(out)
-        df = (
-            spark.read.parquet(out)
-            .select(F.col("meta.status"), F.col("meta.price_c"))
-        )
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        read = plan[plan.index("ReadSchema") :].splitlines()[0]
-        assert "status" in read and "price_c" in read, read
-        assert "priority" not in read and "odate" not in read, read
-        assert "keys" not in read, read
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    out = str(tmp_path)
+    load_table(spark, SF_DIR, "orders").select(
+        "o_orderkey",
+        F.struct(
+            F.col("o_orderstatus").alias("status"),
+            F.lit(1).alias("price_c"),
+            F.col("o_orderpriority").alias("priority"),
+            F.col("o_orderdate").cast("string").alias("odate"),
+        ).alias("meta"),
+        F.array(F.col("o_custkey")).alias("keys"),
+    ).write.mode("overwrite").parquet(out)
+    df = (
+        spark.read.parquet(out)
+        .select(F.col("meta.status"), F.col("meta.price_c"))
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    read = plan[plan.index("ReadSchema") :].splitlines()[0]
+    assert "status" in read and "price_c" in read, read
+    assert "priority" not in read and "odate" not in read, read
+    assert "keys" not in read, read
 
 
 def test_existence_join_plans_as_existence(spark):

@@ -14,13 +14,19 @@ configurations would individually hash-match some oracle run.
 
 from __future__ import annotations
 
+import ast
+import os
+import tempfile
+from pathlib import Path
+
 import pytest
 
 import pyspark.errors.utils
 from pyspark.errors import IllegalArgumentException
 
-from jsmr_spark import session
-from jsmr_spark.registry import get_query
+from jsmr_spark import queries, session
+from jsmr_spark.queries.common import scratch_dir
+from jsmr_spark.registry import canonical_specs, get_query
 from jsmr_spark.session import conf_override, ensure_engine_confs, get_spark
 from tests.conftest import SF_DIR, canon_rows
 
@@ -338,3 +344,62 @@ def test_warm_headline_pass_compiles_nothing(spark):
     with conf_override(spark, {"spark.sql.adaptive.enabled": "false"}):
         headline_pass()
         assert headline_pass() == 0
+
+
+# --- scratch directories (queries.common.scratch_dir) ------------------------
+
+# Every key that stages files: the sink_/source_ keys, plus the three
+# queries that write a staging table of their own.
+SCRATCH_KEYS = sorted(
+    [k for k in canonical_specs() if k.startswith(("sink_", "source_"))]
+    + ["q_join_dpp", "q_source_csv_malformed", "q_sketch_hll_merge"]
+)
+
+
+def test_scratch_dir_is_unique_and_removed(tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    with scratch_dir("k") as first, scratch_dir("k") as second:
+        assert first != second
+        assert os.path.basename(first).startswith("jsmr_k_")
+        os.mkdir(os.path.join(first, "sub"))
+        open(os.path.join(first, "sub", "part-0"), "w").close()
+    assert os.listdir(tmp_path) == []
+
+
+def test_scratch_dir_is_removed_when_the_block_raises(tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    with pytest.raises(RuntimeError, match="write failed"):
+        with scratch_dir("k") as d:
+            open(os.path.join(d, "part-0"), "w").close()
+            raise RuntimeError("write failed")
+    assert os.listdir(tmp_path) == []
+
+
+@pytest.mark.parametrize("name", SCRATCH_KEYS)
+def test_key_leaves_no_scratch_dir(spark, tmp_path, monkeypatch, name):
+    """Once a key's rows are collected, nothing it staged is left under
+    the temp root: a result that still read its scratch directory could
+    never release it."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert get_query(name).fn(spark, SF_DIR).collect()
+    assert os.listdir(tmp_path) == []
+
+
+def test_only_common_asks_tempfile_for_a_location():
+    """Query modules take scratch space through common.scratch_dir
+    alone, so where staged files live and when they go is decided once."""
+    found = {}
+    for path in sorted(Path(queries.__file__).parent.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "tempfile"
+                and node.attr in ("gettempdir", "mkdtemp")
+            ) or (
+                isinstance(node, ast.ImportFrom)
+                and node.module == "tempfile"
+                and {a.name for a in node.names} & {"gettempdir", "mkdtemp"}
+            ):
+                found.setdefault(path.name, []).append(node.lineno)
+    assert list(found) == ["common.py"], found
