@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from jsmr_spark.compat import cents, pct, r4, sql_cents, sql_pct
-from jsmr_spark.queries.common import scratch_dir, sql, t
+from jsmr_spark.queries.common import collected, scratch_dir, sql, t
 from jsmr_spark.registry import query
 
 _PRICE_C = sql_cents("l_extendedprice")
@@ -836,21 +836,17 @@ def q_sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact = ev.groupBy("event_type").agg(
             F.countDistinct("user_id").alias("n_exact")
         )
-        rows = (
-            exact.join(merged, "event_type")
-            .select(
+        return collected(
+            exact.join(merged, "event_type").select(
                 "event_type",
                 "n_exact",
                 (
                     F.abs(F.col("est") - F.col("n_exact"))
                     <= 0.02 * F.col("n_exact")
                 ).alias("est_ok"),
-            )
-            .collect()
+            ),
+            "event_type string, n_exact bigint, est_ok boolean",
         )
-    return spark.createDataFrame(
-        rows, "event_type string, n_exact bigint, est_ok boolean"
-    )
 
 
 _FILTER_CLAUSE_SQL = f"""

@@ -8,6 +8,8 @@ from collections.abc import Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from jsmr_spark.io import load_table, register_views
 
@@ -46,3 +48,27 @@ def scratch_dir(name: str) -> Iterator[str]:
         yield path
     finally:
         shutil.rmtree(path, ignore_errors=True)
+
+
+def collected(df: DataFrame, ddl: str) -> DataFrame:
+    """Collect ``df`` and return its rows as a local relation with the
+    schema ``ddl``: the rows ``spark.createDataFrame(df.collect(), ddl)``
+    gives, without taking them through Python.
+
+    The rows stay in the driver JVM (``collectAsList`` plus the JVM's
+    ``createDataFrame(List<Row>, StructType)``). A Python list handed to
+    ``createDataFrame`` goes through ``sc.parallelize`` instead, so every
+    later collect of it runs ``defaultParallelism`` Python worker tasks.
+    Columns map to the DDL's fields by position and are cast to their
+    types, so an int column declared long arrives as long; the schema,
+    nullability included, is the DDL's. Only for rows a Spark collect
+    hands on unchanged: rows Python computes keep ``createDataFrame``.
+    """
+    spark = df.sparkSession
+    fields = StructType.fromDDL(ddl).fields
+    typed = df.toDF(*(f.name for f in fields)).select(
+        *(F.col(f.name).cast(f.dataType) for f in fields)
+    )
+    schema = spark._jvm.org.apache.spark.sql.types.StructType.fromDDL(ddl)
+    jdf = spark._jsparkSession.createDataFrame(typed._jdf.collectAsList(), schema)
+    return DataFrame(jdf, spark)

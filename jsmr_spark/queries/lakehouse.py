@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jsmr_spark.compat import cents, r4, sql_cents
-from jsmr_spark.queries.common import scratch_dir, t
+from jsmr_spark.queries.common import collected, scratch_dir, t
 from jsmr_spark.registry import query
 
 CUTOFF = "1999-01-01"
@@ -215,7 +215,9 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("zbucket")
             .parquet(out_dir)
         )
-        back = spark.read.parquet(out_dir)
+        # The schema just written (partition column last, as inference
+        # orders it): inferring it again costs a Spark job per run.
+        back = spark.read.schema("d int, pc long, zbucket int").parquet(out_dir)
         probe_lo = F.expr(f"datediff(DATE '{PROBE_DAY_LO}', DATE '1970-01-01')")
         probe_hi = F.expr(f"datediff(DATE '{PROBE_DAY_HI}', DATE '1970-01-01')")
         res = (
@@ -242,12 +244,11 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("scanned"),
             )
         )
-        rows = res.collect()
-    return spark.createDataFrame(
-        rows,
-        "zbucket int, n_rows long, min_day int, max_day int, "
-        "min_cents long, max_cents long, scanned boolean",
-    )
+        return collected(
+            res,
+            "zbucket int, n_rows long, min_day int, max_day int, "
+            "min_cents long, max_cents long, scanned boolean",
+        )
 
 
 @query(

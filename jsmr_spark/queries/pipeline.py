@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from jsmr_spark.compat import cents, r4, sql_cents
-from jsmr_spark.queries.common import scratch_dir, t
+from jsmr_spark.queries.common import collected, scratch_dir, t
 from jsmr_spark.queries.dedup import hex12_sql
 from jsmr_spark.queries.dedup_extra import EMB_COS_MIN
 from jsmr_spark.registry import query
@@ -457,8 +457,7 @@ def sink_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .withColumn("shard", F.col("shard").cast("long"))
         )
-        rows = out.collect()
-    return spark.createDataFrame(rows, "shard long, n_docs long, n_tokens long")
+        return collected(out, "shard long, n_docs long, n_tokens long")
 
 
 def _clusters_lsh_oracle() -> str:

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jsmr_spark.compat import cents, sql_cents
-from jsmr_spark.queries.common import scratch_dir, t
+from jsmr_spark.queries.common import collected, scratch_dir, t
 from jsmr_spark.registry import query
 from jsmr_spark.session import conf_override
 
@@ -174,7 +174,4 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "overwrite"
             ).partitionBy("event_type").parquet(out)
         back = spark.read.parquet(out).select("event_type", "day", "n", "sum_cents")
-        rows = back.collect()
-    return spark.createDataFrame(
-        rows, "event_type string, day date, n bigint, sum_cents bigint"
-    )
+        return collected(back, "event_type string, day date, n bigint, sum_cents bigint")

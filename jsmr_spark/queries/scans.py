@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jsmr_spark.compat import cents, sql_cents
-from jsmr_spark.queries.common import scratch_dir, t
+from jsmr_spark.queries.common import collected, scratch_dir, t
 from jsmr_spark.registry import query
 
 
@@ -124,20 +124,22 @@ def _sink_roundtrip(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
             )
         )
         writer = src.write.mode("overwrite")
+        # Every branch re-reads with the schema it wrote: inferring it
+        # would cost parquet and orc a Spark job, json a second read.
+        reader = spark.read.schema(_SINK_SCHEMA)
         if fmt == "parquet":
             writer.parquet(out_dir)
-            back = spark.read.parquet(out_dir)
+            back = reader.parquet(out_dir)
         elif fmt == "orc":
             writer.orc(out_dir)
-            back = spark.read.orc(out_dir)
+            back = reader.orc(out_dir)
         elif fmt == "json":
             writer.json(out_dir)
-            back = spark.read.schema(_SINK_SCHEMA).json(out_dir)
+            back = reader.json(out_dir)
         else:
             writer.option("header", "true").csv(out_dir)
-            back = spark.read.schema(_SINK_SCHEMA).option("header", "true").csv(out_dir)
-        rows = back.collect()
-    return spark.createDataFrame(rows, _SINK_SCHEMA)
+            back = reader.option("header", "true").csv(out_dir)
+        return collected(back, _SINK_SCHEMA)
 
 
 @query("sink_parquet", _SINK_AGG_ORACLE)
@@ -193,7 +195,7 @@ def source_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_written = src.count()
     with scratch_dir("source_text") as out_dir:
         src.write.mode("overwrite").text(out_dir)
-        rows = (
+        return collected(
             spark.read.text(out_dir)
             .select(F.size(F.split(F.col("value"), " ")).cast("long").alias("n_tokens"))
             .agg(
@@ -201,14 +203,10 @@ def source_text(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).alias("n_lines_reread"),
                 F.sum("n_tokens").alias("total_tokens"),
                 (F.count(F.lit(1)) == n_written).alias("roundtrip_ok"),
-            )
-            .collect()
+            ),
+            "n_lines_written bigint, n_lines_reread bigint, total_tokens bigint, "
+            "roundtrip_ok boolean",
         )
-    return spark.createDataFrame(
-        rows,
-        "n_lines_written bigint, n_lines_reread bigint, total_tokens bigint, "
-        "roundtrip_ok boolean",
-    )
 
 
 @query(
@@ -234,7 +232,7 @@ def source_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = t(spark, sf_dir, "events").select("event_id", "event_type", "user_id")
     with scratch_dir("source_jsonl") as out_dir:
         src.write.mode("overwrite").json(out_dir)
-        rows = (
+        return collected(
             spark.read.schema("event_id bigint, event_type string, user_id bigint")
             .json(out_dir)
             .groupBy("event_type")
@@ -243,13 +241,9 @@ def source_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.countDistinct("user_id").alias("n_users"),
                 F.min("event_id").alias("min_event"),
                 F.max("event_id").alias("max_event"),
-            )
-            .collect()
+            ),
+            "event_type string, n bigint, n_users bigint, min_event bigint, max_event bigint",
         )
-    return spark.createDataFrame(
-        rows,
-        "event_type string, n bigint, n_users bigint, min_event bigint, max_event bigint",
-    )
 
 
 N_SMALL_FILES = 64
@@ -298,10 +292,9 @@ def sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_chars").alias("sum_chars"),
         )
-        rows = agg.collect()
-    return spark.createDataFrame(
-        rows, "n_files_before int, n_files_after int, n_docs long, sum_chars long"
-    )
+        return collected(
+            agg, "n_files_before int, n_files_after int, n_docs long, sum_chars long"
+        )
 
 
 @query(
@@ -337,8 +330,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_rows"),
             F.count(F.when(F.col("source").isNull(), 1)).alias("n_null_source"),
         )
-        rows = out.collect()
-    return spark.createDataFrame(rows, "lang string, n_rows long, n_null_source long")
+        return collected(out, "lang string, n_rows long, n_null_source long")
 
 
 @query(
@@ -364,7 +356,7 @@ def source_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     with scratch_dir("source_csv") as out_dir:
         src.write.mode("overwrite").option("header", "true").csv(out_dir)
-        rows = (
+        return collected(
             spark.read.schema("doc_id bigint, lang string, n_chars bigint")
             .option("header", "true")
             .option("mode", "FAILFAST")
@@ -375,12 +367,9 @@ def source_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("n_chars").alias("sum_chars"),
                 F.min("doc_id").alias("min_doc"),
                 F.max("doc_id").alias("max_doc"),
-            )
-            .collect()
+            ),
+            "lang string, n bigint, sum_chars bigint, min_doc bigint, max_doc bigint",
         )
-    return spark.createDataFrame(
-        rows, "lang string, n bigint, sum_chars bigint, min_doc bigint, max_doc bigint"
-    )
 
 
 @query(
@@ -538,19 +527,18 @@ def source_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("columnNameOfCorruptRecord", "_corrupt")
             .json(base)
         )
-        row = parsed.agg(
-            F.sum(F.when(F.col("_corrupt").isNull(), 1).otherwise(0)).alias("n_good"),
-            F.sum(F.when(F.col("_corrupt").isNotNull(), 1).otherwise(0))
-            .cast("int")
-            .alias("n_corrupt"),
-            F.sum(F.when(F.col("_corrupt").isNull(), F.col("n_chars"))).alias(
-                "good_chars"
+        return collected(
+            parsed.agg(
+                F.sum(F.when(F.col("_corrupt").isNull(), 1).otherwise(0)).alias("n_good"),
+                F.sum(F.when(F.col("_corrupt").isNotNull(), 1).otherwise(0))
+                .cast("int")
+                .alias("n_corrupt"),
+                F.sum(F.when(F.col("_corrupt").isNull(), F.col("n_chars"))).alias(
+                    "good_chars"
+                ),
             ),
-        ).collect()[0]
-    return spark.createDataFrame(
-        [(row["n_good"], row["n_corrupt"], row["good_chars"])],
-        "n_good long, n_corrupt int, good_chars long",
-    )
+            "n_good long, n_corrupt int, good_chars long",
+        )
 
 
 @query(
@@ -595,8 +583,7 @@ def sink_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("price_c").alias("sum_price_cents"),
             )
         )
-        rows = back.collect()
-    return spark.createDataFrame(rows, "status string, n bigint, sum_price_cents bigint")
+        return collected(back, "status string, n bigint, sum_price_cents bigint")
 
 
 @query(
@@ -649,7 +636,7 @@ def source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per file — coalesce groups them into ~64-file tasks without a
         # shuffle. Together: 19.5s -> ~2s at 10x. This is the mitigation
         # every blob-crawl ingest needs before real decode work.
-        rows = (
+        return collected(
             spark.read.format("binaryFile")
             .load(out_dir)
             .coalesce(max(1, min(1024, n_files // 64 + 1)))
@@ -659,10 +646,9 @@ def source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("doc_id"),
                 F.col("length").alias("n_bytes"),
                 F.md5(F.col("content")).alias("digest"),
-            )
-            .collect()
+            ),
+            "doc_id bigint, n_bytes bigint, digest string",
         )
-    return spark.createDataFrame(rows, "doc_id bigint, n_bytes bigint, digest string")
 
 
 GEN_N = 100_000
@@ -759,18 +745,14 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined = fact.join(dim, "day")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         dpp = "dynamicpruning" in plan.lower()
-        rows = (
-            joined.groupBy("event_type")
-            .agg(
+        return collected(
+            joined.groupBy("event_type").agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum(cents(F.col("value"))).alias("sum_cents"),
-            )
-            .collect()
+                F.lit(dpp).alias("dpp_active"),
+            ),
+            "event_type string, n bigint, sum_cents bigint, dpp_active boolean",
         )
-    return spark.createDataFrame(
-        [(r.event_type, r.n, r.sum_cents, dpp) for r in rows],
-        "event_type string, n bigint, sum_cents bigint, dpp_active boolean",
-    )
 
 
 @query("sink_python_datasource", _SINK_AGG_ORACLE)
@@ -809,8 +791,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("sep", "\t")
             .csv(paths)
         )
-        rows = back.collect()
-    return spark.createDataFrame(rows, _SINK_SCHEMA)
+        return collected(back, _SINK_SCHEMA)
 
 
 VACUUM_VERSIONS = 5
@@ -860,18 +841,17 @@ def sink_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
             int(d.split("=")[1]) for d in os.listdir(base) if d.startswith("v=")
         )
         latest = spark.read.parquet(os.path.join(base, f"v={after[-1]}"))
-        rows = latest.agg(
-            F.lit(len(before)).cast("int").alias("n_versions_before"),
-            F.lit(len(after)).cast("int").alias("n_versions_after"),
-            F.lit(after[0]).cast("int").alias("oldest_retained"),
-            F.count(F.lit(1)).alias("n_docs_latest"),
-            F.sum("n_chars").alias("sum_chars_latest"),
-        ).collect()
-    return spark.createDataFrame(
-        rows,
-        "n_versions_before int, n_versions_after int, oldest_retained int, "
-        "n_docs_latest long, sum_chars_latest long",
-    )
+        return collected(
+            latest.agg(
+                F.lit(len(before)).cast("int").alias("n_versions_before"),
+                F.lit(len(after)).cast("int").alias("n_versions_after"),
+                F.lit(after[0]).cast("int").alias("oldest_retained"),
+                F.count(F.lit(1)).alias("n_docs_latest"),
+                F.sum("n_chars").alias("sum_chars_latest"),
+            ),
+            "n_versions_before int, n_versions_after int, oldest_retained int, "
+            "n_docs_latest long, sum_chars_latest long",
+        )
 
 
 TT_VERSIONS = 3
@@ -916,15 +896,15 @@ def source_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         committed = sorted(int(line) for line in open(manifest))
         assert TT_READ_AS_OF in committed, "AS OF version not committed"
         hist = spark.read.parquet(os.path.join(base, f"v={TT_READ_AS_OF}"))
-        rows = hist.agg(
-            F.lit(TT_READ_AS_OF).cast("int").alias("version_read"),
-            F.lit(len(committed)).cast("int").alias("n_versions"),
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("sum_chars"),
-        ).collect()
-    return spark.createDataFrame(
-        rows, "version_read int, n_versions int, n_docs long, sum_chars long"
-    )
+        return collected(
+            hist.agg(
+                F.lit(TT_READ_AS_OF).cast("int").alias("version_read"),
+                F.lit(len(committed)).cast("int").alias("n_versions"),
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum("n_chars").alias("sum_chars"),
+            ),
+            "version_read int, n_versions int, n_docs long, sum_chars long",
+        )
 
 
 SINK_CODECS = ("snappy", "zstd", "gzip")
@@ -1101,7 +1081,6 @@ def q_source_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("sum_chars_good"),
         )
-        rows = agg.collect()
-    return spark.createDataFrame(
-        rows, "n_rows bigint, n_good bigint, n_corrupt bigint, sum_chars_good bigint"
-    )
+        return collected(
+            agg, "n_rows bigint, n_good bigint, n_corrupt bigint, sum_chars_good bigint"
+        )

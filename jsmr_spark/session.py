@@ -16,8 +16,10 @@ Every conf the engine sets is named once, in one of two places:
     any other failure raises, and the session is not marked configured.
   * ``get_spark``'s builder — only what cannot be set on a live
     session: master, driver memory, UI, Arrow, the Python worker daemon,
-    the static ``spark.python.sql.dataFrameDebugging.enabled`` and the
-    static ``spark.sql.codegen.cache.maxEntries``.
+    the static ``spark.python.sql.dataFrameDebugging.enabled``, the
+    static ``spark.sql.codegen.cache.maxEntries`` and the local
+    filesystem (``spark.driver.extraClassPath`` and
+    ``spark.hadoop.fs.file.impl``).
 
 Required confs and why (SURVEY.md §7.1):
   * ``spark.sql.legacy.parquet.nanosAsLong=true`` — the ``events``
@@ -39,12 +41,25 @@ Required confs and why (SURVEY.md §7.1):
     by default. A warm pass of the headline keys needs more than that,
     so each pass evicted what the next one needed and recompiled about
     100 classes with Janino; sized as below, a warm pass compiles none.
+  * ``spark.driver.extraClassPath=LOCAL_FS_JAR`` and
+    ``spark.hadoop.fs.file.impl=LOCAL_FS_CLASS`` — without the native
+    libhadoop, Hadoop's local filesystem starts a ``chmod`` process for
+    every file it creates and every directory it makes, .crc files
+    included: 97 per warm ``stream_exactly_once_sink`` run and 55 per
+    ``sink_zorder`` run, each 6-7 ms inside this JVM. The engine's
+    filesystem (``jsmr_spark/jvm/``) is the same checksummed
+    ``LocalFileSystem`` and sets the same bits with one ``chmod(2)``
+    call. It also pins the ``file:`` class, which otherwise depends on
+    the order ServiceLoader finds the jars in (hive-exec's
+    ``ProxyLocalFileSystem`` can win).
 
-All three are static: a driver-owned session (``ensure_engine_confs``)
-cannot set them, so it keeps the stock ``pyspark.daemon`` and a codegen
-cache of 100 entries. Results are identical; only the per-task cost of
-Python stages (mr.py, Python UDFs) and the recompiles of a long-lived
-session differ.
+All four are static: the JVM's classpath is fixed when it starts, and
+Hadoop caches the ``file:`` filesystem from the first use. A
+driver-owned session (``ensure_engine_confs``) cannot set them, so it
+keeps the stock ``pyspark.daemon``, a codegen cache of 100 entries and
+the stock local filesystem. Results are identical; only the per-task
+cost of Python stages (mr.py, Python UDFs), the recompiles of a
+long-lived session and the cost of each file a key writes differ.
 
 A temporary change to a conf goes through ``conf_override``, which puts
 back exactly the state it found: the old value, or unset.
@@ -112,6 +127,11 @@ CODEGEN_CACHE_ENTRIES = 400
 # The directory holding jsmr_spark/ (see spark.executorEnv.PYTHONPATH).
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# The fork-free local filesystem (jsmr_spark/jvm/, built by
+# tools/build_jar.py) and the jar that carries it.
+LOCAL_FS_JAR = os.path.join(_PACKAGE_ROOT, "jsmr_spark", "jvm", "jsmr-localfs.jar")
+LOCAL_FS_CLASS = "jsmr.fs.ForkFreeLocalFileSystem"
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -143,6 +163,8 @@ def get_spark(app_name: str = "jsmr_spark") -> SparkSession:
         # builder can set it.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.driver.extraClassPath", LOCAL_FS_JAR)
+        .config("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS)
         .getOrCreate()
     )
     return ensure_engine_confs(spark)

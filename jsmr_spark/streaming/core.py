@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 
 from jsmr_spark.compat import cents
 from jsmr_spark.io import load_table, table_path
+from jsmr_spark.queries.common import collected
 from jsmr_spark.session import conf_override
 
 # Scratch space one replay's checkpoints may take: offsets, commits and
@@ -81,12 +82,13 @@ def _replay_tmp_root(need_bytes: int = _CKPT_BYTES) -> str:
     off the disk. Placement is not what a checkpoint commit costs,
     though: moving the root to /dev/shm left the ~40-60 ms per metadata
     commit unchanged. That cost was process starts (see ``_replay``),
-    not an fsync chain. A real deployment checkpoints to durable storage
-    ON PURPOSE; this is placement of a simulation's scratch space, not
-    an engine setting, and $SPARK_GRAFT_STREAM_TMP overrides it. A
-    RAM-backed root with less than ``need_bytes`` free is passed over
-    for the standard tempdir, so a full /dev/shm costs speed instead of
-    an ENOSPC mid-replay."""
+    not an fsync chain, and a ``get_spark`` session now starts none. A
+    real deployment checkpoints to durable storage ON PURPOSE; this is
+    placement of a simulation's scratch space, not an engine setting,
+    and $SPARK_GRAFT_STREAM_TMP overrides it. A RAM-backed root with
+    less than ``need_bytes`` free is passed over for the standard
+    tempdir, so a full /dev/shm costs speed instead of an ENOSPC
+    mid-replay."""
     env = os.environ.get("SPARK_GRAFT_STREAM_TMP")
     if env:
         return env
@@ -256,13 +258,17 @@ def _replay(
     cost ~40-60 ms on tmpfs and on disk alike. JFR counted 258 process
     starts in the driver JVM over one warm ``stream_exactly_once_sink``
     run at sf0.01, 152 of them ``readlink``; with this manager and the
-    staging below, 97, all ``chmod``. It renames with
+    staging below, 97, all ``chmod``; with ``get_spark``'s local
+    filesystem, which sets permissions with one ``chmod(2)`` call
+    (``session.LOCAL_FS_CLASS``), 0. It renames with
     ``FileSystem.rename`` (``File.renameTo``), which starts no process.
     That rename is not atomic on every filesystem (object stores), which
     is why Spark defaults to ``FileContext``; the replay root is always
-    local, where a POSIX rename is. The checksummed local filesystem
-    stays, ``.crc`` files included. The conf is scoped to the replay
-    like the other two."""
+    local, where a POSIX rename is. The manager also keeps the session's
+    ``file:`` filesystem: ``FileContext`` builds its own stock one,
+    which would bring back the ``readlink`` and ``chmod`` starts. The
+    checksummed local filesystem stays, ``.crc`` files included. The
+    conf is scoped to the replay like the other two."""
     need = _CKPT_BYTES
     if sf_dir is not None:
         # The staged chunks are one copy of the events columns, two with
@@ -676,17 +682,16 @@ def run_exactly_once_sink_stream(
 
         # Materialize before the scratch root is deleted. Every batch was
         # written from `out`, so its schema spares an inference job.
-        rows = (
+        df = collected(
             spark.read.schema(out.schema)
             .parquet(os.path.join(out_dir, "batch-*"))
             .groupBy("user_id")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
                 (F.sum("vc") / 100.0).alias("spend"),
-            )
-            .collect()
+            ),
+            "user_id long, n_events long, spend double",
         )
-    df = spark.createDataFrame(rows, "user_id long, n_events long, spend double")
     return df, evidence
 
 
@@ -781,19 +786,17 @@ def run_cdc_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             state["version"] += 1
 
         rp.run(rp.source(), sink=apply_batch)
-        rows = (
-            spark.read.parquet(os.path.join(tbl_root, f"v{state['version']:04d}"))
-            .select(
+        return collected(
+            spark.read.parquet(
+                os.path.join(tbl_root, f"v{state['version']:04d}")
+            ).select(
                 "user_id",
                 "event_type",
                 (F.col("vc") / 100.0).alias("last_value"),
                 "n_updates",
-            )
-            .collect()
+            ),
+            "user_id long, event_type string, last_value double, n_updates long",
         )
-    return spark.createDataFrame(
-        rows, "user_id long, event_type string, last_value double, n_updates long"
-    )
 
 
 def run_transform_with_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -960,15 +963,14 @@ def run_python_sink_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             if mf.startswith("_BATCH_"):
                 with open(os.path.join(out, mf)) as fh:
                     files += [os.path.join(out, m["file"]) for m in json.load(fh)]
-        rows = (
+        return collected(
             spark.read.schema("event_id long, event_type string, vc long")
             .option("sep", "\t")
             .csv(files)
             .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("vc").alias("sum_cents"))
-            .collect()
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("vc").alias("sum_cents")),
+            "event_type string, n bigint, sum_cents bigint",
         )
-    return spark.createDataFrame(rows, "event_type string, n bigint, sum_cents bigint")
 
 
 def run_ewma_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,9 +23,11 @@ import pytest
 
 import pyspark.errors.utils
 from pyspark.errors import IllegalArgumentException
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from jsmr_spark import queries, session
-from jsmr_spark.queries.common import scratch_dir
+from jsmr_spark.queries.common import collected, scratch_dir
 from jsmr_spark.registry import canonical_specs, get_query
 from jsmr_spark.session import conf_override, ensure_engine_confs, get_spark
 from tests.conftest import SF_DIR, canon_rows
@@ -403,3 +405,19 @@ def test_only_common_asks_tempfile_for_a_location():
             ):
                 found.setdefault(path.name, []).append(node.lineno)
     assert list(found) == ["common.py"], found
+
+
+# --- collected rows (queries.common.collected) --------------------------------
+
+
+def test_collected_is_a_local_relation_with_the_ddl_schema(spark):
+    """Rows go back into the JVM as a local relation, not a Python RDD,
+    cast by position to the DDL's types, with the DDL's schema."""
+    ddl = "a long, b string"
+    df = spark.range(3).select(F.col("id").cast("int").alias("x"), F.lit("s").alias("y"))
+    assert df.schema["x"].dataType.simpleString() == "int" and not df.schema["x"].nullable
+    out = collected(df, ddl)
+    plan = out._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert out.schema == StructType.fromDDL(ddl)
+    assert sorted(out.collect()) == [(0, "s"), (1, "s"), (2, "s")]
