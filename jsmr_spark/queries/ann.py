@@ -15,6 +15,22 @@ broadcast planes); the corpus partitions by bucket id — candidate
 generation is a partition-pruned scan, re-rank is per-bucket. Recall
 is tuned by bits and multi-probe (flipping low-margin bits); the
 baseline q_sim_cosine_topk measures the recall cost.
+
+Each ANN decision is written once, in a private helper:
+  * _with_recall — the top-k cut, its rank window and recall@k against
+    the exact top-k: q_sim_ann_ivf, q_sim_ann_pq, q_sim_ann_lsh and
+    q_sim_ann_multiprobe;
+  * _ivf_lists — the IVF assignment (K_CENT broadcast centroids,
+    r4-staged cosine, rank by (csim desc, cid)): q_sim_ann_ivf and,
+    through _panel_frame, q_sim_recall_report and q_sim_ann_tune;
+  * _panel_frame — per-(probe count, query) candidate and hit counts
+    over a query panel: recall_report_frame (one probe count) and
+    ann_tune_frame (the TUNE_PROBES sweep plus its zero-filled spine);
+  * _lsh_candidates — the probe collect, its Python bucket and norm
+    folds and the bucket-filtered candidate scan: q_sim_ann_lsh (its own
+    bucket) and q_sim_ann_multiprobe (MULTIPROBE_XORS).
+The DuckDB oracles stay written out in full: they are the reference
+implementations the helpers are checked against.
 """
 
 from __future__ import annotations
@@ -35,8 +51,12 @@ N_DIMS = 64
 TOP_K = 10
 
 
-def _with_recall(spark: SparkSession, sf_dir: str, ranked: DataFrame) -> DataFrame:
-    """Append recall@k vs the exact brute-force top-k (VERDICT r2 #7).
+def _with_recall(spark: SparkSession, sf_dir: str, cand: DataFrame) -> DataFrame:
+    """Cut the candidates (vec_id, ..., sim) to the top TOP_K by (sim
+    desc, vec_id), rank them, and append recall@k vs the exact
+    brute-force top-k (VERDICT r2 #7). The cut is a
+    TakeOrderedAndProject over the candidates; the rank window only
+    sees the k survivors.
 
     The exact ground truth is the same ranking q_sim_cosine_topk is
     oracle-verified on (identical sim kernel, identical tie-break), so
@@ -45,6 +65,12 @@ def _with_recall(spark: SparkSession, sf_dir: str, ranked: DataFrame) -> DataFra
     negligible next to the ANN plan itself. At 100 TB the same column
     is what tunes bits/N_PROBE, computed over a probe SAMPLE rather
     than every query."""
+    keys = [F.desc("sim"), F.asc("vec_id")]
+    ranked = (
+        cand.orderBy(*keys)
+        .limit(TOP_K)
+        .withColumn("rnk", F.row_number().over(Window.orderBy(*keys)))
+    )
     exact = (
         _probe_sims(spark, sf_dir)
         .orderBy(F.desc("sim"), F.asc("vec_b"))
@@ -145,6 +171,16 @@ def bucketed_embeddings_sql() -> str:
     """
 
 
+def _plane_dot(vec, w: list[float]) -> F.Column:
+    """vec . w as a sequential double fold over the literal plane w."""
+    plane = F.array(*[F.lit(x) for x in w])
+    return F.aggregate(
+        F.zip_with(vec, plane, lambda x, y: x.cast("double") * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def _bucket_col_adaptive(vec, np_col) -> F.Column:
     """Spark twin of bucketed_embeddings_sql's bucket (np_col from a
     1-row broadcast aggregate, so the whole thing stays one lazy DAG).
@@ -153,14 +189,8 @@ def _bucket_col_adaptive(vec, np_col) -> F.Column:
     plan keeps a data-independent shape."""
     out = F.lit(0).cast("long")
     for p, w in enumerate(_ADAPTIVE_PLANES):
-        plane = F.array(*[F.lit(x) for x in w])
-        dot = F.aggregate(
-            F.zip_with(vec, plane, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
         out = out + F.when(
-            (F.lit(p) < np_col) & (dot > 0), F.lit(1 << p).cast("long")
+            (F.lit(p) < np_col) & (_plane_dot(vec, w) > 0), F.lit(1 << p).cast("long")
         ).otherwise(F.lit(0).cast("long"))
     return out
 
@@ -176,15 +206,10 @@ def n_planes_col(src: DataFrame) -> DataFrame:
 
 
 def _bucket_col(vec, plane_set: list[list[float]] | None = None) -> F.Column:
-    bits = []
-    for p, w in enumerate(plane_set if plane_set is not None else PLANES):
-        plane = F.array(*[F.lit(x) for x in w])
-        dot = F.aggregate(
-            F.zip_with(vec, plane, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0)))
+    bits = [
+        F.when(_plane_dot(vec, w) > 0, F.lit(1 << p)).otherwise(F.lit(0))
+        for p, w in enumerate(plane_set if plane_set is not None else PLANES)
+    ]
     out = bits[0]
     for b in bits[1:]:
         out = out + b
@@ -296,6 +321,40 @@ _IVF_ORACLE = f"""
 )
 
 
+def _ivf_lists(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The IVF assignment against the K_CENT broadcast centroids.
+    Returns base (vec_id, label, embedding, nrm), the normed corpus;
+    ranked, base x centroids with csim and crn (the centroid's rank for
+    that vector by csim desc, cid); and assigned, the crn = 1 rows
+    (vec_id, label, embedding, nrm, cid)."""
+    base = t(spark, sf_dir, "embeddings").select(
+        "vec_id", "label", "embedding", _norm(F.col("embedding")).alias("nrm")
+    )
+    cent = F.broadcast(
+        base.filter(F.col("vec_id") < K_CENT).select(
+            F.col("vec_id").alias("cid"),
+            F.col("embedding").alias("c_emb"),
+            F.col("nrm").alias("c_nrm"),
+        )
+    )
+    # Raw sims staged before r4 (r12): r4 references its argument twice
+    # and HOF folds are interpreted, so inlining doubled the corpus x
+    # K_CENT assignment folds (the dominant data work of these keys).
+    csim_raw = _dot(F.col("embedding"), F.col("c_emb")) / (
+        F.col("nrm") * F.col("c_nrm")
+    )
+    cols = ["vec_id", "label", "embedding", "nrm", "cid"]
+    scored = base.crossJoin(cent).select(*cols, csim_raw.alias("csim_raw")).select(
+        *cols, r4(F.col("csim_raw")).alias("csim")
+    )
+    w = Window.partitionBy("vec_id").orderBy(F.desc("csim"), F.asc("cid"))
+    ranked = scored.withColumn("crn", F.row_number().over(w))
+    assigned = ranked.filter(F.col("crn") == 1).select(*cols)
+    return base, ranked, assigned
+
+
 @query("q_sim_ann_ivf", _IVF_ORACLE)
 def q_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN: assign every vector to its nearest centroid list,
@@ -310,29 +369,7 @@ def q_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus would be WRITTEN partitioned by list_id (sink_partitioned's
     layout), making each probe a partition-pruned scan of N_PROBE/K of
     the data; re-rank is TakeOrdered over the probed lists only."""
-    emb = t(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", "label", "embedding", _norm(F.col("embedding")).alias("nrm"))
-    cent = F.broadcast(
-        base.filter(F.col("vec_id") < K_CENT).select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("c_emb"),
-            F.col("nrm").alias("c_nrm"),
-        )
-    )
-    # Raw sims staged before r4 (r12): r4 references its argument twice
-    # and HOF folds are interpreted, so inlining doubled the corpus x
-    # K_CENT assignment folds (the dominant data work of this key).
-    csim_raw = _dot(F.col("embedding"), F.col("c_emb")) / (
-        F.col("nrm") * F.col("c_nrm")
-    )
-    scored = base.crossJoin(cent).select(
-        "vec_id", "label", "embedding", "nrm", "cid", csim_raw.alias("csim_raw")
-    ).select(
-        "vec_id", "label", "embedding", "nrm", "cid", r4(F.col("csim_raw")).alias("csim")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("csim"), F.asc("cid"))
-    ranked = scored.withColumn("crn", F.row_number().over(w))
-    assigned = ranked.filter(F.col("crn") == 1).select("vec_id", "label", "embedding", "nrm", "cid")
+    base, ranked, assigned = _ivf_lists(spark, sf_dir)
     plists = F.broadcast(
         ranked.filter((F.col("vec_id") == PROBE_ID) & (F.col("crn") <= N_PROBE)).select("cid")
     )
@@ -351,10 +388,7 @@ def q_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "label", F.col("cid").alias("list_id"), sim_raw.alias("sim_raw"))
         .select("vec_id", "label", "list_id", r4(F.col("sim_raw")).alias("sim"))
     )
-    keys = [F.desc("sim"), F.asc("vec_id")]
-    top = cand.orderBy(*keys).limit(TOP_K)
-    ranked = top.withColumn("rnk", F.row_number().over(Window.orderBy(*keys)))
-    return _with_recall(spark, sf_dir, ranked)
+    return _with_recall(spark, sf_dir, cand)
 
 
 # --- Scalar-quantization ANN (PQ-style asymmetric distance) ----------
@@ -515,10 +549,7 @@ def q_sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("sim", r4(F.col("sim_raw")))
         .drop("embedding", "p_emb", "p_nrm", "sim_raw")
     )
-    keys = [F.desc("sim"), F.asc("vec_id")]
-    top = rer.orderBy(*keys).limit(TOP_K)
-    ranked = top.withColumn("rnk", F.row_number().over(Window.orderBy(*keys)))
-    return _with_recall(spark, sf_dir, ranked)
+    return _with_recall(spark, sf_dir, rer)
 
 
 def _bucket_py(emb: list[float]) -> int:
@@ -535,16 +566,19 @@ def _bucket_py(emb: list[float]) -> int:
     return b
 
 
-@query("q_sim_ann_lsh", _ANN_ORACLE)
-def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-k: hyperplane-LSH bucket prefilter + exact cosine
-    re-rank within the probe's bucket, with recall@10 measured against
-    the exact baseline.
+def _lsh_candidates(
+    spark: SparkSession, sf_dir: str, xors: tuple[int, ...]
+) -> DataFrame:
+    """LSH candidates (vec_id, label, bucket, sim) of the probe: every
+    other vector whose bucket is xor(probe bucket, x) for some x in
+    `xors`, scored by exact cosine against the probe. q_sim_ann_lsh
+    passes (0,) (its own bucket; Spark's OptimizeIn turns the 1-element
+    IN into `=`), q_sim_ann_multiprobe passes MULTIPROBE_XORS.
 
     The probe embedding, its norm, and its bucket are collected once
     (1-row pushed-down read) and inlined as literals — the candidate
-    filter `bucket = <lit>` then needs no join at all, and at rest a
-    corpus written partitioned by bucket makes it a partition-pruned
+    filter `bucket IN (<lits>)` then needs no join at all, and at rest
+    a corpus written partitioned by bucket makes it a partition-pruned
     scan.
 
     FINAL (r13, VERDICT r12 #6): the build-time collect stays. A
@@ -568,10 +602,13 @@ def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Probe norm computed ONCE in Python with the same sequential
     # left-fold as _norm (acc += x*x, then sqrt — IEEE-identical to the
     # engine fold over the same widened doubles; the _bucket_py parity
-    # argument). Inlined as _norm(plit) it was an interpreted 64-term
-    # fold re-run per candidate row, doubled again by r4's two
-    # references. sim_raw staged before r4 (r12): one dot + one
-    # corpus-norm fold per row.
+    # argument). The ADVICE r9 ulp concern was about REORDERED
+    # accumulation (numpy pairwise summation); a plain Python loop is
+    # the identical op sequence the engine fold runs (re-verified MATCH
+    # at sf0.01 and sf0.1). Inlined as _norm(plit) it was an
+    # interpreted 64-term fold re-run per candidate row, doubled again
+    # by r4's two references. sim_raw staged before r4 (r12): one dot
+    # + one corpus-norm fold per row.
     p_acc = 0.0
     for _x in emb_p:
         p_acc += _x * _x
@@ -583,17 +620,25 @@ def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim_raw = _dot(F.col("embedding"), plit) / (
         _norm(F.col("embedding")) * F.lit(p_nrm)
     )
-    cand = (
-        emb.filter((F.col("bucket") == F.lit(p_bucket)) & (F.col("vec_id") != PROBE_ID))
+    probed = [p_bucket ^ x for x in xors]
+    return (
+        emb.filter(F.col("bucket").isin(probed) & (F.col("vec_id") != PROBE_ID))
         .select("vec_id", "label", "bucket", sim_raw.alias("sim_raw"))
         .select("vec_id", "label", "bucket", r4(F.col("sim_raw")).alias("sim"))
     )
-    keys = [F.desc("sim"), F.asc("vec_id")]
-    # TakeOrderedAndProject over the bucket's candidates; the rank
-    # window only sees the k survivors.
-    top = cand.orderBy(*keys).limit(TOP_K)
-    ranked = top.withColumn("rnk", F.row_number().over(Window.orderBy(*keys)))
-    return _with_recall(spark, sf_dir, ranked)
+
+
+@query("q_sim_ann_lsh", _ANN_ORACLE)
+def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN top-k: hyperplane-LSH bucket prefilter + exact cosine
+    re-rank within the probe's bucket, with recall@10 measured against
+    the exact baseline.
+
+    The probe's bucket is a plan-time literal (the build-time probe
+    collect in _lsh_candidates, whose docstring records why it stays),
+    so the candidate filter needs no join and at rest prunes to one
+    bucket partition."""
+    return _with_recall(spark, sf_dir, _lsh_candidates(spark, sf_dir, (0,)))
 
 
 # --- batch ANN evaluation: recall@k over a query SET -----------------
@@ -702,48 +747,42 @@ def q_sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return recall_report_frame(spark, sf_dir, RECALL_QMOD)
 
 
-def recall_report_frame(spark: SparkSession, sf_dir: str, qmod: int) -> DataFrame:
-    """Parameterized body of q_sim_recall_report: qmod sets the eval-set
-    stride (queries = vec_id % qmod == 0). The registered key uses
-    RECALL_QMOD for oracle parity; tools/scale_probe.py re-runs the 10x
-    corpus with qmod*10 as the fixed-eval-set control — the deployment
-    shape, where the eval slice is a constant-size sample however big
-    the corpus grows."""
-    emb = t(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"))
-    cent = F.broadcast(
-        base.filter(F.col("vec_id") < K_CENT).select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("c_emb"),
-            F.col("nrm").alias("c_nrm"),
-        )
-    )
-    # Raw sim staged before r4 (r12): r4 references its argument twice
-    # and HOF folds are interpreted, so inlining doubled the corpus x
-    # K_CENT assignment folds.
-    csim_raw = _dot(F.col("embedding"), F.col("c_emb")) / (
-        F.col("nrm") * F.col("c_nrm")
-    )
-    scored = base.crossJoin(cent).select(
-        "vec_id", "embedding", "nrm", "cid", csim_raw.alias("csim_raw")
-    ).select(
-        "vec_id", "embedding", "nrm", "cid", r4(F.col("csim_raw")).alias("csim")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("csim"), F.asc("cid"))
-    ranked = scored.withColumn("crn", F.row_number().over(w))
-    assigned = ranked.filter(F.col("crn") == 1).select("vec_id", "embedding", "nrm", "cid")
-    is_q = F.col("vec_id") % qmod == 0
-    queries = F.broadcast(
-        base.filter(is_q).select(
+def _panel_queries(base: DataFrame, qmod: int) -> DataFrame:
+    """The eval panel (qid, q_emb, q_nrm): every vector with vec_id %
+    qmod == 0, broadcast (eval sets are tiny vs the corpus)."""
+    return F.broadcast(
+        base.filter(F.col("vec_id") % qmod == 0).select(
             F.col("vec_id").alias("qid"),
             F.col("embedding").alias("q_emb"),
             F.col("nrm").alias("q_nrm"),
         )
     )
+
+
+def _probe_counts(spark: SparkSession, probes: tuple[int, ...]) -> DataFrame:
+    """The probe counts as a broadcast 1-column (p) relation built in the
+    JVM — a createDataFrame of Python rows would run Python worker tasks
+    on every collect."""
+    return F.broadcast(
+        spark.range(1).select(F.explode(F.array(*[F.lit(p) for p in probes])).alias("p"))
+    )
+
+
+def _panel_frame(
+    spark: SparkSession, sf_dir: str, qmod: int, probes: tuple[int, ...]
+) -> DataFrame:
+    """IVF evaluation over the query panel (vec_id % qmod == 0) at each
+    probe count p in `probes`: (p, qid, n_cand, n_hits) for every query
+    with at least one candidate at p. n_cand counts the vectors in the
+    query's p nearest lists; n_hits counts its top-TOP_K among them that
+    are also in its exact brute-force top-TOP_K. Candidates are scored
+    once, at max(probes); a smaller p filters them (crn <= p)."""
+    base, ranked, assigned = _ivf_lists(spark, sf_dir)
+    queries = _panel_queries(base, qmod)
     qlists = F.broadcast(
-        ranked.filter(is_q & (F.col("crn") <= N_PROBE)).select(
-            F.col("vec_id").alias("qid"), "cid"
-        )
+        ranked.filter(
+            (F.col("vec_id") % qmod == 0) & (F.col("crn") <= max(probes))
+        ).select(F.col("vec_id").alias("qid"), "cid", "crn")
     )
     sim_raw = _dot(F.col("embedding"), F.col("q_emb")) / (
         F.col("nrm") * F.col("q_nrm")
@@ -752,32 +791,48 @@ def recall_report_frame(spark: SparkSession, sf_dir: str, qmod: int) -> DataFram
         assigned.join(qlists, "cid")
         .join(queries, "qid")
         .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", sim_raw.alias("sim_raw"))
-        .select("qid", "vec_id", r4(F.col("sim_raw")).alias("sim"))
+        .select("qid", "vec_id", "crn", sim_raw.alias("sim_raw"))
+        .select("qid", "vec_id", "crn", r4(F.col("sim_raw")).alias("sim"))
+        .crossJoin(_probe_counts(spark, probes))
+        .filter(F.col("crn") <= F.col("p"))
+        .select("p", "qid", "vec_id", "sim")
     )
-    wq = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    ivf_top = cand.withColumn("rnk", F.row_number().over(wq)).filter(
+    wq = Window.partitionBy("p", "qid").orderBy(F.desc("sim"), F.asc("vec_id"))
+    top = cand.withColumn("rnk", F.row_number().over(wq)).filter(
         F.col("rnk") <= TOP_K
     )
-    nc = cand.groupBy("qid").agg(F.count(F.lit(1)).alias("n_cand"))
     allsims = (
         base.crossJoin(queries)
         .filter(F.col("vec_id") != F.col("qid"))
         .select("qid", "vec_id", sim_raw.alias("sim_raw"))
         .select("qid", "vec_id", r4(F.col("sim_raw")).alias("sim"))
     )
+    wq1 = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
     exact_top = (
-        allsims.withColumn("rnk", F.row_number().over(wq))
+        allsims.withColumn("rnk", F.row_number().over(wq1))
         .filter(F.col("rnk") <= TOP_K)
         .select("qid", "vec_id", F.lit(1).alias("inx"))
     )
+    nc = cand.groupBy("p", "qid").agg(
+        F.count(F.lit(1)).cast("long").alias("n_cand")
+    )
     hits = (
-        ivf_top.select("qid", "vec_id")
+        top.select("p", "qid", "vec_id")
         .join(exact_top, ["qid", "vec_id"], "left")
-        .groupBy("qid")
+        .groupBy("p", "qid")
         .agg(F.sum(F.coalesce(F.col("inx"), F.lit(0))).cast("long").alias("n_hits"))
     )
-    return hits.join(nc, "qid").select(
+    return hits.join(nc, ["p", "qid"])
+
+
+def recall_report_frame(spark: SparkSession, sf_dir: str, qmod: int) -> DataFrame:
+    """Parameterized body of q_sim_recall_report: qmod sets the eval-set
+    stride (queries = vec_id % qmod == 0). The registered key uses
+    RECALL_QMOD for oracle parity; tools/scale_probe.py re-runs the 10x
+    corpus with qmod*10 as the fixed-eval-set control — the deployment
+    shape, where the eval slice is a constant-size sample however big
+    the corpus grows."""
+    return _panel_frame(spark, sf_dir, qmod, (N_PROBE,)).select(
         "qid",
         "n_cand",
         "n_hits",
@@ -1041,95 +1096,19 @@ def ann_tune_frame(spark: SparkSession, sf_dir: str, qmod: int) -> DataFrame:
     re-runs with qmod*10 (constant-size eval panel, the deployment
     shape) to separate per-query cost from the BY-DESIGN quadratic
     growth of a corpus-proportional eval set."""
-    emb = t(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"))
-    cent = F.broadcast(
-        base.filter(F.col("vec_id") < K_CENT).select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("c_emb"),
-            F.col("nrm").alias("c_nrm"),
-        )
+    base, _, _ = _ivf_lists(spark, sf_dir)
+    # The zero-filled spine joins here, outside _panel_frame, so
+    # q_sim_recall_report plans no spine scan.
+    spine = _probe_counts(spark, TUNE_PROBES).crossJoin(
+        _panel_queries(base, qmod).select("qid")
     )
-    # Raw sim staged before r4 (r12): r4 references its argument twice
-    # and HOF folds are interpreted, so inlining doubled the corpus x
-    # K_CENT assignment folds.
-    csim_raw = _dot(F.col("embedding"), F.col("c_emb")) / (
-        F.col("nrm") * F.col("c_nrm")
-    )
-    scored = base.crossJoin(cent).select(
-        "vec_id", "embedding", "nrm", "cid", csim_raw.alias("csim_raw")
+    per = spine.join(
+        _panel_frame(spark, sf_dir, qmod, TUNE_PROBES), ["p", "qid"], "left"
     ).select(
-        "vec_id", "embedding", "nrm", "cid", r4(F.col("csim_raw")).alias("csim")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("csim"), F.asc("cid"))
-    ranked = scored.withColumn("crn", F.row_number().over(w))
-    assigned = ranked.filter(F.col("crn") == 1).select(
-        "vec_id", "embedding", "nrm", "cid"
-    )
-    is_q = F.col("vec_id") % qmod == 0
-    queries = F.broadcast(
-        base.filter(is_q).select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-        )
-    )
-    qlists = F.broadcast(
-        ranked.filter(is_q & (F.col("crn") <= max(TUNE_PROBES))).select(
-            F.col("vec_id").alias("qid"), "cid", "crn"
-        )
-    )
-    sim_raw = _dot(F.col("embedding"), F.col("q_emb")) / (
-        F.col("nrm") * F.col("q_nrm")
-    )
-    cand0 = (
-        assigned.join(qlists, "cid")
-        .join(queries, "qid")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", "crn", sim_raw.alias("sim_raw"))
-        .select("qid", "vec_id", "crn", r4(F.col("sim_raw")).alias("sim"))
-    )
-    probes = F.broadcast(
-        spark.createDataFrame([(p,) for p in TUNE_PROBES], "p int")
-    )
-    cand = cand0.crossJoin(probes).filter(F.col("crn") <= F.col("p")).select(
-        "p", "qid", "vec_id", "sim"
-    )
-    wq = Window.partitionBy("p", "qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    topp = cand.withColumn("rnk", F.row_number().over(wq)).filter(
-        F.col("rnk") <= TOP_K
-    )
-    allsims = (
-        base.crossJoin(queries)
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", sim_raw.alias("sim_raw"))
-        .select("qid", "vec_id", r4(F.col("sim_raw")).alias("sim"))
-    )
-    wq1 = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    exact_top = (
-        allsims.withColumn("rnk", F.row_number().over(wq1))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("qid", "vec_id", F.lit(1).alias("inx"))
-    )
-    nc = cand.groupBy("p", "qid").agg(
-        F.count(F.lit(1)).cast("long").alias("n_cand")
-    )
-    hits = (
-        topp.select("p", "qid", "vec_id")
-        .join(exact_top, ["qid", "vec_id"], "left")
-        .groupBy("p", "qid")
-        .agg(F.sum(F.coalesce(F.col("inx"), F.lit(0))).cast("long").alias("n_hits"))
-    )
-    spine = probes.crossJoin(queries.select("qid"))
-    per = (
-        spine.join(nc, ["p", "qid"], "left")
-        .join(hits, ["p", "qid"], "left")
-        .select(
-            "p",
-            "qid",
-            F.coalesce(F.col("n_cand"), F.lit(0)).alias("n_cand"),
-            F.coalesce(F.col("n_hits"), F.lit(0)).alias("n_hits"),
-        )
+        "p",
+        "qid",
+        F.coalesce(F.col("n_cand"), F.lit(0)).alias("n_cand"),
+        F.coalesce(F.col("n_hits"), F.lit(0)).alias("n_hits"),
     )
     return per.groupBy("p").agg(
         F.count(F.lit(1)).cast("long").alias("n_queries"),
@@ -1210,53 +1189,11 @@ def q_sim_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     generalizes to the query-adaptive form (flip lowest-|margin| bits
     first) with the same plan.
 
-    FINAL (r13, VERDICT r12 #6): the build-time collect stays — the
-    `bucket IN (<9 literals>)` filter needs plan-time literals for
-    partition pruning at rest; a scalar-subquery predicate stays in a
-    post-scan Filter (verified on the q_sim_ann_lsh twin, see its
-    docstring) and cannot prune. Measured cost of the 1-row
-    pushed-filter head(): 115 ms warm at sf0.1."""
-    row = (
-        t(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") == PROBE_ID)
-        .select("embedding")
-        .head()
-    )
-    emb_p = [float(x) for x in row[0]]
-    p_bucket = _bucket_py(emb_p)
-    probed = [p_bucket ^ x for x in MULTIPROBE_XORS]
-    plit = F.array(*[F.lit(x) for x in emb_p])
-
-    emb = t(spark, sf_dir, "embeddings").withColumn(
-        "bucket", _bucket_col(F.col("embedding"))
-    )
-    # Probe norm computed once in Python with the same sequential
-    # left-fold as _norm (r12). The ADVICE r9 ulp concern was about
-    # REORDERED accumulation (numpy pairwise summation); a plain Python
-    # loop is strictly sequential IEEE binary64 — the identical op
-    # sequence the engine fold runs, so the staged literal is the same
-    # double _norm(plit) produced (re-verified MATCH at sf0.01 and
-    # sf0.1). Inlined, _norm(plit) re-folded 64 literals per candidate
-    # row and r4 doubled it; sim_raw staged before r4.
-    p_acc = 0.0
-    for _x in emb_p:
-        p_acc += _x * _x
-    p_nrm = math.sqrt(p_acc)
-    sim_raw = _dot(F.col("embedding"), plit) / (
-        _norm(F.col("embedding")) * F.lit(p_nrm)
-    )
-    cand = (
-        emb.filter(F.col("bucket").isin(probed) & (F.col("vec_id") != PROBE_ID))
-        .select("vec_id", "label", "bucket", sim_raw.alias("sim_raw"))
-        .select("vec_id", "label", "bucket", r4(F.col("sim_raw")).alias("sim"))
-    )
+    The probed buckets are plan-time literals (the build-time probe
+    collect in _lsh_candidates, shared with q_sim_ann_lsh), so the
+    `bucket IN (<9 literals>)` filter can prune partitions at rest."""
+    cand = _lsh_candidates(spark, sf_dir, MULTIPROBE_XORS)
     nc = cand.agg(F.count(F.lit(1)).cast("long").alias("n_cand"))
-    keys = [F.desc("sim"), F.asc("vec_id")]
-    top = cand.orderBy(*keys).limit(TOP_K)
-    ranked = (
-        top.withColumn("rnk", F.row_number().over(Window.orderBy(*keys)))
-        .crossJoin(F.broadcast(nc))
-    )
-    return _with_recall(spark, sf_dir, ranked).select(
+    return _with_recall(spark, sf_dir, cand).crossJoin(F.broadcast(nc)).select(
         "vec_id", "label", "bucket", "sim", "rnk", "n_cand", "recall_at_10"
     )

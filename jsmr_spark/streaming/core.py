@@ -721,7 +721,9 @@ def run_cdc_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("#"),
         F.lpad(F.col("event_id").cast("string"), 12, "0"),
     )
-    state = {"version": 0}  # version 0 = empty table
+    # version 0 = empty table; schema = the schema the current version
+    # was written with, so re-reads skip parquet schema inference
+    state = {"version": 0, "schema": None}
     with _replay(spark, sf_dir, n_chunks=6) as rp:
         tbl_root = os.path.join(rp.root, "table")
         os.makedirs(tbl_root)
@@ -742,7 +744,7 @@ def run_cdc_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             if state["version"] > 0:
-                cur = spark.read.parquet(
+                cur = spark.read.schema(state["schema"]).parquet(
                     os.path.join(tbl_root, f"v{state['version']:04d}")
                 )
                 i = incoming.alias("i")
@@ -784,12 +786,13 @@ def run_cdc_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged.write.mode("overwrite").parquet(tmp)
             os.rename(tmp, nxt)  # atomic version publish
             state["version"] += 1
+            state["schema"] = merged.schema
 
         rp.run(rp.source(), sink=apply_batch)
         return collected(
-            spark.read.parquet(
-                os.path.join(tbl_root, f"v{state['version']:04d}")
-            ).select(
+            spark.read.schema(state["schema"])
+            .parquet(os.path.join(tbl_root, f"v{state['version']:04d}"))
+            .select(
                 "user_id",
                 "event_type",
                 (F.col("vc") / 100.0).alias("last_value"),

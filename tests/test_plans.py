@@ -54,6 +54,9 @@ def test_ranked_keys_never_global_sort(spark):
         "q_join_multiway",
         "q_sort_multi",
         "q_sim_ann_lsh",
+        "q_sim_ann_ivf",
+        "q_sim_ann_pq",
+        "q_sim_ann_multiprobe",
     ):
         plan = _plan(spark, name)
         assert "TakeOrderedAndProject" in plan, f"{name}: no TakeOrderedAndProject"

@@ -8,10 +8,13 @@ cannot (they only see one dataset).
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
+
+from jsmr_spark.queries import ann
 
 SETTINGS = dict(
     max_examples=12,
@@ -1806,3 +1809,23 @@ def test_round12_key_invariants(spark):
     }
     for src, r in mh_rows.items():
         assert r.n_near_prior >= delta_rows[src].n_dup_prior, src
+
+
+@pytest.mark.parametrize("qmod", [ann.RECALL_QMOD, ann.RECALL_QMOD * 10])
+def test_recall_report_is_the_tune_curves_serving_row(spark, qmod):
+    """recall_report_frame and ann_tune_frame evaluate one panel: the
+    report's per-query candidates and hits sum to the tune curve's
+    n_probe == N_PROBE totals, over at most that row's queries (the
+    curve also counts the queries with no candidate, as zeros). Covers
+    the fixed-panel stride tools/scale_probe.py passes as well as the
+    registered one."""
+    from tests.conftest import SF_DIR as sf
+
+    report = ann.recall_report_frame(spark, sf, qmod).collect()
+    tune = {r.n_probe: r for r in ann.ann_tune_frame(spark, sf, qmod).collect()}
+    assert sorted(tune) == sorted(ann.TUNE_PROBES)
+    row = tune[ann.N_PROBE]
+    assert row.n_queries > 0
+    assert sum(r.n_cand for r in report) == row.total_cand
+    assert sum(r.n_hits for r in report) == row.total_hits
+    assert len(report) <= row.n_queries

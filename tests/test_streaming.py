@@ -579,3 +579,25 @@ def test_staged_chunks_match_ntile_assignment(spark, replay_root, n_chunks, late
         assert staged[f"chunk_{i:03d}"] == ids, f"chunk {i}"
         if redeliver:
             assert staged[f"chunk_{i:03d}_redeliver"] == ids, f"chunk {i} redelivery"
+
+
+def _jobs(spark) -> list[tuple[int, str]]:
+    """(job id, name) of every job the status store holds."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return [(jobs.apply(i).jobId(), jobs.apply(i).name()) for i in range(jobs.size())]
+
+
+def test_cdc_apply_reads_versions_with_the_written_schema(spark, replay_root):
+    """stream_cdc_apply re-reads every table version it publishes (the
+    per-batch merge input and the final table) with the schema it wrote
+    that version with, so no parquet schema-inference job runs. The
+    events table is loaded first: its own first load infers once."""
+    load_table(spark, SF_DIR, "events")
+    since = max((i for i, _ in _jobs(spark)), default=-1)
+    rows = get_query("stream_cdc_apply").fn(spark, SF_DIR).collect()
+    names = [name for i, name in _jobs(spark) if i > since]
+    assert rows
+    assert names, "no job recorded"
+    assert [n for n in names if n.startswith("parquet at")] == [], names
