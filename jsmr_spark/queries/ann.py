@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from jsmr_spark.compat import r4
-from jsmr_spark.queries.common import t
+from jsmr_spark.queries.common import constants, t
 from jsmr_spark.queries.similarity import PROBE_ID, _dot, _norm, _probe_sims
 from jsmr_spark.registry import query
 
@@ -759,15 +759,6 @@ def _panel_queries(base: DataFrame, qmod: int) -> DataFrame:
     )
 
 
-def _probe_counts(spark: SparkSession, probes: tuple[int, ...]) -> DataFrame:
-    """The probe counts as a broadcast 1-column (p) relation built in the
-    JVM — a createDataFrame of Python rows would run Python worker tasks
-    on every collect."""
-    return F.broadcast(
-        spark.range(1).select(F.explode(F.array(*[F.lit(p) for p in probes])).alias("p"))
-    )
-
-
 def _panel_frame(
     spark: SparkSession, sf_dir: str, qmod: int, probes: tuple[int, ...]
 ) -> DataFrame:
@@ -793,7 +784,7 @@ def _panel_frame(
         .filter(F.col("vec_id") != F.col("qid"))
         .select("qid", "vec_id", "crn", sim_raw.alias("sim_raw"))
         .select("qid", "vec_id", "crn", r4(F.col("sim_raw")).alias("sim"))
-        .crossJoin(_probe_counts(spark, probes))
+        .crossJoin(constants(spark, "p int", [(p,) for p in probes]))
         .filter(F.col("crn") <= F.col("p"))
         .select("p", "qid", "vec_id", "sim")
     )
@@ -1099,7 +1090,7 @@ def ann_tune_frame(spark: SparkSession, sf_dir: str, qmod: int) -> DataFrame:
     base, _, _ = _ivf_lists(spark, sf_dir)
     # The zero-filled spine joins here, outside _panel_frame, so
     # q_sim_recall_report plans no spine scan.
-    spine = _probe_counts(spark, TUNE_PROBES).crossJoin(
+    spine = constants(spark, "p int", [(p,) for p in TUNE_PROBES]).crossJoin(
         _panel_queries(base, qmod).select("qid")
     )
     per = spine.join(

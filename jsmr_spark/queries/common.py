@@ -4,9 +4,10 @@ from __future__ import annotations
 
 import shutil
 import tempfile
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from contextlib import contextmanager
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -28,6 +29,38 @@ def sql(spark: SparkSession, sf_dir: str, stmt: str) -> DataFrame:
     """
     register_views(spark, sf_dir)
     return spark.sql(stmt)
+
+
+def persisted(df: DataFrame) -> DataFrame:
+    """The one place a query persists a relation: intra-query branch
+    sharing (a self-join reads the relation on both sides, or a later
+    join re-reads it), NOT cross-run result caching; the relation lives
+    and dies inside one query execution.
+
+    The level is pinned to MEMORY_AND_DISK_DESER, what `.cache()` uses,
+    and stated here because a persisted relation can be corpus-sized
+    (a shingle-set table at 100 TB), so the spill story must be
+    explicit: partitions that exceed executor storage memory spill to
+    local disk instead of OOMing or silently recomputing the upstream
+    scan per branch."""
+    return df.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+
+
+def constants(spark: SparkSession, ddl: str, rows: Iterable[tuple]) -> DataFrame:
+    """A small relation of literal rows with the DDL's column names and
+    types, built in the JVM and hinted for broadcast.
+
+    A Python list handed to ``createDataFrame`` goes through
+    ``sc.parallelize``, so every collect of a plan that reads it runs
+    Python worker tasks; here the rows are one literal array inlined
+    over a one-row range. The columns are non-nullable (a literal is
+    never null), where ``createDataFrame`` declares them nullable."""
+    fields = StructType.fromDDL(ddl).fields
+    structs = [
+        F.struct(*[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(row, fields)])
+        for row in rows
+    ]
+    return F.broadcast(spark.range(1).select(F.inline(F.array(*structs))))
 
 
 @contextmanager

@@ -17,38 +17,35 @@ Portability choices (SURVEY.md §7.3.3):
     doubles on both engines); round() would reintroduce tie risk at
     exactly-representable ratios like 5/32.
 
+The five MinHash keys (q_dedup_minhash, q_merge_dedup,
+q_dedup_recall_report, q_dedup_band_tune, q_dedup_snapshot_minhash) run
+one Spark pipeline, one helper per step: `_shingle_sets` (persisted
+through `common.persisted`), `_bands` (the band keys, `_band_key` per
+band), `_band_pairs` (the distinct band-collision join: one relation
+against itself for all pairs, or an incoming side against an indexed
+side), `_verified` (exact Jaccard over the candidates), and for the two
+eval keys `_panel_sets` and `_truth_pairs` (the fixed doc panel and its
+exact posting-list truth). `_snapshot_b` builds the snapshot both
+snapshot keys census, and `_hex12` is the Spark twin of `hex12_sql`.
+
 Scale notes (100 TB): every stage is a narrow map or a keyed shuffle
 (shingle explode -> hash-agg by doc; band self-join keyed on the band
 bucket). No driver state, no all-pairs scan: candidate generation is
 O(sum of bucket sizes squared) which LSH keeps near-linear. Band-key
-hot buckets (boilerplate text) are the known skew risk — AQE skew join
-plus an optional bucket-size cap handle it.
+hot buckets (boilerplate text) are the known skew risk; AQE's skew join
+splits them, and nothing caps a bucket's size.
 """
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession, Window
+import functools
+import operator
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from jsmr_spark.queries.common import t
+from jsmr_spark.queries.common import constants, persisted, t
 from jsmr_spark.registry import query
-
-
-def _persist_sets(df: DataFrame) -> DataFrame:
-    """Intra-query branch sharing of a shingle-set relation (the band
-    self-join reads it via mh on both sides AND verification re-reads
-    it) — NOT cross-run result caching; the relation lives and dies
-    inside one query execution.
-
-    StorageLevel pinned explicitly (VERDICT r12 #5): MEMORY_AND_DISK_DESER
-    — what `.cache()` uses, and the level of the engine's other persist
-    sites — stated here because the relation is corpus-sized at 100 TB,
-    so the spill story must be explicit: partitions that exceed executor
-    storage memory spill to local disk instead of OOMing or silently
-    recomputing the shingle scan per branch. It is never broadcast and
-    never collected."""
-    return df.persist(StorageLevel.MEMORY_AND_DISK_DESER)
 
 P = 1_000_000_007
 N_HASHES = 16
@@ -68,6 +65,14 @@ def hex12_sql(col: str) -> str:
         for j in range(1, 13)
     )
     return f"({terms})"
+
+
+def _hex12(col: Column) -> Column:
+    """Spark twin of `hex12_sql`: int(first 12 hex chars of `col`) as a
+    long, through native conv(hex, 16, 10). Bit-identical to the
+    oracle's instr/substring arithmetic, but one intrinsic instead of a
+    12-term string-search chain (measured ~2x on the shingle stage)."""
+    return F.conv(F.substring(col, 1, 12), 16, 10).cast("long")
 
 
 @query(
@@ -100,11 +105,8 @@ def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> one row per doc: (doc_id, hvs = set of 48-bit
     shingle hashes as array<long>).
 
-    Spark computes the 48-bit value with native conv(hex, 16, 10) —
-    bit-identical to the oracle's instr/substring arithmetic (both are
-    "int of the first 12 hex chars of md5") but one intrinsic instead
-    of a 12-term string-search chain (measured ~2x on the shingle
-    stage). `collect_set` both deduplicates AND co-locates each doc's
+    Spark computes the 48-bit value with `_hex12`, the oracle with
+    `hex12_sql`. `collect_set` both deduplicates AND co-locates each doc's
     shingle set in ONE shuffle keyed on doc_id (8-byte longs on the
     wire, never shingle strings) — the previous distinct-then-groupBy
     form paid two full-width shuffles for the same result. A 48-bit
@@ -129,10 +131,7 @@ def _shingle_sets_of(frame: DataFrame) -> DataFrame:
     )
     return (
         docs.select("doc_id", F.explode(F.expr(shingle_expr)).alias("sg"))
-        .select(
-            "doc_id",
-            F.conv(F.substring(F.md5("sg"), 1, 12), 16, 10).cast("long").alias("hv"),
-        )
+        .select("doc_id", _hex12(F.md5("sg")).alias("hv"))
         .groupBy("doc_id")
         .agg(F.collect_set("hv").alias("hvs"))
     )
@@ -164,6 +163,83 @@ def _minhash_set_cols():
         )
         for k, (a, b) in enumerate(SEEDS)
     ]
+
+
+def _band_key(band: int, rows: int) -> Column:
+    """Band `band`'s key with `rows` rows per band: its minhash values
+    joined by commas, the oracle's concat_ws."""
+    return F.concat_ws(",", *[F.col(f"m{band * rows + r}") for r in range(rows)])
+
+
+def _bands(sets: DataFrame) -> DataFrame:
+    """(doc_id, band, bkey) for the shipped N_BANDS x ROWS_PER_BAND
+    banding of every doc in `sets`. The signatures are a narrow map over
+    the sets, and one posexplode emits all band keys per doc in a single
+    pass."""
+    mh = sets.select("doc_id", *_minhash_set_cols())
+    return mh.select(
+        "doc_id",
+        F.posexplode(
+            F.array(*[_band_key(band, ROWS_PER_BAND) for band in range(N_BANDS)])
+        ).alias("band", "bkey"),
+    )
+
+
+def _band_pairs(
+    left: DataFrame, right: DataFrame, ordered: bool, by: tuple[str, ...] = ()
+) -> DataFrame:
+    """Distinct (*by, doc_a, doc_b) candidate pairs: a `left` band row
+    and a `right` band row with the same band, band key and `by`
+    columns. `ordered` keeps doc_a < doc_b, for the all-pairs keys that
+    pass one relation as both sides; the incremental keys pass a new and
+    an old side instead and get (new, old). Only (doc_id, band-key) rows
+    shuffle."""
+    keys = [*by, "band", "bkey"]
+    r = right.select(
+        F.col("doc_id").alias("doc_b"), *[F.col(k).alias(f"{k}_b") for k in keys]
+    )
+    on = [F.col(k) == F.col(f"{k}_b") for k in keys]
+    if ordered:
+        on.append(F.col("doc_id") < F.col("doc_b"))
+    return (
+        left.join(r, functools.reduce(operator.and_, on))
+        .select(*by, F.col("doc_id").alias("doc_a"), "doc_b")
+        .distinct()
+    )
+
+
+def _jaccard() -> Column:
+    """Exact Jaccard from (n_common, n_a, n_b): a bare bigint/bigint
+    division, the oracle's."""
+    return F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
+
+
+def _verified(cand: DataFrame, sets: DataFrame) -> DataFrame:
+    """The candidate pairs (doc_a, doc_b) whose exact shingle-set Jaccard
+    is >= JACCARD_THRESHOLD, as (doc_a, doc_b, n_common, n_a, n_b,
+    jaccard). The pairs join back to the persisted sets and intersect
+    the two hvs arrays per pair (`array_intersect`), with no
+    exploded-row shuffle: identical counts to the oracle's exploded
+    join-group, as both are exact distinct-set intersection (hv
+    collisions, ~2^-48, hit both engines identically). The candidate
+    side is tiny relative to the corpus, so AQE turns the two joins into
+    broadcasts at runtime."""
+    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("hvs").alias("hvs_a"))
+    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("hvs").alias("hvs_b"))
+    return (
+        cand.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size(F.array_intersect("hvs_a", "hvs_b")).cast("long").alias("n_common"),
+            F.size("hvs_a").cast("long").alias("n_a"),
+            F.size("hvs_b").cast("long").alias("n_b"),
+        )
+        .withColumn("jaccard", _jaccard())
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+        .select("doc_a", "doc_b", "n_common", "n_a", "n_b", "jaccard")
+    )
 
 
 _ORACLE_MINHASH_COLS = ",\n           ".join(
@@ -230,70 +306,14 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shuffle inventory (the whole point of this shape): ONE wide
     exchange builds the per-doc shingle sets; signatures and band keys
     are narrow maps over it; the band self-join + candidate distinct
-    shuffle only (doc_id, band-key) rows; verification joins the
-    candidate pairs back to the cached sets and intersects ARRAYS
-    per-pair (`array_intersect`) — no exploded-row shuffle at all.
-    Candidate side is tiny relative to the corpus, so AQE turns those
-    two joins into broadcasts at runtime."""
-    # Cached because bands reference it via mh on both sides of the
-    # self-join AND the verification joins re-read it: without the
-    # cache the shingle scan re-executes once per plan branch.
-    sets = _persist_sets(_shingle_sets(spark, sf_dir))
-    mh = sets.select("doc_id", *_minhash_set_cols())
-
-    # One posexplode emits all 4 band keys per doc in a single pass over
-    # mh (the 4-way union form evaluated mh once per branch).
-    bands = mh.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ",",
-                        *[F.col(f"m{band * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)],
-                    )
-                    for band in range(N_BANDS)
-                ]
-            )
-        ).alias("band", "bkey"),
-    )
-
-    b2 = bands.select(
-        F.col("doc_id").alias("doc_b"), F.col("band").alias("band_b"), F.col("bkey").alias("bkey_b")
-    )
-    cand = (
-        bands.join(
-            b2,
-            (F.col("band") == F.col("band_b"))
-            & (F.col("bkey") == F.col("bkey_b"))
-            & (F.col("doc_id") < F.col("doc_b")),
-        )
-        .select(F.col("doc_id").alias("doc_a"), "doc_b")
-        .distinct()
-    )
-
-    # Exact verification per candidate pair: set intersection over the
-    # 48-bit hashes via array_intersect on the two cached hvs arrays —
-    # identical counts to the oracle's exploded join-group (both are
-    # exact distinct-set intersection; hv collisions ~2^-48 hit both
-    # engines identically).
-    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("hvs").alias("hvs_a"))
-    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("hvs").alias("hvs_b"))
-    jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("hvs_a", "hvs_b")).cast("long").alias("n_common"),
-            F.size("hvs_a").cast("long").alias("n_a"),
-            F.size("hvs_b").cast("long").alias("n_b"),
-        )
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", "n_common", "n_a", "n_b", "jaccard")
-    )
+    shuffle only (doc_id, band-key) rows; verification intersects
+    ARRAYS per pair — no exploded-row shuffle at all."""
+    # Persisted because the bands read it on both sides of the self-join
+    # AND verification re-reads it: without it the shingle scan
+    # re-executes once per plan branch.
+    sets = persisted(_shingle_sets(spark, sf_dir))
+    bands = _bands(sets)
+    return _verified(_band_pairs(bands, bands, ordered=True), sets)
 
 
 @query(
@@ -435,55 +455,17 @@ def q_merge_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch only, and the candidate join is batch-size x collision
     rate, independent of corpus row count. Verification joins fetch
     only the colliding docs' shingle sets."""
-    sets = _persist_sets(_shingle_sets(spark, sf_dir))
-    mh = sets.select("doc_id", *_minhash_set_cols())
-    bands = mh.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ",",
-                        *[F.col(f"m{band * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)],
-                    )
-                    for band in range(N_BANDS)
-                ]
-            )
-        ).alias("band", "bkey"),
-    )
+    sets = persisted(_shingle_sets(spark, sf_dir))
+    bands = _bands(sets)
     is_new = (F.col("doc_id") % NEW_BATCH_MOD) >= NEW_BATCH_RESIDUE
-    new_b = bands.filter(is_new).select(
-        F.col("doc_id").alias("new_id"), "band", "bkey"
-    )
-    old_b = bands.filter(~is_new).select(
-        F.col("doc_id").alias("old_id"),
-        F.col("band").alias("band_o"),
-        F.col("bkey").alias("bkey_o"),
-    )
-    cand = (
-        new_b.join(
-            old_b,
-            (F.col("band") == F.col("band_o")) & (F.col("bkey") == F.col("bkey_o")),
-        )
-        .select("new_id", "old_id")
-        .distinct()
-    )
-    sn = sets.select(F.col("doc_id").alias("new_id"), F.col("hvs").alias("hvs_n"))
-    so = sets.select(F.col("doc_id").alias("old_id"), F.col("hvs").alias("hvs_o"))
-    jac = F.col("n_common") / (F.col("n_new") + F.col("n_old") - F.col("n_common"))
-    return (
-        cand.join(sn, "new_id")
-        .join(so, "old_id")
-        .select(
-            "new_id",
-            "old_id",
-            F.size(F.array_intersect("hvs_n", "hvs_o")).cast("long").alias("n_common"),
-            F.size("hvs_n").cast("long").alias("n_new"),
-            F.size("hvs_o").cast("long").alias("n_old"),
-        )
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("new_id", "old_id", "n_common", "n_new", "n_old", "jaccard")
+    cand = _band_pairs(bands.filter(is_new), bands.filter(~is_new), ordered=False)
+    return _verified(cand, sets).select(
+        F.col("doc_a").alias("new_id"),
+        F.col("doc_b").alias("old_id"),
+        "n_common",
+        F.col("n_a").alias("n_new"),
+        F.col("n_b").alias("n_old"),
+        "jaccard",
     )
 
 
@@ -541,6 +523,45 @@ def q_dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pins the quadratic part regardless of corpus scale (the
 # q_sim_recall_report fixed-eval-set recipe).
 RECALL_SAMPLE_N = 1024
+
+
+def _panel_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The persisted shingle sets of the RECALL_SAMPLE_N-doc panel. The
+    panel is chosen from the corpus sets, so one shingle exchange feeds
+    both; orderBy.limit executes as TakeOrderedAndProject (per-partition
+    heaps, no global sort of the corpus)."""
+    sets_all = _shingle_sets(spark, sf_dir)
+    hk = _hex12(F.md5(F.col("doc_id").cast("string"))).alias("hk")
+    panel = (
+        sets_all.select("doc_id", hk)
+        .orderBy("hk", "doc_id")
+        .limit(RECALL_SAMPLE_N)
+        .select("doc_id")
+    )
+    return persisted(sets_all.join(F.broadcast(panel), "doc_id"))
+
+
+def _truth_pairs(sets: DataFrame) -> DataFrame:
+    """Every (doc_a, doc_b) pair in `sets`, doc_a < doc_b, with exact
+    shingle-set Jaccard >= JACCARD_THRESHOLD, found by the shared-shingle
+    posting join: a pair with no common shingle cannot pass the
+    threshold, so the join is exhaustive. Quadratic in the set count, so
+    only for a panel."""
+    shd = sets.select("doc_id", F.explode("hvs").alias("hv"))
+    sizes = sets.select("doc_id", F.size("hvs").cast("long").alias("n"))
+    ti = (
+        shd.join(shd.select(F.col("doc_id").alias("doc_b"), "hv"), ["hv"])
+        .where(F.col("doc_id") < F.col("doc_b"))
+        .groupBy(F.col("doc_id").alias("doc_a"), "doc_b")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
+    )
+    return (
+        ti.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a")), "doc_a")
+        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b")), "doc_b")
+        .where(_jaccard() >= JACCARD_THRESHOLD)
+        .select("doc_a", "doc_b")
+    )
+
 
 _RECALL_DEDUP_ORACLE = f"""
     WITH docs0 AS (
@@ -627,75 +648,10 @@ def q_dedup_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic is pinned; only the panel-selection TakeOrdered scans
     the corpus). One shingle exchange feeds both sides past the cap.
     Output is one row of exact counts and floor-divided ppm."""
-    sets_all = _shingle_sets(spark, sf_dir)
-    hk = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 12), 16, 10)
-        .cast("long")
-        .alias("hk")
-    )
-    # orderBy.limit executes as TakeOrderedAndProject — per-partition
-    # heaps, no global sort of the corpus.
-    panel = (
-        sets_all.select("doc_id", hk)
-        .orderBy("hk", "doc_id")
-        .limit(RECALL_SAMPLE_N)
-        .select("doc_id")
-    )
-    sets = _persist_sets(sets_all.join(F.broadcast(panel), "doc_id"))
-    mh = sets.select("doc_id", *_minhash_set_cols())
-    bands = mh.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"m{band * ROWS_PER_BAND + r}")
-                            for r in range(ROWS_PER_BAND)
-                        ],
-                    )
-                    for band in range(N_BANDS)
-                ]
-            )
-        ).alias("band", "bkey"),
-    )
-    b2 = bands.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("band").alias("band_b"),
-        F.col("bkey").alias("bkey_b"),
-    )
-    cand = (
-        bands.join(
-            b2,
-            (F.col("band") == F.col("band_b"))
-            & (F.col("bkey") == F.col("bkey_b"))
-            & (F.col("doc_id") < F.col("doc_b")),
-        )
-        .select(F.col("doc_id").alias("doc_a"), "doc_b")
-        .distinct()
-    )
-    shd = sets.select("doc_id", F.explode("hvs").alias("hv"))
-    sizes = sets.select("doc_id", F.size("hvs").cast("long").alias("n"))
-    ti = (
-        shd.join(
-            shd.select(F.col("doc_id").alias("doc_b"), "hv"),
-            ["hv"],
-        )
-        .where(F.col("doc_id") < F.col("doc_b"))
-        .groupBy(F.col("doc_id").alias("doc_a"), "doc_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
-    )
-    truth = (
-        ti.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b")), "doc_b")
-        .where(
-            F.col("n_common")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-            >= JACCARD_THRESHOLD
-        )
-        .select("doc_a", "doc_b")
-    )
+    sets = _panel_sets(spark, sf_dir)
+    bands = _bands(sets)
+    cand = _band_pairs(bands, bands, ordered=True)
+    truth = _truth_pairs(sets)
     hits = cand.join(truth, ["doc_a", "doc_b"])
     nt = truth.agg(F.count(F.lit(1)).cast("long").alias("n_truth_pairs"))
     nc = cand.agg(F.count(F.lit(1)).cast("long").alias("n_candidate_pairs"))
@@ -927,19 +883,7 @@ def q_dedup_band_tune(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth reuses the recall report's expression verbatim; zero-
     coalesced spine keeps configs with no collisions (precision NULL
     by nullif, identically on both engines)."""
-    sets_all = _shingle_sets(spark, sf_dir)
-    hk = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 12), 16, 10)
-        .cast("long")
-        .alias("hk")
-    )
-    panel = (
-        sets_all.select("doc_id", hk)
-        .orderBy("hk", "doc_id")
-        .limit(RECALL_SAMPLE_N)
-        .select("doc_id")
-    )
-    sets = _persist_sets(sets_all.join(F.broadcast(panel), "doc_id"))
+    sets = _panel_sets(spark, sf_dir)
     mh = sets.select("doc_id", *_minhash_set_cols())
 
     # r12 (guide §2.4): all three configs' band keys come from the SAME
@@ -951,9 +895,7 @@ def q_dedup_band_tune(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.struct(
             F.lit(nb).alias("nb"),
             F.lit(band).alias("band"),
-            F.concat_ws(
-                ",", *[F.col(f"m{band * rpb + r}") for r in range(rpb)]
-            ).alias("bkey"),
+            _band_key(band, rpb).alias("bkey"),
         )
         for nb, rpb in BAND_TUNE_CONFIGS
         for band in range(nb)
@@ -961,47 +903,8 @@ def q_dedup_band_tune(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = mh.select(
         "doc_id", F.explode(F.array(*entries)).alias("e")
     ).select("doc_id", "e.nb", "e.band", "e.bkey")
-    b2 = bands.select(
-        F.col("nb").alias("nb_b"),
-        F.col("doc_id").alias("doc_b"),
-        F.col("band").alias("band_b"),
-        F.col("bkey").alias("bkey_b"),
-    )
-    cand = (
-        bands.join(
-            b2,
-            (F.col("nb") == F.col("nb_b"))
-            & (F.col("band") == F.col("band_b"))
-            & (F.col("bkey") == F.col("bkey_b"))
-            & (F.col("doc_id") < F.col("doc_b")),
-        )
-        .select("nb", F.col("doc_id").alias("doc_a"), "doc_b")
-        .distinct()
-    )
-    shd = sets.select("doc_id", F.explode("hvs").alias("hv"))
-    sizes = sets.select("doc_id", F.size("hvs").cast("long").alias("n"))
-    ti = (
-        shd.join(shd.select(F.col("doc_id").alias("doc_b"), "hv"), ["hv"])
-        .where(F.col("doc_id") < F.col("doc_b"))
-        .groupBy(F.col("doc_id").alias("doc_a"), "doc_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
-    )
-    truth = (
-        ti.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b")),
-            "doc_b",
-        )
-        .where(
-            F.col("n_common")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-            >= JACCARD_THRESHOLD
-        )
-        .select("doc_a", "doc_b")
-    )
+    cand = _band_pairs(bands, bands, ordered=True, by=("nb",))
+    truth = _truth_pairs(sets)
     nt = truth.agg(F.count(F.lit(1)).cast("long").alias("n_truth"))
     nc = cand.groupBy("nb").agg(F.count(F.lit(1)).cast("long").alias("n_cand"))
     nh = (
@@ -1009,9 +912,7 @@ def q_dedup_band_tune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("nb")
         .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
     )
-    spine = spark.createDataFrame(
-        list(BAND_TUNE_CONFIGS), "n_bands int, rows_per_band int"
-    )
+    spine = constants(spark, "n_bands int, rows_per_band int", BAND_TUNE_CONFIGS)
     return (
         spine.crossJoin(F.broadcast(nt))
         .join(F.broadcast(nc), F.col("n_bands") == F.col("nb"), "left")
@@ -1040,7 +941,32 @@ def q_dedup_band_tune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SNAP_DELTA_SHIFT = 1_000_000_000  # new-id offset, q_snapshot_diff's convention
 _SD_BUCKET_DUCK = f"({hex12_sql('md5(CAST(doc_id AS VARCHAR))')} % 100)"
-_SD_BUCKET_SPARK = f"({hex12_sql('md5(cast(doc_id as string))')} % 100)"
+
+
+def _snapshot_b(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Snapshot B as (carried, added) (doc_id, source, text) frames, a
+    pure function of doc_id's md5 bucket (q_snapshot_diff's convention):
+    bucket < 5 deleted, 5-14 edited (text || ' v2'), and the bucket >= 90
+    slice re-ingested under doc_id + SNAP_DELTA_SHIFT, verbatim for
+    bucket >= 95 and content-drifted (text || ' u2') for 90-94."""
+    bk = _hex12(F.md5(F.col("doc_id").cast("string"))) % 100
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text", "source", bk.alias("bk"))
+    carried = docs.filter(F.col("bk") >= 5).select(
+        "doc_id",
+        "source",
+        F.when(
+            F.col("bk").between(5, 14), F.concat(F.col("text"), F.lit(" v2"))
+        ).otherwise(F.col("text")).alias("text"),
+    )
+    added = docs.filter(F.col("bk") >= 90).select(
+        (F.col("doc_id") + SNAP_DELTA_SHIFT).alias("doc_id"),
+        "source",
+        F.when(
+            F.col("bk") < 95, F.concat(F.col("text"), F.lit(" u2"))
+        ).otherwise(F.col("text")).alias("text"),
+    )
+    return carried, added
+
 
 _SNAP_DELTA_ORACLE = f"""
     WITH b AS (
@@ -1113,22 +1039,7 @@ def q_dedup_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     free to pick the strategy at fixture scale. Everything else is
     narrow maps + map-side-combined per-source counts. Ingest cost is
     O(batch), independent of corpus row count."""
-    bk = F.expr(_SD_BUCKET_SPARK)
-    docs = t(spark, sf_dir, "documents").select("doc_id", "text", "source", bk.alias("bk"))
-    carried = docs.filter(F.col("bk") >= 5).select(
-        "doc_id",
-        "source",
-        F.when(
-            F.col("bk").between(5, 14), F.concat(F.col("text"), F.lit(" v2"))
-        ).otherwise(F.col("text")).alias("text"),
-    )
-    added = docs.filter(F.col("bk") >= 90).select(
-        (F.col("doc_id") + SNAP_DELTA_SHIFT).alias("doc_id"),
-        "source",
-        F.when(
-            F.col("bk") < 95, F.concat(F.col("text"), F.lit(" u2"))
-        ).otherwise(F.col("text")).alias("text"),
-    )
+    carried, added = _snapshot_b(spark, sf_dir)
     # The live snapshot's content-hash index: corpus-sized -> never
     # broadcast; keyed join, AQE decides the physical strategy.
     oldh = carried.select(F.md5("text").alias("h")).distinct()
@@ -1263,80 +1174,15 @@ def q_dedup_snapshot_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets. Ingest cost is O(batch), independent of corpus row count —
     the q_dedup_snapshot_delta argument with band keys in place of
     content hashes."""
-    bk = F.expr(_SD_BUCKET_SPARK)
-    b = t(spark, sf_dir, "documents").select(
-        "doc_id", "text", "source", bk.alias("bk")
-    )
-    carried = b.filter(F.col("bk") >= 5).select(
-        "doc_id",
-        "source",
-        F.when(
-            F.col("bk").between(5, 14), F.concat(F.col("text"), F.lit(" v2"))
-        ).otherwise(F.col("text")).alias("text"),
-    )
-    added = b.filter(F.col("bk") >= 90).select(
-        (F.col("doc_id") + SNAP_DELTA_SHIFT).alias("doc_id"),
-        "source",
-        F.when(
-            F.col("bk") < 95, F.concat(F.col("text"), F.lit(" u2"))
-        ).otherwise(F.col("text")).alias("text"),
-    )
-    # One shingle-set build over the whole snapshot (cached: the band
-    # join reads it via mh on both sides and verification re-reads it).
-    sets = _persist_sets(_shingle_sets_of(carried.unionByName(added)))
-    mh = sets.select("doc_id", *_minhash_set_cols())
-    bands = mh.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"m{band * ROWS_PER_BAND + r}")
-                            for r in range(ROWS_PER_BAND)
-                        ],
-                    )
-                    for band in range(N_BANDS)
-                ]
-            )
-        ).alias("band", "bkey"),
-    )
-    new_b = bands.filter(F.col("doc_id") >= SNAP_DELTA_SHIFT).select(
-        F.col("doc_id").alias("new_id"), "band", "bkey"
-    )
-    # The live snapshot's LSH band index: corpus-sized -> never
-    # broadcast; keyed join, AQE decides the physical strategy.
-    old_b = bands.filter(F.col("doc_id") < SNAP_DELTA_SHIFT).select(
-        F.col("doc_id").alias("old_id"),
-        F.col("band").alias("band_o"),
-        F.col("bkey").alias("bkey_o"),
-    )
-    cand = (
-        new_b.join(
-            old_b,
-            (F.col("band") == F.col("band_o"))
-            & (F.col("bkey") == F.col("bkey_o")),
-        )
-        .select("new_id", "old_id")
-        .distinct()
-    )
-    sn = sets.select(F.col("doc_id").alias("new_id"), F.col("hvs").alias("hvs_n"))
-    so = sets.select(F.col("doc_id").alias("old_id"), F.col("hvs").alias("hvs_o"))
-    jac = F.col("n_common") / (F.col("n_new") + F.col("n_old") - F.col("n_common"))
-    ver = (
-        cand.join(sn, "new_id")
-        .join(so, "old_id")
-        .select(
-            "new_id",
-            F.size(F.array_intersect("hvs_n", "hvs_o")).cast("long").alias("n_common"),
-            F.size("hvs_n").cast("long").alias("n_new"),
-            F.size("hvs_o").cast("long").alias("n_old"),
-        )
-        .filter(jac >= JACCARD_THRESHOLD)
-        .select("new_id")
-        .distinct()
-    )
+    carried, added = _snapshot_b(spark, sf_dir)
+    # One shingle-set build over the whole snapshot.
+    sets = persisted(_shingle_sets_of(carried.unionByName(added)))
+    bands = _bands(sets)
+    # The live snapshot's LSH band index is the old side: corpus-sized
+    # -> never broadcast; keyed join, AQE decides the physical strategy.
+    is_added = F.col("doc_id") >= SNAP_DELTA_SHIFT
+    cand = _band_pairs(bands.filter(is_added), bands.filter(~is_added), ordered=False)
+    ver = _verified(cand, sets).select(F.col("doc_a").alias("new_id")).distinct()
     ad = added.filter(F.size(F.split(F.col("text"), " ")) >= 3).select(
         "doc_id", "source"
     )

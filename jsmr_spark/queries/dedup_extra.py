@@ -20,13 +20,12 @@ similarity.py.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from jsmr_spark.compat import r4
-from jsmr_spark.queries.common import t
-from jsmr_spark.queries.dedup import hex12_sql
+from jsmr_spark.queries.common import persisted, t
+from jsmr_spark.queries.dedup import _hex12, hex12_sql
 from jsmr_spark.registry import query
 
 SIMHASH_BITS = 32
@@ -119,9 +118,9 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Cached: the block self-join references the signature table on BOTH
     # sides — uncached, the 32-bit-vote aggregation re-executes once per
     # plan branch (the same 8x diamond minhash had). n_docs rows only.
-    total = sig.select(
+    total = persisted(sig.select(
         "doc_id", sum([F.col(f"b{j}") for j in range(SIMHASH_BITS)], F.lit(0).cast("long")).alias("simhash")
-    ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    ))
     # Pigeonhole blocking: equi-join candidates on one-of-4 byte blocks
     # (see oracle comment) — no nested-loop, shuffle keyed on (blk, bval).
     # One posexplode emits all 4 block keys per doc in a single pass.
@@ -217,7 +216,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sizes exchange for the same result. Cached: feeds both self-join
     # sides plus sizes. Dedup and join run on the 48-bit bigram hash
     # (see _NGRAM_CTE comment).
-    gr_sets = (
+    gr_sets = persisted(
         docs.select(
             "doc_id",
             "lang",
@@ -229,17 +228,9 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("sg"),
         )
-        # Native conv() twin of the oracle's instr/substring parse —
-        # same 48-bit value, ~2x cheaper (see dedup._shingles).
-        .select(
-            "doc_id",
-            "lang",
-            "source",
-            F.conv(F.substring(F.md5("sg"), 1, 12), 16, 10).cast("long").alias("hv"),
-        )
+        .select("doc_id", "lang", "source", _hex12(F.md5("sg")).alias("hv"))
         .groupBy("doc_id", "lang", "source")
         .agg(F.collect_set("hv").alias("hvs"))
-        .persist(StorageLevel.MEMORY_AND_DISK_DESER)
     )
     gr = gr_sets.select("doc_id", "lang", "source", F.explode("hvs").alias("hv"))
     sizes = gr_sets.select("doc_id", F.size("hvs").cast("long").alias("n"))

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from jsmr_spark.compat import r4
-from jsmr_spark.queries.common import t
+from jsmr_spark.queries.common import constants, t
 from jsmr_spark.registry import query
 
 KM_K = 4
@@ -890,9 +890,9 @@ def q_ml_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" * sign(CAST(x AS DOUBLE) * {LC_Q}.0) AS BIGINT)"
         ).alias("xq"),
     )
-    fr = spark.createDataFrame([(f,) for f in LC_FRACS], "f int")
+    fr = constants(spark, "f int", [(f,) for f in LC_FRACS])
     s = (
-        q.crossJoin(F.broadcast(fr))
+        q.crossJoin(fr)
         .where(F.col("bucket") < F.col("f"))
         .groupBy("f", "label", "dim")
         .agg(

@@ -22,11 +22,10 @@
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from jsmr_spark.queries.common import t
+from jsmr_spark.queries.common import persisted, t
 from jsmr_spark.registry import query
 
 SAMPLE_K = 50
@@ -662,9 +661,11 @@ def q_sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode re-runs three times (the q_dedup_minhash shingle-set
     # precedent; at 100 TB this is the featurized-counts table the
     # DSIR paper materializes between its two passes)
-    db = bg.groupBy("doc_id", "lang", "source", "bucket").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    db = persisted(
+        bg.groupBy("doc_id", "lang", "source", "bucket").agg(
+            F.count(F.lit(1)).cast("long").alias("n")
+        )
+    )
     raw_b = db.groupBy("bucket").agg(F.sum("n").cast("long").alias("cr"))
     tgt_b = (
         db.where(F.col("lang") == DSIR_TARGET)

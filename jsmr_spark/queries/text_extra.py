@@ -25,8 +25,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from jsmr_spark.compat import r4
-from jsmr_spark.queries.common import t
-from jsmr_spark.queries.dedup import hex12_sql
+from jsmr_spark.queries.common import constants, t
+from jsmr_spark.queries.dedup import _hex12, hex12_sql
 from jsmr_spark.registry import query
 
 N_PROFILE = 20  # top tokens per language profile
@@ -1139,12 +1139,12 @@ def q_text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").cast("long").alias("total"),
         F.count(F.lit(1)).cast("long").alias("vocab"),
     )
-    ks = spark.createDataFrame([(k,) for k in VOCAB_KS], "k int")
+    ks = constants(spark, "k int", [(k,) for k in VOCAB_KS])
     covered = F.sum(
         F.when(F.col("rnk") <= F.col("k"), F.col("c")).otherwise(F.lit(0))
     ).cast("long")
     return (
-        rk.crossJoin(F.broadcast(ks))
+        rk.crossJoin(ks)
         .crossJoin(F.broadcast(tot))
         .groupBy("k", "total", "vocab")
         .agg(covered.alias("covered_tokens"))
@@ -2079,8 +2079,7 @@ def q_text_decontam_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "element_at(tk, i + 4)))"
     )
     g = toks.select("doc_id", F.explode(F.expr(gram_expr)).alias("gram")).select(
-        "doc_id",
-        F.conv(F.substring(F.md5("gram"), 1, 12), 16, 10).cast("long").alias("hv"),
+        "doc_id", _hex12(F.md5("gram")).alias("hv")
     )
     is_ev = (F.col("doc_id") % BENCH_MOD) == BENCH_RESIDUE
     ev = g.filter(is_ev).distinct()

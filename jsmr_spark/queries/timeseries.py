@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from jsmr_spark.compat import cents, r4, sql_cents
-from jsmr_spark.queries.common import t
+from jsmr_spark.queries.common import constants, t
 from jsmr_spark.queries.dedup import hex12_sql
 from jsmr_spark.registry import query
 
@@ -2715,13 +2715,14 @@ def q_ml_roc_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("event_type") == "purchase", 1)).cast("long").alias("p"),
         F.count(F.when(F.col("event_type") == "view", 1)).cast("long").alias("n"),
     )
-    thr = spark.createDataFrame(
-        [(x,) for x in range(ROC_THR_STEP, ROC_THR_MAX + 1, ROC_THR_STEP)],
+    thr = constants(
+        spark,
         "thr_cents long",
+        [(x,) for x in range(ROC_THR_STEP, ROC_THR_MAX + 1, ROC_THR_STEP)],
     )
     at_or_above = F.col("c") >= F.col("thr_cents")
     cm = (
-        pts.crossJoin(F.broadcast(thr))
+        pts.crossJoin(thr)
         .groupBy("thr_cents")
         .agg(
             F.sum(F.when(at_or_above, F.col("p")).otherwise(0)).cast("long").alias("tp"),

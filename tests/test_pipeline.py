@@ -8,14 +8,22 @@ partition laws of the hash split and stratified sample.
 
 from __future__ import annotations
 
+import random
+
+import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from jsmr_spark.queries.pipeline import (
+    clusters_lsh_frame,
     connected_components,
     q_sample_stratified,
     q_split_train,
 )
+from jsmr_spark.registry import get_query
+from tests.conftest import canon_rows
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -131,3 +139,39 @@ def test_jobspec_compiles_to_same_plan_results(spark):
         )
     }
     assert got == exp
+
+
+def test_clusters_lsh_finds_planted_near_copies(spark, tmp_path):
+    """The fixture corpora hold no pair that shares an LSH bucket and
+    passes EMB_COS_MIN, so there the key and its oracle agree on zero
+    rows. Here each of five random vectors gets a scaled copy (the same
+    direction, so the same bucket and cosine 1) and a jittered copy:
+    the key must still match its oracle, now on real clusters."""
+    rng = random.Random(15)
+    vecs = [[rng.uniform(-1, 1) for _ in range(64)] for _ in range(40)]
+    for base in vecs[:5]:
+        vecs.append([2 * x for x in base])
+        vecs.append([x + rng.uniform(-0.01, 0.01) for x in base])
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(len(vecs)), pa.int64()),
+                "embedding": pa.array(vecs, pa.list_(pa.float32())),
+                "label": pa.array([i % 3 for i in range(len(vecs))], pa.int32()),
+            }
+        ),
+        tmp_path / "embeddings.parquet",
+    )
+    df = clusters_lsh_frame(spark, str(tmp_path))
+    rows = df.collect()
+    got = canon_rows(df.columns, [tuple(r) for r in rows])
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{tmp_path}/embeddings.parquet')"
+    )
+    cur = con.execute(get_query("q_dedup_clusters_lsh").oracle)
+    want = canon_rows([d[0] for d in cur.description], cur.fetchall())
+    con.close()
+    assert got == want
+    sizes = {r.doc_id: r.cluster_size for r in rows}
+    assert all(sizes.get(i, 0) >= 2 for i in range(5)), sizes

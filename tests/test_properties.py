@@ -8,6 +8,9 @@ cannot (they only see one dataset).
 
 from __future__ import annotations
 
+import os
+
+import duckdb
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -1829,3 +1832,73 @@ def test_recall_report_is_the_tune_curves_serving_row(spark, qmod):
     assert sum(r.n_cand for r in report) == row.total_cand
     assert sum(r.n_hits for r in report) == row.total_hits
     assert len(report) <= row.n_queries
+
+
+# --- the shared MinHash-LSH pipeline (dedup.py) ------------------------------
+
+# "spark" runs the keys at SF_DIR; a scale name runs their DuckDB oracles
+# on that fixture directory.
+DEDUP_ENGINES = ["spark", "sf0.001", "sf0.01"]
+
+
+def _dedup_rows(request, engine: str, name: str, cols: str, where: str = "TRUE"):
+    from jsmr_spark.registry import get_query
+
+    from tests.conftest import SF_DIR
+
+    if engine == "spark":
+        df = get_query(name).fn(request.getfixturevalue("spark"), SF_DIR)
+        return [tuple(r) for r in df.where(where).selectExpr(*cols.split(", ")).collect()]
+    con = duckdb.connect()
+    docs = os.path.join(os.path.dirname(SF_DIR), engine, "documents.parquet")
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{docs}')")
+    try:
+        return con.execute(
+            f"SELECT {cols} FROM ({get_query(name).oracle}) q WHERE {where}"
+        ).fetchall()
+    finally:
+        con.close()
+
+
+@pytest.mark.parametrize("engine", DEDUP_ENGINES)
+def test_merge_dedup_is_minhash_across_the_batch(request, engine):
+    """The incremental key finds exactly the all-pairs key's verified
+    pairs with one side in the incoming batch and one in the indexed
+    corpus, turned to (new, old): both band the same signatures, so a
+    pair collides in one iff it collides in the other."""
+    from jsmr_spark.queries.dedup import NEW_BATCH_MOD, NEW_BATCH_RESIDUE
+
+    pairs = _dedup_rows(
+        request, engine, "q_dedup_minhash", "doc_a, doc_b, n_common, n_a, n_b, jaccard"
+    )
+    merged = _dedup_rows(
+        request, engine, "q_merge_dedup", "new_id, old_id, n_common, n_new, n_old, jaccard"
+    )
+    expected = []
+    for a, b, n_common, n_a, n_b, jac in pairs:
+        a_new, b_new = (d % NEW_BATCH_MOD >= NEW_BATCH_RESIDUE for d in (a, b))
+        if a_new != b_new:
+            expected.append(
+                (a, b, n_common, n_a, n_b, jac) if a_new else (b, a, n_common, n_b, n_a, jac)
+            )
+    assert merged and len(merged) < len(pairs)
+    assert sorted(merged) == sorted(expected)
+
+
+@pytest.mark.parametrize("engine", DEDUP_ENGINES)
+def test_recall_report_is_the_band_tune_shipped_row(request, engine):
+    """The recall report and the banding curve share one panel, one
+    truth set and one band join: the report's counts are the curve's
+    (4, 4) row."""
+    report = _dedup_rows(
+        request, engine, "q_dedup_recall_report", "n_truth_pairs, n_candidate_pairs, n_hits"
+    )
+    row = _dedup_rows(
+        request,
+        engine,
+        "q_dedup_band_tune",
+        "n_truth, n_cand, n_hits",
+        "n_bands = 4 AND rows_per_band = 4",
+    )
+    assert report == row
+    assert report[0][2] > 0

@@ -407,6 +407,24 @@ def test_only_common_asks_tempfile_for_a_location():
     assert list(found) == ["common.py"], found
 
 
+def test_only_common_persists():
+    """Query modules persist a relation through common.persisted alone,
+    so the storage level is chosen, and can be released, in one place."""
+    found = {}
+    for path in sorted(Path(queries.__file__).parent.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                (isinstance(node, ast.Attribute) and node.attr in ("persist", "StorageLevel"))
+                or (isinstance(node, ast.Name) and node.id == "StorageLevel")
+                or (
+                    isinstance(node, ast.ImportFrom)
+                    and "StorageLevel" in {a.name for a in node.names}
+                )
+            ):
+                found.setdefault(path.name, []).append(node.lineno)
+    assert list(found) == ["common.py"], found
+
+
 # --- collected rows (queries.common.collected) --------------------------------
 
 
@@ -421,3 +439,25 @@ def test_collected_is_a_local_relation_with_the_ddl_schema(spark):
     assert plan.getClass().getSimpleName() == "LocalRelation"
     assert out.schema == StructType.fromDDL(ddl)
     assert sorted(out.collect()) == [(0, "s"), (1, "s"), (2, "s")]
+
+
+# --- constant relations (queries.common.constants) ----------------------------
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_dedup_band_tune",
+        "q_text_vocab_coverage",
+        "q_ml_learning_curve",
+        "q_ml_roc_curve",
+        "q_sim_ann_tune",
+    ],
+)
+def test_constant_spine_runs_no_python_rdd(spark, name):
+    """A spine of constants is a JVM relation: a Python list handed to
+    createDataFrame would plan an ExistingRDD scan that runs Python
+    worker tasks on every collect."""
+    plan = get_query(name).fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    spark.catalog.clearCache()
+    assert "ExistingRDD" not in plan, plan
